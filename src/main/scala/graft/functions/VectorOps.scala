@@ -70,7 +70,7 @@ object VectorOps {
 
   /** [[nearestCid]] as a native kernel ([[graft.plans.NearestCentroidId]]):
     * bit-identical argmin/tie-break/FP semantics, but centroids ride as an
-    * object reference — stable plan shape across Lloyd iterations and no
+    * object reference — one plan shape whatever the centroids, and no
     * per-centroid struct allocation per row. Centroid ids must be the
     * array positions 0..k-1 (the [[graft.kmeans.KMeansSteps.centroids]]
     * convention). */
@@ -80,10 +80,6 @@ object VectorOps {
   /** [[minDist]] as a native kernel ([[graft.plans.MinSqDistToCentroids]]). */
   def minDistK(features: Column, cs: Array[Array[Double]]): Column =
     sqrt(column(graft.plans.MinSqDistToCentroids(expression(features), cs)))
-
-  /** Squared [[minDistK]] — the D² weight of k-means++ sampling. */
-  def minSqDistK(features: Column, cs: Array[Array[Double]]): Column =
-    column(graft.plans.MinSqDistToCentroids(expression(features), cs))
 
   /** Contiguous-bucket projection of a d-dim vector to `nBuckets` dims by
     * averaging each slice — the reference's deterministic `reshape`

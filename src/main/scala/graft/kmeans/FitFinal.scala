@@ -89,7 +89,11 @@ object FitFinal {
     * dumped, matching Verify's one-directory-per-run contract. */
   @volatile private var lastDir: Option[String] = None
 
-  private def frozen(spark: SparkSession, sfDir: String, variant: String): Frozen = {
+  /** The frozen fit for (sfDir, variant), built once: lookups serialize
+    * under the cache lock, so concurrent first callers run one fit and
+    * exactly one of them is tagged as the build. */
+  private def frozen(spark: SparkSession, sfDir: String,
+      variant: String): Frozen = cache.synchronized {
     val (space, cfg, mustConverge) = variants(variant)
     val cacheKey = (sfDir, variant)
     val cacheHit = cache.contains(cacheKey)

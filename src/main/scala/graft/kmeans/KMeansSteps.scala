@@ -155,8 +155,8 @@ object KMeansSteps {
     * Scale posture: per iteration ONE narrow assignment map + ONE
     * partial-aggregated shuffle of k×(d+1) values; only k×d rounded
     * doubles cross to the driver per round — identical to the per-RPC
-    * payload of the reference (`utils/structs.go:34-37`) and to
-    * [[RefKMeans.fit]]'s loop, which this query pins to the oracle. */
+    * payload of the reference (`utils/structs.go:34-37`). This query pins
+    * the round semantics of [[RefKMeans.fit]]'s loop to the oracle. */
   def fitSteps(spark: SparkSession, sfDir: String, iters: Int = 2): DataFrame = {
     val (rows, _) = lloydRounds(spark, sfDir, iters)
     spark.createDataFrame(rows)
@@ -277,11 +277,12 @@ object KMeansSteps {
     * the oracle-green `kmeans_delta`). Rounded means feed the next round
     * in BOTH engines, so no float divergence propagates across rounds.
     *
-    * Scale posture: identical to [[RefKMeans.fit]] — per round one
-    * narrow assignment map + one partial-aggregated k×(d+1) shuffle;
-    * k×d doubles to the driver per round; a FRESH DataFrame per round
-    * (memory: [[RefKMeans]]'s stage-reuse note — re-collecting one
-    * Dataset would replay round 1's shuffle output forever). */
+    * Scale posture: per round one narrow assignment map + one
+    * partial-aggregated k×(d+1) shuffle; k×d doubles to the driver per
+    * round; a FRESH DataFrame per round. Re-collecting one Dataset would
+    * replay round 1's shuffle output forever: the aggregation's
+    * shuffle-map stage registers its outputs on the first job, and every
+    * later collect on the same lineage skips the map stage. */
   def fitTrajectory(spark: SparkSession, sfDir: String,
       threshold: Double = 0.01, cap: Int = 60): DataFrame = {
     val cs0 = centroids(spark, sfDir)
@@ -382,9 +383,9 @@ object KMeansSteps {
     try {
       while (!stopped && iter < cap) {
         iter += 1
-        // a FRESH DataFrame per round off the persisted base (memory:
-        // [[RefKMeans]]'s stage-reuse note — re-collecting one Dataset
-        // would replay round 1's shuffle output forever)
+        // a FRESH DataFrame per round off the persisted base (see
+        // [[fitTrajectory]]: re-collecting one Dataset would replay round
+        // 1's shuffle output forever)
         val assigned = p.select(
           nearestCidK(col("features"), cents).as("cluster_id"), col("features"))
         val m = recenterAggLong(assigned, d, scale)

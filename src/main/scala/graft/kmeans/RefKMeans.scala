@@ -1,10 +1,19 @@
 package graft.kmeans
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkException
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorOps._
+import graft.plans.CentroidKernel
 
 /** Reference-parity distributed K-Means: maximin ("farthest point")
   * seeding + Lloyd iterations, re-expressed Spark-first.
@@ -25,15 +34,45 @@ import graft.functions.VectorOps._
   *    unlike the reference, that path can't crash the shuffle
   *    (`master.go:398-404` panics on a gap in cluster ids).
   *
-  * Physical plan per iteration — ONE Spark job:
-  *   narrow map (argmin over literal centroids — the centroid broadcast of
-  *   `master.go:313-333`) → hash aggregate with map-side partials (the
-  *   combiner of `worker.go:169-189`) → shuffle of k×(d+1) values → k rows
-  *   collected driver-side. The points DataFrame is cached once
-  *   (`worker.go:53-59`'s chunk cache). Nothing O(N) ever reaches the
-  *   driver, and membership is materialized once, post-convergence —
-  *   fixing the reference's per-iteration member shipping
-  *   (`structs.go:40`, `master.go:234`).
+  * Execution. The points are decoded ONCE, one dense block per
+  * partition (row ids + coordinate arrays, in scan order — the
+  * reference's per-worker chunk cache, `worker.go:53-59`). Every round is
+  * a per-block partial merged on the driver in partition order:
+  *  - a seeding round is a per-block top-1 on (key desc, id asc) — the
+  *    reference's `initCombine` (`worker.go:95-101`);
+  *  - a Lloyd round is a per-block k×(d+1) partial (member counts and
+  *    coordinate sums in row order, the combiner of `worker.go:169-189`),
+  *    argmin by [[CentroidKernel.nearest]]. A cluster with no members in a
+  *    block contributes nothing, so the merged sums are bit-identical to
+  *    the `groupBy(cid)` hash aggregate's (partials in map order).
+  *
+  * Where the rounds run follows the input layout, nothing else:
+  *  - ONE partition: the whole fit — first pick, k−1 seeding rounds,
+  *    every Lloyd round and the stop rule — runs inside that partition's
+  *    task: one Spark job per fit. The task holds its partition's decoded
+  *    rows, which for a splittable file source is bounded by
+  *    `spark.sql.files.maxPartitionBytes`.
+  *  - several partitions: the blocks are persisted (MEMORY_AND_DISK) and
+  *    each round is one `mapPartitions`-style job with no shuffle, its
+  *    k-row (or one-row) result collected — MLlib KMeans's pattern. The
+  *    centroids ride in the task closure (the broadcast of
+  *    `master.go:313-333`).
+  * Both schedules call the same round kernels, merge code and stop rule,
+  * so they return identical [[Result]]s on the same blocks. Nothing O(N)
+  * reaches the driver, and membership is materialized once, after the
+  * fit ([[assign]]), fixing the reference's per-iteration member
+  * shipping (`structs.go:40`, `master.go:234`).
+  *
+  * Input. `points` has columns (id: LONG, features: ARRAY<DOUBLE>), every
+  * row with the same number of coordinates. Like the reference, which
+  * aborts on a non-numeric coordinate (`utils/utils.go:27-30`), the fit
+  * rejects bad input with an `IllegalArgumentException` naming the cause:
+  * an empty table, a `firstId` that matches no row, a null id, null or
+  * non-finite (NaN, ±∞) coordinates (naming the row id), and rows whose
+  * dimension differs from the others or from `initialCentroids`. k > n
+  * and all-duplicate inputs are valid: seeding then re-picks
+  * zero-distance points (lowest id first) and the surplus clusters stay
+  * empty, keeping their seeds.
   */
 object RefKMeans {
 
@@ -61,14 +100,297 @@ object RefKMeans {
       finalDelta: Double,
       converged: Boolean)
 
-  private def collectPoint(df: DataFrame): (Long, Array[Double]) = {
-    val r = df.head()
-    (r.getLong(0), r.getSeq[Double](1).toArray)
+  /** One partition's points, decoded once: ids and coordinates in scan
+    * order, every row with the same dimension. */
+  private[kmeans] final class Block(val ids: Array[Long], val xs: Array[Array[Double]])
+      extends Serializable
+
+  /** A seeding round's best row so far, over `rows` scanned rows; `x` is
+    * null when no row qualified. */
+  private[kmeans] final case class Top(rows: Long, key: Double, hash: Long, id: Long,
+      x: Array[Double])
+
+  /** Lloyd-round partial over `rows` scanned rows: member count and
+    * coordinate sums per cluster. */
+  private[kmeans] final case class Partial(rows: Long, counts: Array[Long],
+      sums: Array[Array[Double]])
+
+  /** One seeding round's row score. The round picks the row with the
+    * greatest `key`, then the lowest `hash`, then the lowest id — among
+    * rows it `admits`. */
+  private[kmeans] sealed trait SeedRound extends Serializable {
+    /** The centroids the key measures against (none for a first pick). */
+    def cents: Array[Array[Double]] = Array.empty
+    def admits(id: Long): Boolean = true
+    def key(id: Long, x: Array[Double]): Double = 0.0
+    def hash(id: Long): Long = 0L
   }
 
-  /** Maximin seeding (`master.go:157-190`). k driver-coordinated jobs,
-    * each a narrow scan + top-1 (TakeOrderedAndProject = per-partition
-    * top-1 partials, the reference's `initCombine` `worker.go:95-101`).
+  /** The row with a given id (the first one in scan order). */
+  private final case class FirstById(target: Long) extends SeedRound {
+    override def admits(id: Long): Boolean = id == target
+  }
+
+  /** `orderBy(xxhash64(id, seed), id).limit(1)`. */
+  private final case class FirstByHash(seed: Long) extends SeedRound {
+    override def hash(id: Long): Long = idHash(id, seed)
+  }
+
+  /** Maximin: `orderBy(desc(minDist), asc(id))` over the centroids so far. */
+  private final case class Farthest(override val cents: Array[Array[Double]])
+      extends SeedRound {
+    override def key(id: Long, x: Array[Double]): Double =
+      math.sqrt(CentroidKernel.nearest(x, cents)._2)
+  }
+
+  /** D² race of round `round`: `orderBy(desc(D² / −ln u), asc(id))`. */
+  private final case class Race(override val cents: Array[Array[Double]], seed: Long,
+      round: Int) extends SeedRound {
+    override def key(id: Long, x: Array[Double]): Double =
+      raceKey(CentroidKernel.nearest(x, cents)._2, id, seed, round)
+  }
+
+  /** Spark's `xxhash64(id, seed)`: XXH64 chained from seed 42. */
+  private[kmeans] def idHash(id: Long, seed: Long): Long =
+    XXH64.hashLong(seed, XXH64.hashLong(id, 42L))
+
+  /** The D² race key of [[seedPP]], bit-for-bit the Spark expression
+    * `d2 / greatest(-log(u), 1e-300)` with
+    * `u = (pmod(xxhash64(id, seed, round), Long.MaxValue) + 1) / 2^63`:
+    * u ∈ (0,1], pmod maps the hash into [0, MaxValue) and +1 keeps ln(u)
+    * finite. A pmod result within an ulp of MaxValue can ROUND to u == 1.0,
+    * making −ln(u) = 0; the 1e-300 floor keeps the divisor nonzero (the key
+    * is astronomically large but finite, preserving the race). Picked
+    * points score D² = 0 and can't win. Spark's `log` is StrictMath's. */
+  private[kmeans] def raceKey(d2: Double, id: Long, seed: Long, round: Int): Double = {
+    val h = XXH64.hashLong(round.toLong, idHash(id, seed))
+    val r = h % Long.MaxValue
+    val pm = if (r < 0) (r + Long.MaxValue) % Long.MaxValue else r
+    val u = (pm + 1L).toDouble / (Long.MaxValue.toDouble + 1.0)
+    d2 / math.max(-StrictMath.log(u), 1e-300)
+  }
+
+  /** Sort order of the seeding picks: key desc under Spark's double
+    * ordering (NaN greatest, −0.0 == 0.0), then hash asc, then id asc. */
+  private def before(key: Double, hash: Long, id: Long,
+      key2: Double, hash2: Long, id2: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(key, key2)
+    c > 0 || c == 0 && (hash < hash2 || hash == hash2 && id < id2)
+  }
+
+  private def checkDim(b: Block, cents: Array[Array[Double]]): Unit =
+    if (cents.nonEmpty && b.xs.nonEmpty && b.xs(0).length != cents(0).length)
+      throw new IllegalArgumentException(s"RefKMeans: points have ${b.xs(0).length} " +
+        s"coordinates but the centroids have ${cents(0).length}")
+
+  /** A seeding round over one block; ties keep the first row in scan order. */
+  private def top(b: Block, r: SeedRound): Top = {
+    checkDim(b, r.cents)
+    var bi = -1
+    var bk = 0.0
+    var bh = 0L
+    var i = 0
+    while (i < b.ids.length) {
+      val id = b.ids(i)
+      if (r.admits(id)) {
+        val k = r.key(id, b.xs(i))
+        val h = r.hash(id)
+        if (bi < 0 || before(k, h, id, bk, bh, b.ids(bi))) {
+          bi = i; bk = k; bh = h
+        }
+      }
+      i += 1
+    }
+    if (bi < 0) Top(b.ids.length, 0.0, 0L, 0L, null)
+    else Top(b.ids.length, bk, bh, b.ids(bi), b.xs(bi))
+  }
+
+  /** Merge per-block tops in partition order (earlier blocks keep ties). */
+  private def mergeTops(ts: Seq[Top]): Top =
+    ts.foldLeft(Top(0L, 0.0, 0L, 0L, null)) { (a, b) =>
+      val best =
+        if (b.x != null && (a.x == null || before(b.key, b.hash, b.id, a.key, a.hash, a.id))) b
+        else a
+      best.copy(rows = a.rows + b.rows)
+    }
+
+  /** A Lloyd round over one block: argmin, then counts and row-order sums
+    * per cluster. A point with no finite distance (its squared distances
+    * overflow to +∞) joins no cluster, as in the hash aggregate, whose
+    * cid −1 group the update never reads. */
+  private def partial(b: Block, cents: Array[Array[Double]]): Partial = {
+    checkDim(b, cents)
+    val k = cents.length
+    val d = cents(0).length
+    val counts = new Array[Long](k)
+    val sums = Array.fill(k)(new Array[Double](d))
+    var r = 0
+    while (r < b.ids.length) {
+      val x = b.xs(r)
+      val c = CentroidKernel.nearest(x, cents)._1
+      if (c >= 0) {
+        counts(c) += 1
+        val s = sums(c)
+        var i = 0
+        while (i < d) { s(i) += x(i); i += 1 }
+      }
+      r += 1
+    }
+    Partial(b.ids.length, counts, sums)
+  }
+
+  /** Merge per-block partials in partition order, skipping a cluster in
+    * blocks where it has no members (the hash aggregate's final merge:
+    * 0.0 + p₁ + p₂ + … over the partials that exist). */
+  private def mergePartials(ps: Seq[Partial], cents: Array[Array[Double]]): Partial = {
+    val k = cents.length
+    val d = cents(0).length
+    val counts = new Array[Long](k)
+    val sums = Array.fill(k)(new Array[Double](d))
+    ps.foreach { p =>
+      var c = 0
+      while (c < k) {
+        if (p.counts(c) > 0) {
+          counts(c) += p.counts(c)
+          var i = 0
+          while (i < d) { sums(c)(i) += p.sums(c)(i); i += 1 }
+        }
+        c += 1
+      }
+    }
+    Partial(ps.map(_.rows).sum, counts, sums)
+  }
+
+  /** Where a fit's rounds run: inside the one block's task, or as one job
+    * per round over persisted blocks. */
+  private[kmeans] sealed trait Rounds {
+    def top(r: SeedRound): Top
+    def partial(cents: Array[Array[Double]]): Partial
+  }
+
+  private final class InTask(b: Block) extends Rounds {
+    def top(r: SeedRound): Top = mergeTops(Seq(RefKMeans.top(b, r)))
+    def partial(cents: Array[Array[Double]]): Partial =
+      mergePartials(Seq(RefKMeans.partial(b, cents)), cents)
+  }
+
+  private final class PerRound(blocks: RDD[Block]) extends Rounds {
+    def top(r: SeedRound): Top = mergeTops(blocks.map(RefKMeans.top(_, r)).collect().toSeq)
+    def partial(cents: Array[Array[Double]]): Partial =
+      mergePartials(blocks.map(RefKMeans.partial(_, cents)).collect().toSeq, cents)
+  }
+
+  /** The points decoded into one [[Block]] per partition (lazy: decoding
+    * runs in the first job that reads them). */
+  private[kmeans] def blocksOf(points: DataFrame): RDD[Block] = {
+    val schema = points.schema
+    require(schema("id").dataType == LongType && (schema("features").dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }), s"RefKMeans: points must be (id LONG, features ARRAY<DOUBLE>), got ${schema.simpleString}")
+    points.select("id", "features").queryExecution.toRdd
+      .mapPartitions(rows => Iterator(decode(rows)))
+  }
+
+  private def decode(rows: Iterator[InternalRow]): Block = {
+    val ids = Array.newBuilder[Long]
+    val xs = Array.newBuilder[Array[Double]]
+    var d = -1
+    rows.foreach { row =>
+      if (row.isNullAt(0)) throw new IllegalArgumentException("RefKMeans: a point has a null id")
+      val id = row.getLong(0)
+      def bad(what: String) = new IllegalArgumentException(s"RefKMeans: point $id $what")
+      if (row.isNullAt(1)) throw bad("has null features")
+      val a = row.getArray(1)
+      val x = a.toDoubleArray()
+      var i = 0
+      while (i < x.length) {
+        if (a.isNullAt(i)) throw bad(s"has a null coordinate (features[$i])")
+        if (!java.lang.Double.isFinite(x(i)))
+          throw bad(s"has a non-finite coordinate (features[$i] = ${x(i)})")
+        i += 1
+      }
+      if (d < 0) d = x.length
+      else if (x.length != d) throw bad(s"has ${x.length} coordinates, expected $d")
+      ids += id
+      xs += x
+    }
+    new Block(ids.result(), xs.result())
+  }
+
+  /** Run `body` over the blocks: inside the task when `oneTask` (a single
+    * block), else one job per round over the persisted blocks. Bad input
+    * found inside a task surfaces as its `IllegalArgumentException`. */
+  private[kmeans] def schedule[T: ClassTag](blocks: RDD[Block], oneTask: Boolean)(
+      body: Rounds => T): T =
+    try {
+      if (oneTask) blocks.map(b => body(new InTask(b))).collect().head
+      else {
+        blocks.persist(StorageLevel.MEMORY_AND_DISK)
+        try body(new PerRound(blocks)) finally blocks.unpersist(blocking = false)
+      }
+    } catch {
+      case e: SparkException if e.getCause.isInstanceOf[IllegalArgumentException] =>
+        throw e.getCause
+    }
+
+  /** [[schedule]] with the scheduler the input layout decides. */
+  private def run[T: ClassTag](points: DataFrame)(body: Rounds => T): T = {
+    val blocks = blocksOf(points)
+    schedule(blocks, oneTask = blocks.getNumPartitions == 1)(body)
+  }
+
+  /** Maximin (`pp` false) or D² (`pp` true) seeding over `rounds`: the
+    * first pick, then k−1 rounds each adding one centroid. */
+  private def seedOn(rounds: Rounds, cfg: Config, pp: Boolean): Array[Array[Double]] = {
+    val first = rounds.top(cfg.firstId match {
+      case Some(id) => FirstById(id)
+      case None => FirstByHash(cfg.seed)
+    })
+    if (first.rows == 0) throw new IllegalArgumentException("RefKMeans: no points")
+    if (first.x == null)
+      throw new IllegalArgumentException(s"RefKMeans: firstId ${cfg.firstId.get} matches no point")
+    val cents = new Array[Array[Double]](cfg.k)
+    cents(0) = first.x
+    var found = 1
+    while (found < cfg.k) {
+      val sofar = cents.take(found)
+      cents(found) = rounds.top(if (pp) Race(sofar, cfg.seed, found) else Farthest(sofar)).x
+      found += 1
+    }
+    cents
+  }
+
+  /** Seeding, then Lloyd rounds under the reference's stop rule. */
+  private[kmeans] def fitOn(rounds: Rounds, cfg: Config): Result = {
+    var cents = cfg.initialCentroids.getOrElse(seedOn(rounds, cfg, cfg.ppSeeding))
+    require(cents.length == cfg.k, s"initialCentroids: ${cents.length} seeds for k=${cfg.k}")
+    var iter = 0
+    var delta = Double.MaxValue
+    var converged = false
+    while (!converged && iter < cfg.maxIter) {
+      val p = rounds.partial(cents)
+      if (p.rows == 0) throw new IllegalArgumentException("RefKMeans: no points")
+      // O15 empty-cluster carry-over (master.go:579-600).
+      val newCents = Array.tabulate(cfg.k) { c =>
+        if (p.counts(c) == 0) cents(c) else p.sums(c).map(_ / p.counts(c))
+      }
+      delta = cents.zip(newCents)
+        .map { case (o, n) =>
+          math.sqrt(o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum)
+        }.sum / cfg.k
+      iter += 1
+      if (delta < cfg.deltaThreshold) {
+        converged = true // stop BEFORE update: cents stay as assigned
+      } else {
+        cents = newCents // iteration-cap exit reports updated centroids
+      }
+    }
+    Result(cents.zipWithIndex.map { case (c, i) => (i, c) }, iter, delta, converged)
+  }
+
+  /** Maximin seeding (`master.go:157-190`): the first pick (`firstId`, or
+    * the lowest `xxhash64(id, seed)`), then k−1 farthest-point rounds.
     *
     * SCALE BOUND: this is k−1 SEQUENTIAL full-corpus scans — the
     * reference's algorithm, and fine at the reference's k (≤10ish): at
@@ -80,137 +402,25 @@ object RefKMeans {
     * for large k. On unambiguous well-separated data the three agree on
     * blob coverage (pinned by RefKMeansSpec's seeding-agreement
     * property test). */
-  def seed(points: DataFrame, cfg: Config): Array[Array[Double]] = {
-    val first = cfg.firstId match {
-      case Some(id) => collectPoint(points.filter(col("id") === id))._2
-      case None =>
-        // Deterministic pseudo-random pick: min over a seeded hash of the
-        // row id — one narrow top-1 pass, any partitioning.
-        collectPoint(points
-          .orderBy(xxhash64(col("id"), lit(cfg.seed)), col("id")).limit(1))._2
-    }
-    // ONE reused plan for all k−1 rounds: unfound slots hold sentinel
-    // centroids at Double.MaxValue — their squared distance overflows to
-    // +∞ and never wins the min, so filling slots in place is exactly
-    // the growing-set semantics (same analyzed plan + codegen each round,
-    // like the Lloyd loop below).
-    val d = first.length
-    val holder = Array.fill(cfg.k)(Array.fill(d)(Double.MaxValue))
-    holder(0) = first.clone()
-    val far = points
-      .select(col("id"), col("features"),
-        minDistK(col("features"), holder).as("sq"))
-      .orderBy(desc("sq"), asc("id")).limit(1)
-      .select(col("id"), col("features"))
-    var found = 1
-    while (found < cfg.k) {
-      holder(found) = collectPoint(far)._2
-      found += 1
-    }
-    holder
-  }
+  def seed(points: DataFrame, cfg: Config): Array[Array[Double]] =
+    run(points)(seedOn(_, cfg, pp = false))
 
   /** Classic D²-weighted k-means++ seeding (Arthur & Vassilvitskii 2007,
     * the algorithm the reference's maximin loop approximates
     * deterministically — `master.go:157-190` picks the argmax instead of
     * sampling ∝ D²). Made deterministic-distributed via an exponential
-    * race: each row draws u ∈ (0,1) from a seeded per-(row, round) hash
-    * and the next centroid is argmin of −ln(u)/D² — a weighted sample
-    * taken as ONE distributed top-1 per round, nothing O(N) driver-side.
-    * Already-chosen points have D² = 0 → key = +∞, never re-picked. */
-  def seedPP(points: DataFrame, cfg: Config): Array[Array[Double]] = {
-    val first = cfg.firstId match {
-      case Some(id) => collectPoint(points.filter(col("id") === id))._2
-      case None =>
-        collectPoint(points
-          .orderBy(xxhash64(col("id"), lit(cfg.seed)), col("id")).limit(1))._2
-    }
-    val d = first.length
-    val holder = Array.fill(cfg.k)(Array.fill(d)(Double.MaxValue))
-    holder(0) = first.clone()
-    var found = 1
-    while (found < cfg.k) {
-      // u ∈ (0,1): pmod maps the hash into [0, MaxValue), +1 keeps ln(u)
-      // finite and nonzero
-      val u = (pmod(xxhash64(col("id"), lit(cfg.seed), lit(found.toLong)),
-        lit(Long.MaxValue)) + lit(1L)).cast("double") /
-        lit(Long.MaxValue.toDouble + 1.0)
-      // argmax of D²/−ln(u) ≡ argmin of −ln(u)/D²; picked points score
-      // D² = 0 and can't win. u < 1 mathematically, but a pmod result
-      // within an ulp of Long.MaxValue can ROUND to u == 1.0 making
-      // −ln(u) = 0 — the greatest() floor keeps ANSI mode from ever
-      // seeing a zero divisor (the clamped key is astronomically large
-      // but finite, preserving the argmax race)
-      val key = minSqDistK(col("features"), holder) /
-        greatest(-log(u), lit(1e-300))
-      holder(found) = collectPoint(points
-        .select(col("id"), col("features"), key.as("key"))
-        .orderBy(desc("key"), asc("id")).limit(1)
-        .select(col("id"), col("features")))._2
-      found += 1
-    }
-    holder
-  }
+    * race: each row draws u ∈ (0,1] from a seeded per-(row, round) hash
+    * and the next centroid is the argmax of D²/−ln(u) ([[raceKey]]) — a
+    * weighted sample taken as ONE top-1 per round, nothing O(N)
+    * driver-side. Already-chosen points have D² = 0 and are never
+    * re-picked while any unpicked point has D² > 0. */
+  def seedPP(points: DataFrame, cfg: Config): Array[Array[Double]] =
+    run(points)(seedOn(_, cfg, pp = true))
 
   /** Full fit: seeding + Lloyd loop. `points` must have columns
     * (id: LONG, features: ARRAY<DOUBLE>). */
-  def fit(points0: DataFrame, cfg: Config): Result = {
-    val points = points0.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val d = points.head().getSeq[Double](1).length
-      var cents: Array[Array[Double]] = cfg.initialCentroids.getOrElse(
-        if (cfg.ppSeeding) seedPP(points, cfg) else seed(points, cfg))
-      require(cents.length == cfg.k,
-        s"initialCentroids: ${cents.length} seeds for k=${cfg.k}")
-      var iter = 0
-      var delta = Double.MaxValue
-      var converged = false
-
-      // A FRESH Dataset per iteration, kernel centroids passed by value.
-      // Reusing one Dataset across iterations (even with a mutable
-      // centroid holder) is WRONG: the aggregation's shuffle-map stage
-      // registers its outputs with the MapOutputTracker on the first
-      // job, and every later collect() on the same RDD lineage SKIPS the
-      // map stage and reuses the round-1 shuffle files — the loop
-      // silently fixpoints after one real Lloyd round (caught by the
-      // kmeans_fit_final oracle: the "converged" state moved by 0.07 on
-      // replay). A new Dataset per round gives a new shuffle dependency,
-      // so every round genuinely recomputes — while the kernel keeps the
-      // compile-once win: centroid VALUES live in the expression object,
-      // not the generated source, so the per-round plan produces
-      // byte-identical codegen and Janino's cache hits (no per-iteration
-      // ~0.5-1 s recompile — the cost that motivated the kernel).
-      val aggs = count(lit(1)).as("n") +: (0 until d).map(i => sum(col("features").getItem(i)).as(s"s$i"))
-      def iterDF(cs: Array[Array[Double]]) = points
-        .select(nearestCidK(col("features"), cs).as("cid"), col("features"))
-        .groupBy("cid")
-        .agg(aggs.head, aggs.tail: _*)
-
-      while (!converged && iter < cfg.maxIter) {
-        // One job: argmin map → partial/final hash agg → k rows collected.
-        val rows = iterDF(cents).collect()
-        val byCid = rows.map { r =>
-          val cid = r.getInt(0)
-          val n = r.getLong(1)
-          val mean = Array.tabulate(d)(i => r.getDouble(2 + i) / n)
-          cid -> mean
-        }.toMap
-        // O15 empty-cluster carry-over (master.go:579-600).
-        val newCents = Array.tabulate(cfg.k)(i => byCid.getOrElse(i, cents(i)))
-        delta = cents.zip(newCents)
-          .map { case (o, n) =>
-            math.sqrt(o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum)
-          }.sum / cfg.k
-        iter += 1
-        if (delta < cfg.deltaThreshold) {
-          converged = true // stop BEFORE update: cents stay as assigned
-        } else {
-          cents = newCents // iteration-cap exit reports updated centroids
-        }
-      }
-      Result(cents.zipWithIndex.map { case (c, i) => (i, c) }, iter, delta, converged)
-    } finally points.unpersist()
-  }
+  def fit(points: DataFrame, cfg: Config): Result =
+    run(points)(fitOn(_, cfg))
 
   /** Final membership — computed ONCE with the frozen centroids (drops the
     * reference's every-iteration member materialization, SURVEY.md §4). */

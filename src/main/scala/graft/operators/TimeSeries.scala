@@ -77,7 +77,7 @@ object TimeSeries {
   /** Shape clustering of the series corpus: the reference k-means fit
     * over all z-normalized windows (cf. distributed trajectory clustering,
     * PAPERS.md) — windows become (id, features) points, so the whole
-    * RefKMeans machinery (plan-reuse, empty-cluster carry) applies
+    * RefKMeans machinery (block rounds, empty-cluster carry) applies
     * unchanged. Fits over [[roundedPoints]] (the 6-decimal grid) so the
     * end state is frozen-literal verifiable (`ts_cluster_final`); the
     * feature pipeline itself is oracle-pinned via [[windowFeatures]] and

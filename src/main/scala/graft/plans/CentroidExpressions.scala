@@ -6,17 +6,20 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-/** Nearest-centroid kernels for the ITERATIVE fit path.
+/** Nearest-centroid kernels as Catalyst expressions, for one-shot
+  * queries over frozen centroids: the final assignment
+  * ([[graft.kmeans.RefKMeans.assign]]), the frozen-state and step queries
+  * ([[graft.kmeans.FitFinal]], [[graft.kmeans.KMeansSteps]]) and the
+  * similarity and streaming consumers. The reference fit's own loop does
+  * not plan these: it runs its rounds over decoded point blocks
+  * ([[graft.kmeans.RefKMeans]]) and calls the same fold,
+  * [[CentroidKernel.nearest]], directly.
   *
-  * The oracle-checked step queries build centroids as plan literals
-  * ([[graft.functions.VectorOps.nearest]]) — ideal for a one-shot query.
-  * In the Lloyd loop, literal centroids change every iteration, so every
-  * iteration generates different codegen source and pays a fresh Janino
-  * compile (~0.5–1 s/job — measured: the sf0.1 lineitem fit spent 20×
-  * that). These kernels carry the centroids as a plain object reference:
-  * the plan shape (and generated surrounding code) is identical across
-  * iterations, the eval is a tight interpreted loop, and per-iteration
-  * cost drops to the actual data work.
+  * Compared with the literal form ([[graft.functions.VectorOps.nearest]])
+  * the centroids ride as a plain object reference, so plans that differ
+  * only in their centroids share one plan shape and one generated source
+  * (no fresh Janino compile per centroid set), and the eval is a tight
+  * loop with no per-centroid struct.
   *
   * Semantics are identical to the literal form bit-for-bit: sequential
   * (x−y)² fold per centroid (`utils/utils.go:46-54`), strict `<` argmin
@@ -33,17 +36,27 @@ abstract class CentroidKernel extends UnaryExpression with CodegenFallback {
   }
 
   /** (argmin index, min squared distance). */
-  protected final def nearest(arr: ArrayData): (Int, Double) = {
+  protected final def nearest(arr: ArrayData): (Int, Double) =
+    CentroidKernel.nearest(arr.toDoubleArray(), centroids)
+}
+
+object CentroidKernel {
+
+  /** (argmin index, min squared distance) of `x` over `centroids`: a
+    * sequential (x−y)² fold over the common prefix of each pair, and a
+    * strict `<` argmin, so the lowest index wins ties. A point whose every
+    * distance is NaN or +∞ gets (−1, +∞). */
+  def nearest(x: Array[Double], centroids: Array[Array[Double]]): (Int, Double) = {
     var best = Double.PositiveInfinity
     var bi = -1
     var c = 0
     while (c < centroids.length) {
       val cent = centroids(c)
-      val n = math.min(arr.numElements(), cent.length)
+      val n = math.min(x.length, cent.length)
       var s = 0.0
       var i = 0
       while (i < n) {
-        val d = arr.getDouble(i) - cent(i)
+        val d = x(i) - cent(i)
         s += d * d
         i += 1
       }
@@ -64,7 +77,7 @@ case class NearestCentroidId(child: Expression, centroids: Array[Array[Double]])
   override def prettyName: String = "nearest_centroid_id"
 }
 
-/** Min squared distance to the centroid set (the seeding kernel). */
+/** Min squared distance to the centroid set (the min-distance kernel). */
 case class MinSqDistToCentroids(child: Expression, centroids: Array[Array[Double]])
     extends CentroidKernel {
   override def dataType: DataType = DoubleType

@@ -70,4 +70,29 @@ class FitFinalSpec extends AnyFunSuite {
     // the frozen standardization stats ride in the oracle's pts CTE
     assert(sqls("kmeans_fit_lineitem_final").contains("l_quantity -"))
   }
+
+  test("concurrent first lookups run one fit and tag exactly one access as the build") {
+    import graft.sources.CacheProbe
+    val key = s"kmeans_fit:${(sf, "fit")}"
+    def mine() = CacheProbe.drain().filter(_.key == key)
+    CacheProbe.setEnabled(true)
+    try {
+      // make the entry cold: look it up once, then evict it
+      FitFinal.result(spark, sf)
+      mine().foreach(_.evict())
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val calls = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[RefKMeans.Result] {
+          def call(): RefKMeans.Result = { start.await(); FitFinal.result(spark, sf) }
+        }))
+        start.countDown()
+        val results = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+        assert(results(0) eq results(1), "both callers must get the one frozen fit")
+      } finally pool.shutdown()
+      val accesses = mine()
+      assert(accesses.size == 2)
+      assert(accesses.count(_.built) == 1, s"built flags: ${accesses.map(_.built)}")
+    } finally CacheProbe.setEnabled(false)
+  }
 }

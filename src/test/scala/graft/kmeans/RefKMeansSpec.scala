@@ -1,10 +1,14 @@
 package graft.kmeans
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorOps
+import graft.sources.Tables
 
 /** Golden micro-fixture tests (FIXTURES.md §A) pinning reference semantics:
   * maximin seeding (`/root/reference/main/master/master.go:157-190`),
@@ -17,6 +21,7 @@ class RefKMeansSpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 
   def pts(rows: (Long, Seq[Double])*): DataFrame = {
@@ -174,5 +179,207 @@ class RefKMeansSpec extends AnyFunSuite {
           "concurrent fit B diverged from its sequential result")
       }
     } finally pool.shutdown()
+  }
+
+  /** The read-only fixture tables of TESTDATA.md. */
+  private def fixture(sf: String) = s"/root/testdata/sf$sf"
+  private val sf001 = fixture("0.001")
+  private val sf01 = fixture("0.01")
+
+  /** First 16 hex digits of a SHA-256 over the raw bits of `cs`, in order. */
+  private def bits(cs: Seq[Array[Double]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val bb = java.nio.ByteBuffer.allocate(8)
+    cs.foreach(_.foreach { x =>
+      bb.clear(); bb.putLong(java.lang.Double.doubleToRawLongBits(x)); md.update(bb.array())
+    })
+    md.digest().take(8).map("%02x".format(_)).mkString
+  }
+
+  /** A Result as "centroid bits, iterations, finalDelta bits, converged". */
+  private def pin(r: RefKMeans.Result): String =
+    s"${bits(r.centroids.sortBy(_._1).map(_._2).toSeq)} ${r.iterations} " +
+      s"${java.lang.Double.doubleToRawLongBits(r.finalDelta).toHexString} ${r.converged}"
+
+  test("fixture fits reproduce the DataFrame-plan fit bit-for-bit at 1 and 4 partitions") {
+    // Recorded from the per-round DataFrame-plan implementation (one
+    // groupBy job per Lloyd round, one top-1 job per seeding round):
+    // centroid bits, iterations, finalDelta bits, converged, and the bits
+    // of the seeds that `seed` / `seedPP` return for the same config.
+    val fitCfg = RefKMeans.Config(k = 8, firstId = Some(0L))
+    val ppCfg = RefKMeans.Config(k = 8, seed = 42L, ppSeeding = true)
+    val hashCfg = RefKMeans.Config(k = 8, seed = 7L)
+    val liCfg = FitFinal.CfgLineitem
+    val tsCfg = graft.operators.TimeSeries.ClusterCfg
+    def emb(sf: String) = Tables.points(spark, sf)
+    def li(sf: String) = Tables.lineitemPointsStd(spark, sf)
+    def ts(sf: String) = graft.operators.TimeSeries.roundedPoints(spark, sf)
+    val cases: Seq[(String, () => DataFrame, RefKMeans.Config, String, String)] = Seq(
+      ("emb sf0.001", () => emb(sf001), fitCfg,
+        "29fd7d099de298c7 11 3f6e9c9b18dc2901 true", "f2935e161cb60a6b"),
+      ("emb sf0.001 x4", () => emb(sf001).repartition(4), fitCfg,
+        "29fd7d099de298c7 11 3f6e9c9b18dc2901 true", "f2935e161cb60a6b"),
+      ("emb sf0.01", () => emb(sf01), fitCfg,
+        "313fb533a4933960 9 3f81a5e5c6ad17b9 true", "7c67604f9f61b714"),
+      ("emb sf0.01 x4", () => emb(sf01).repartition(4), fitCfg,
+        "313fb533a4933960 9 3f81a5e5c6ad17b9 true", "7c67604f9f61b714"),
+      ("emb sf0.1", () => emb(fixture("0.1")), fitCfg,
+        "fa18bb189d90f8d1 14 3f836681c08a837e true", "373fe42d56d27fd8"),
+      ("emb sf0.1 x4", () => emb(fixture("0.1")).repartition(4), fitCfg,
+        "fa18bb189d90f8d1 14 3f836681c08a837e true", "373fe42d56d27fd8"),
+      ("lineitem sf0.001", () => li(sf001), liCfg,
+        "14ade14af8549d05 20 3f9e7755b064621b false", "38abedd4d98a8081"),
+      ("lineitem sf0.01", () => li(sf01), liCfg,
+        "6c51a0cfca5f0122 20 3f895e136ffbcb7b false", "c90b9241ca4809da"),
+      // row order changes across partitions, and so do the sums' bits
+      ("lineitem sf0.01 x4", () => li(sf01).repartition(4), liCfg,
+        "cd9ca63b738403ca 20 3f895e136ffbca28 false", "c90b9241ca4809da"),
+      ("pp sf0.01", () => emb(sf01), ppCfg,
+        "68355429fcade2f2 9 3f6ce5d7700a589d true", "404b754bc895f10f"),
+      ("pp sf0.01 x4", () => emb(sf01).repartition(4), ppCfg,
+        "68355429fcade2f2 9 3f6ce5d7700a589d true", "404b754bc895f10f"),
+      ("hashed first pick sf0.01", () => emb(sf01), hashCfg,
+        "6d56a5d14c3c1129 8 3f7f4c7502181e92 true", "724aa2a17dd83abf"),
+      ("hashed first pick sf0.01 x4", () => emb(sf01).repartition(4), hashCfg,
+        "6d56a5d14c3c1129 8 3f7f4c7502181e92 true", "724aa2a17dd83abf"),
+      ("ts sf0.001", () => ts(sf001), tsCfg,
+        "ac9cb9d244bc4fdb 22 0 true", "487f493cfaa7d9b0"),
+      ("ts sf0.01", () => ts(sf01), tsCfg,
+        "d3864a484d0cb57d 25 3fa8030714ed60a0 false", "8ae6dd0e45645e31"))
+    for ((name, df, cfg, fitPin, seedPin) <- cases) {
+      val p = df()
+      assert(pin(RefKMeans.fit(p, cfg)) == fitPin, s"$name: fit result")
+      val seeds = if (cfg.ppSeeding) RefKMeans.seedPP(p, cfg) else RefKMeans.seed(p, cfg)
+      assert(bits(seeds.toSeq) == seedPin, s"$name: seeds")
+    }
+  }
+
+  test("block-side hash and D² race keys equal the Spark expressions over the sf0.001 ids") {
+    val p = Tables.points(spark, sf001)
+    for (seed <- Seq(7L, 42L); round <- 1 to 3) {
+      // the expressions the DataFrame-plan seeders ordered by
+      val u = (pmod(xxhash64(col("id"), lit(seed), lit(round.toLong)), lit(Long.MaxValue)) +
+        lit(1L)).cast("double") / lit(Long.MaxValue.toDouble + 1.0)
+      val d2 = col("id").cast("double") * lit(0.37) + lit(0.5)
+      val rows = p.select(col("id"), xxhash64(col("id"), lit(seed)),
+        (d2 / greatest(-log(u), lit(1e-300))).as("key")).collect()
+      assert(rows.length > 100)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        assert(RefKMeans.idHash(id, seed) == r.getLong(1), s"hash of id $id")
+        val key = RefKMeans.raceKey(id.toDouble * 0.37 + 0.5, id, seed, round)
+        assert(java.lang.Double.doubleToRawLongBits(key) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+          s"race key of id $id, seed $seed, round $round")
+      }
+    }
+  }
+
+  test("degenerate inputs: k > n and all-duplicate points keep the recorded output") {
+    val dup = pts(0L -> Seq(1.0, 1.0), 1L -> Seq(1.0, 1.0), 2L -> Seq(1.0, 1.0))
+    val small = pts(3L -> Seq(0.0, 0.0), 1L -> Seq(0.0, 1.0), 2L -> Seq(5.0, 0.0))
+    def cents(r: RefKMeans.Result) = r.centroids.map(_._2.toSeq).toSeq
+    val a = RefKMeans.fit(dup, RefKMeans.Config(k = 2, firstId = Some(0L)))
+    assert(pin(a) == "ef8f88e97b8447fa 1 0 true")
+    assert(cents(a) == Seq.fill(2)(Seq(1.0, 1.0)))
+    val b = RefKMeans.fit(dup, RefKMeans.Config(k = 4))
+    assert(pin(b) == "c290c2d5369c1a09 1 0 true")
+    // k = 5 > n = 3: once every point is a seed, the zero-distance picks
+    // go to the lowest id; the surplus clusters stay empty
+    val want = Seq(Seq(0.0, 1.0), Seq(5.0, 0.0), Seq(0.0, 0.0), Seq(0.0, 1.0), Seq(0.0, 1.0))
+    for (p <- Seq(small, small.coalesce(1))) {
+      val c = RefKMeans.fit(p, RefKMeans.Config(k = 5, firstId = Some(1L)))
+      assert(pin(c) == "c8e85c101d9e37ad 1 0 true")
+      assert(cents(c) == want)
+    }
+    val d = RefKMeans.fit(small, RefKMeans.Config(k = 5, seed = 3L, ppSeeding = true))
+    assert(pin(d) == "aace80468c9e6c96 1 0 true")
+    assert(cents(d) ==
+      Seq(Seq(0.0, 0.0), Seq(5.0, 0.0), Seq(0.0, 1.0), Seq(0.0, 1.0), Seq(0.0, 1.0)))
+  }
+
+  test("degenerate inputs: empty table, missing firstId and non-finite coordinates are rejected") {
+    import spark.implicits._
+    def rejects(p: DataFrame, cfg: RefKMeans.Config, words: String*): Unit = {
+      val e = intercept[IllegalArgumentException](RefKMeans.fit(p, cfg))
+      words.foreach(w => assert(e.getMessage.contains(w), s"'${e.getMessage}' should name $w"))
+    }
+    // no partitions, one empty partition, four empty partitions
+    val none = Tables.points(spark, sf001).filter(col("id") < 0L)
+    val cfg = RefKMeans.Config(k = 2, firstId = Some(0L))
+    for (p <- Seq(Seq.empty[(Long, Seq[Double])].toDF("id", "features"), none,
+        none.repartition(4))) {
+      rejects(p, cfg, "no points")
+      rejects(p, RefKMeans.Config(k = 2), "no points")
+      rejects(p, cfg.copy(initialCentroids = Some(Array(Array(0.0), Array(1.0)))), "no points")
+    }
+    rejects(blobs, cfg.copy(firstId = Some(99L)), "firstId 99")
+    rejects(blobs.coalesce(1), cfg.copy(firstId = Some(99L)), "firstId 99")
+    for (bad <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)) {
+      val p = pts(0L -> Seq(0.0, 0.0), 7L -> Seq(bad, 1.0), 2L -> Seq(5.0, 0.0))
+      for (q <- Seq(p, p.coalesce(1))) {
+        rejects(q, cfg, "point 7", "non-finite")
+        rejects(q, cfg.copy(ppSeeding = true), "point 7", "non-finite")
+      }
+    }
+    rejects(pts(0L -> Seq(0.0, 0.0), 1L -> Seq(1.0)).coalesce(1), cfg, "point 1", "coordinates")
+    rejects(blobs, cfg.copy(initialCentroids = Some(Array(Array(0.0), Array(1.0)))),
+      "coordinates")
+  }
+
+  test("both schedulers return identical results on the same one-partition blocks") {
+    val p = Tables.points(spark, sf01)
+    for (cfg <- Seq(RefKMeans.Config(k = 8, firstId = Some(0L)),
+        RefKMeans.Config(k = 8, seed = 42L, ppSeeding = true),
+        RefKMeans.Config(k = 6, seed = 7L, maxIter = 3))) {
+      val blocks = RefKMeans.blocksOf(p)
+      assert(blocks.getNumPartitions == 1)
+      val inTask =
+        RefKMeans.schedule(RefKMeans.blocksOf(p), oneTask = true)(RefKMeans.fitOn(_, cfg))
+      val perRound = RefKMeans.schedule(blocks, oneTask = false)(RefKMeans.fitOn(_, cfg))
+      assert(pin(inTask) == pin(perRound), s"$cfg")
+    }
+  }
+
+  /** Number of Spark jobs `body` runs on this thread, from job starts
+    * tagged with a fresh job group. The listener bus is FIFO, so once a
+    * later marker job's start arrives every earlier start has too. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"refkmeans-jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      def inGroup[U](g: String)(f: => U): U = {
+        sc.setJobGroup(g, g)
+        try f finally sc.clearJobGroup()
+      }
+      val out = inGroup(group)(body)
+      inGroup(group + "-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(group + "-marker"), "marker job start never arrived")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a one-partition fit is one Spark job; a 4-partition fit is one job per round") {
+    val p1 = Tables.points(spark, sf001)
+    assert(p1.queryExecution.toRdd.getNumPartitions == 1)
+    val cfg = RefKMeans.Config(k = 4, firstId = Some(0L))
+    val (r1, jobs1) = jobsOf(RefKMeans.fit(p1, cfg))
+    assert(jobs1 == 1, s"one-partition fit ran $jobs1 jobs")
+    // the same rows as a 4-slice local relation: 4 partitions, no shuffle
+    val p4 = spark.createDataFrame(p1.collect().toSeq.asJava, p1.schema)
+    assert(p4.queryExecution.toRdd.getNumPartitions == 4)
+    val (r4, jobs4) = jobsOf(RefKMeans.fit(p4, cfg))
+    assert(jobs4 <= 1 + (cfg.k - 1) + r4.iterations,
+      s"4-partition fit ran $jobs4 jobs for ${r4.iterations} Lloyd rounds")
+    assert(pin(r4) == pin(r1))
   }
 }

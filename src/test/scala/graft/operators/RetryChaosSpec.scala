@@ -25,8 +25,9 @@ import graft.kmeans.RefKMeans
   * stops it afterwards (suites run sequentially in the forked test JVM;
   * the next suite's getOrCreate builds a fresh default session).
   *
-  * Covered stages: a full iterative fit (cache materialization +
-  * k×(d+1) partial aggregation per round), the MinHash LSH sweep
+  * Covered stages: a full iterative fit under both of its schedules (the
+  * one-task fit of a one-partition input; block decoding + persistence +
+  * per-round k×(d+1) partials of a four-partition input), the MinHash LSH sweep
   * (native signature kernel + banding + verification joins over a
   * persisted intermediate), and the real GIF encode `mapPartitions`
   * codec stage.
@@ -79,12 +80,17 @@ class RetryChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("iterative fit is bit-identical when every first task attempt dies") {
     val cfg = RefKMeans.Config(k = 4, firstId = Some(0L))
     val points = graft.sources.Tables.points(spark, sf)
-    val clean = resultKey(RefKMeans.fit(points, cfg))
-    spark.catalog.clearCache()
-    val chaotic = resultKey(RefKMeans.fit(chaos(points), cfg))
-    spark.catalog.clearCache()
-    assert(chaotic == clean,
-      "fit under injected task failures diverged from the clean run")
+    // one partition: the whole fit runs in one task, so a retry re-runs
+    // it; four partitions: the retry re-decodes a block before the
+    // blocks are persisted for the per-round jobs
+    for (input <- Seq(points, points.repartition(4))) {
+      val clean = resultKey(RefKMeans.fit(input, cfg))
+      spark.catalog.clearCache()
+      val chaotic = resultKey(RefKMeans.fit(chaos(input), cfg))
+      spark.catalog.clearCache()
+      assert(chaotic == clean,
+        "fit under injected task failures diverged from the clean run")
+    }
   }
 
   test("MinHash LSH sweep is bit-identical when every first task attempt dies") {
