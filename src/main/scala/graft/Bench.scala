@@ -296,18 +296,17 @@ object Bench {
     // running (r7/r8) — BENCH_RESULT.json is the documented source of
     // truth (README "Benchmark"), written for EVERY run including
     // subset/stress runs (unlike BENCH_LAST, which only full
-    // default-config runs may overwrite)
-    try java.nio.file.Files.writeString(
+    // default-config runs may overwrite). A failed record write throws:
+    // the run exits non-zero instead of leaving stale anchors.
+    java.nio.file.Files.writeString(
       new java.io.File(repoDir, "BENCH_RESULT.json").toPath, line + "\n")
-    catch { case _: Throwable => }
     // persist the full record as the next run's cross-round baseline —
     // full default-config runs only: a SPARK_GRAFT_ONLY subset would
     // poison the prior with a partial map, and a shuffle-partition
     // stress run with legitimately slower times
     // a run whose context died mid-pass is not a representative baseline
     if (only.isEmpty && skip.isEmpty && shuffle == cpus && results.forall(_._4)) {
-      try java.nio.file.Files.writeString(priorFile.toPath, line + "\n")
-      catch { case _: Throwable => }
+      java.nio.file.Files.writeString(priorFile.toPath, line + "\n")
       // refresh the monotone anchor: elementwise min of the record so
       // far and this run's successful timings (failed queries excluded
       // — a time-to-crash is not a performance floor). Cold/warm
@@ -315,39 +314,37 @@ object Bench {
       // the record says what each floor measured (a cold build vs an
       // amortized warm read) — the convention PERF.md "cache-provenance
       // floors" documents.
-      try {
-        val priorProv: Map[String, String] =
-          if (!minFile.isFile) Map.empty
-          else try {
-            val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(minFile)
-            val c = root.get("cache")
-            if (c == null) Map.empty
-            else {
-              val it = c.fields()
-              val b = Map.newBuilder[String, String]
-              while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText }
-              b.result()
-            }
-          } catch { case _: Throwable => Map.empty[String, String] }
-        val thisRun = results.collect { case (k, v, true, _, p) => k -> (v, p) }.toMap
-        val merged = (minRec.keySet ++ thisRun.keySet).toSeq.map { k =>
-          val old = minRec.get(k)
-          val cur = thisRun.get(k).map(_._1)
-          val v = (old.toList ++ cur).min
-          // provenance of the run that owns the floor
-          val prov =
-            if (cur.contains(v)) thisRun(k)._2.orElse(priorProv.get(k))
-            else priorProv.get(k)
-          (k, v, prov)
-        }
-        val body = merged.sortBy(_._1)
-          .map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-        val provBody = merged.sortBy(_._1)
-          .collect { case (k, _, Some(p)) => s"\"" + k + "\":\"" + p + "\"" }
-          .mkString("{", ",", "}")
-        java.nio.file.Files.writeString(minFile.toPath,
-          s"""{"queries":$body,"cache":$provBody,"sf":"$sfDir"}""" + "\n")
-      } catch { case _: Throwable => }
+      val priorProv: Map[String, String] =
+        if (!minFile.isFile) Map.empty
+        else try {
+          val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(minFile)
+          val c = root.get("cache")
+          if (c == null) Map.empty
+          else {
+            val it = c.fields()
+            val b = Map.newBuilder[String, String]
+            while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText }
+            b.result()
+          }
+        } catch { case _: Throwable => Map.empty[String, String] }
+      val thisRun = results.collect { case (k, v, true, _, p) => k -> (v, p) }.toMap
+      val merged = (minRec.keySet ++ thisRun.keySet).toSeq.map { k =>
+        val old = minRec.get(k)
+        val cur = thisRun.get(k).map(_._1)
+        val v = (old.toList ++ cur).min
+        // provenance of the run that owns the floor
+        val prov =
+          if (cur.contains(v)) thisRun(k)._2.orElse(priorProv.get(k))
+          else priorProv.get(k)
+        (k, v, prov)
+      }
+      val body = merged.sortBy(_._1)
+        .map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+      val provBody = merged.sortBy(_._1)
+        .collect { case (k, _, Some(p)) => s"\"" + k + "\":\"" + p + "\"" }
+        .mkString("{", ",", "}")
+      java.nio.file.Files.writeString(minFile.toPath,
+        s"""{"queries":$body,"cache":$provBody,"sf":"$sfDir"}""" + "\n")
     }
     spark.stop()
   }

@@ -27,6 +27,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
+      // match Bench/Verify/PlanDump: AQE may re-partition cached plans
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       // match Bench/Verify: Tables.events NTZ cast is zone-dependent
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps._
-import graft.sources.Tables
+import graft.sources.{Memo, Tables}
 
 /** Oracle coverage for fit END STATES — the reference loop's output
   * (`main/master/master.go:193-236`), not just its mechanics (those are
@@ -77,54 +77,41 @@ object FitFinal {
     def claimsConvergence: Boolean = res.converged
   }
 
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Frozen]
+  /** Frozen fits keyed by (sfDir, variant). The parameterless
+    * [[oracleSqls]] dumps the slice of the most recently looked-up
+    * directory (`cache.lastKey`); concurrent fits or a second sf
+    * directory in the same JVM can never drop a variant or pair
+    * literals with the wrong directory — the worst a racing lookup can
+    * do is flip WHICH complete directory gets dumped, matching Verify's
+    * one-directory-per-run contract. */
+  private val cache = new Memo[(String, String), Frozen]("kmeans_fit")
 
-  /** Most recently verified sf directory — selects which slice of
-    * [[cache]] the parameterless [[oracleSqls]] dumps. The frozen states
-    * themselves live ONLY in the (sfDir, variant)-keyed TrieMap, so
-    * concurrent fits or a second sf directory in the same JVM can never
-    * drop a variant or pair literals with the wrong directory; the worst
-    * a racing writer can do is flip WHICH complete directory gets
-    * dumped, matching Verify's one-directory-per-run contract. */
-  @volatile private var lastDir: Option[String] = None
-
-  /** The frozen fit for (sfDir, variant), built once: lookups serialize
-    * under the cache lock, so concurrent first callers run one fit and
-    * exactly one of them is tagged as the build. */
+  /** The frozen fit for (sfDir, variant), built once. */
   private def frozen(spark: SparkSession, sfDir: String,
-      variant: String): Frozen = cache.synchronized {
+      variant: String): Frozen = cache((sfDir, variant)) {
     val (space, cfg, mustConverge) = variants(variant)
-    val cacheKey = (sfDir, variant)
-    val cacheHit = cache.contains(cacheKey)
-    val f = cache.getOrElseUpdate(cacheKey, {
-      val liStats =
-        if (space == "lineitem") Some(Tables.lineitemStatsShared(spark, sfDir)) else None
-      val r =
-        if (variant == "mllib")
-          // external trainer: only the frozen centers matter; converged
-          // stays false so no stop-rule claim is ever emitted
-          RefKMeans.Result(MLlibKMeans.trainedCenters(spark, sfDir),
-            iterations = 0, finalDelta = Double.NaN, converged = false)
-        else {
-          val points = space match {
-            // reads the scratch-materialized std points (identical
-            // doubles to the liStats projection — r16 shared build)
-            case "lineitem" => Tables.lineitemPointsStd(spark, sfDir)
-            case "ts" => graft.operators.TimeSeries.roundedPoints(spark, sfDir)
-            case _ => Tables.points(spark, sfDir)
-          }
-          RefKMeans.fit(points, cfg)
+    val liStats =
+      if (space == "lineitem") Some(Tables.lineitemStatsShared(spark, sfDir)) else None
+    val r =
+      if (variant == "mllib")
+        // external trainer: only the frozen centers matter; converged
+        // stays false so no stop-rule claim is ever emitted
+        RefKMeans.Result(MLlibKMeans.trainedCenters(spark, sfDir),
+          iterations = 0, finalDelta = Double.NaN, converged = false)
+      else {
+        val points = space match {
+          // reads the scratch-materialized std points (identical
+          // doubles to the liStats projection — r16 shared build)
+          case "lineitem" => Tables.lineitemPointsStd(spark, sfDir)
+          case "ts" => graft.operators.TimeSeries.roundedPoints(spark, sfDir)
+          case _ => Tables.points(spark, sfDir)
         }
-      require(r.converged || !mustConverge,
-        s"$variant fit: expected convergence, got cap exit " +
-          s"(iter=${r.iterations}, delta=${r.finalDelta})")
-      Frozen(r, space, liStats)
-    })
-    graft.sources.CacheProbe.record(s"kmeans_fit:$cacheKey", built = !cacheHit)(
-      { cache.remove(cacheKey); () })
-    lastDir = Some(sfDir)
-    f
+        RefKMeans.fit(points, cfg)
+      }
+    require(r.converged || !mustConverge,
+      s"$variant fit: expected convergence, got cap exit " +
+        s"(iter=${r.iterations}, delta=${r.finalDelta})")
+    Frozen(r, space, liStats)
   }
 
   def result(spark: SparkSession, sfDir: String, variant: String = "fit"): RefKMeans.Result =
@@ -207,18 +194,18 @@ object FitFinal {
         "rid")
   }
 
-  /** Frozen-state oracles for `sfDir`, straight from the TrieMap —
+  /** Frozen-state oracles for `sfDir`, straight from the memo —
     * present only once the fit has run in this JVM for the variant
     * (Verify's dump ordering guarantees that); absent otherwise so a
     * partial dev run degrades to the rows-only check instead of
     * emitting stale literals. */
   def oracleSqlsFor(sfDir: String): Map[String, String] =
-    render(cache.collect { case ((d, v), f) if d == sfDir => v -> f }.toMap)
+    render(cache.entries.collect { case ((d, v), f) if d == sfDir => v -> f })
 
   /** Parameterless variant for the [[graft.SparkEntry.oracleSql]]
     * contract: dumps the most recently verified directory's slice. */
   def oracleSqls: Map[String, String] =
-    lastDir.map(oracleSqlsFor).getOrElse(Map.empty)
+    cache.lastKey.map(k => oracleSqlsFor(k._1)).getOrElse(Map.empty)
 
   /** Frozen converged 'fit' centroids (sorted by cid) for the most
     * recently verified directory — shared with
@@ -226,7 +213,7 @@ object FitFinal {
     * the exact same literals. Same run-then-dump contract as
     * [[oracleSqls]]: present only after the fit ran in this JVM. */
   def frozenFitCentroids: Option[Array[(Int, Array[Double])]] =
-    lastDir.flatMap(d => cache.get((d, "fit"))).map(_.res.centroids.sortBy(_._1))
+    cache.lastKey.flatMap(k => cache.get((k._1, "fit"))).map(_.res.centroids.sortBy(_._1))
 
   private def render(byVariant: Map[String, Frozen]): Map[String, String] =
     byVariant match {

@@ -159,9 +159,8 @@ object Bpe {
     * [[TrainLocalMaxWords]] distinct words, Spark-side above — the two
     * paths learn IDENTICAL models (spec-pinned: same pair counts, same
     * (count desc, pair asc) argmax, same left-to-right merge). */
-  private[graft] def model(spark: SparkSession, sfDir: String): Model = {
-    val regHit = reg.contains(sfDir)
-    val m = reg.getOrElseUpdate(sfDir, {
+  private[graft] def model(spark: SparkSession, sfDir: String): Model =
+    reg(sfDir) {
       // empty words (consecutive/leading/trailing spaces) are dropped
       // EVERYWHERE — train, encode, and both oracle CTE chains: the
       // oracle's recursion produces no id rows for '' so its enc CTE
@@ -182,12 +181,7 @@ object Bpe {
       if (probe.length <= TrainLocalMaxWords)
         train(probe.map(r => (r.getString(0), r.getLong(1))).toSeq)
       else trainDistributed(spark, wfDf)
-    })
-    graft.sources.CacheProbe.record(s"bpe:$sfDir", built = !regHit)(
-      { reg.remove(sfDir); () })
-    lastDir = Some(sfDir)
-    m
-  }
+    }
 
   /** [[train]] with the corpus-sized state kept in Spark: the
     * word-frequency table never collects. Per merge round ONE
@@ -275,8 +269,7 @@ object Bpe {
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }.foreach(_.unpersist(blocking = false))
-  private val reg = scala.collection.concurrent.TrieMap.empty[String, Model]
-  @volatile private var lastDir: Option[String] = None
+  private val reg = new graft.sources.Memo[String, Model]("bpe")
 
   /** `(w, n_tok, ids)` for every DISTINCT corpus word: the greedy
     * longest-match fold as an `aggregate` higher-order expression —
@@ -424,7 +417,7 @@ object Bpe {
     * — carry the frozen vocab the queries actually used; empty until a
     * BPE query ran in this JVM. */
   def oracleSqls: Map[String, String] =
-    lastDir.flatMap(reg.get).map { m =>
+    reg.lastKey.flatMap(reg.get).map { m =>
       Map(
         "bpe_encode" ->
           s"""WITH RECURSIVE ${encOracleCtes(m)},

@@ -1154,21 +1154,14 @@ object Dedup {
     * [[semanticRecall]] so the oracle literals match whichever query
     * runs first. */
   private[operators] def scaledCentroids(spark: SparkSession,
-      sfDir: String): Array[Array[Double]] = {
-    val regHit = scaledReg.contains(sfDir)
-    val cs = scaledReg.getOrElseUpdate(sfDir, {
+      sfDir: String): Array[Array[Double]] =
+    scaledReg(sfDir) {
       val k = scaledK(Tables.points(spark, sfDir).count())
       trainBuckets(spark, sfDir, k, maxIter = 5)
-    })
-    graft.sources.CacheProbe.record(s"semdedup:$sfDir", built = !regHit)(
-      { scaledReg.remove(sfDir); () })
-    lastScaledDir = Some(sfDir)
-    cs
-  }
+    }
 
   private val scaledReg =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  @volatile private var lastScaledDir: Option[String] = None
+    new graft.sources.Memo[String, Array[Array[Double]]]("semdedup")
 
   /** Bucketing recall of BOTH semantic-dedup paths vs the exact
     * all-pairs sweep: what fraction of [[cosineNearDup]]'s pairs lands
@@ -1264,12 +1257,12 @@ object Dedup {
     val frozen = graft.kmeans.FitFinal.frozenFitCentroids
       .map(cs => Map("dedup_semantic" -> semanticSql(cs.map(_._2))))
       .getOrElse(Map.empty)
-    val scaled = lastScaledDir.flatMap(scaledReg.get)
+    val scaled = scaledReg.lastKey.flatMap(scaledReg.get)
       .map(cs => Map("dedup_semantic_scaled" -> semanticSql(cs)))
       .getOrElse(Map.empty)
     val recall = for {
       f <- graft.kmeans.FitFinal.frozenFitCentroids
-      s <- lastScaledDir.flatMap(scaledReg.get)
+      s <- scaledReg.lastKey.flatMap(scaledReg.get)
     } yield Map(
       "dedup_semantic_recall" -> recallSql(f.map(_._2), s),
       "dedup_semantic_recall_sampled" ->

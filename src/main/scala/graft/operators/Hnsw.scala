@@ -167,9 +167,8 @@ object Hnsw {
     * [[topK]] and replayed as literals by the recall oracles. The
     * efSearch key component keeps differently-parameterized searches
     * from serving each other's frozen pairs (the nprobe convention). */
-  private val reg = scala.collection.concurrent.TrieMap
-    .empty[(String, Option[Long], Int, Int, Int), Seq[(Long, Long, Long, Double)]]
-  @volatile private var lastDir: Option[String] = None
+  private val reg =
+    new graft.sources.Memo[(String, Option[Long], Int, Int, Int), Seq[(Long, Long, Long, Double)]]("hnsw")
 
   /** The global per-query merge of the per-shard candidates, run
     * DISTRIBUTED (VERDICT r14 task 3: the old driver-side merge
@@ -230,9 +229,7 @@ object Hnsw {
     // A caller-chosen count would change the graph (and hence the
     // frozen pairs) while the registry key wouldn't see it — a stale
     // cache hazard for zero expressive gain (ADVICE r10).
-    val regKey = (sfDir, keepMod, nQueries, k, efSearch)
-    val regHit = reg.contains(regKey)
-    val rows = reg.getOrElseUpdate(regKey, {
+    val rows = reg((sfDir, keepMod, nQueries, k, efSearch)) {
       import spark.implicits._
       val p = Similarity.pointsFor(spark, sfDir, keepMod)
       // auto shard count: bounded per-shard graphs at any corpus size
@@ -260,10 +257,7 @@ object Hnsw {
       val merged = mergeDistributed(local, k)
       bq.destroy()
       merged
-    })
-    graft.sources.CacheProbe.record(s"hnsw:$regKey", built = !regHit)(
-      { reg.remove(regKey); () })
-    lastDir = Some(sfDir)
+    }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(t => Row(t._1, t._2, t._3, t._4)), 1),
       StructType(Seq(StructField("q_id", LongType), StructField("rank", LongType),
@@ -286,7 +280,7 @@ object Hnsw {
 
   /** Last sfDir a [[topK]] ran against (the run-then-dump key the
     * oracle builder uses, mirroring the PQ registry convention). */
-  def lastRunDir: Option[String] = lastDir
+  def lastRunDir: Option[String] = reg.lastKey.map(_._1)
 
   /** Recall-vs-search-effort curve (VERDICT r15 task 5): recall@k of
     * the NSW search at [[EfSearchLow]] and [[EfSearch]] against the

@@ -463,24 +463,16 @@ object Pipeline {
     * `sfDir` — registry-backed so the oracle dump replays the exact
     * literals the plan used (run-then-dump, the
     * [[graft.kmeans.FitFinal]] contract). */
-  private def tempStats(spark: SparkSession, sfDir: String): (Long, Double) = {
-    val regHit = tempReg.contains(sfDir)
-    val st = tempReg.getOrElseUpdate(sfDir, {
+  private def tempStats(spark: SparkSession, sfDir: String): (Long, Double) =
+    tempReg(sfDir) {
       val counts = Tables(spark, sfDir, "documents")
         .groupBy("lang").agg(count(lit(1)).as("n_g"))
         .collect().map(r => (r.getString(0), r.getLong(1)))
         .sortBy(_._1)
       (counts.map(_._2).sum,
         counts.foldLeft(0.0) { case (acc, (_, ng)) => acc + math.sqrt(ng.toDouble) })
-    })
-    graft.sources.CacheProbe.record(s"tempstats:$sfDir", built = !regHit)(
-      { tempReg.remove(sfDir); () })
-    tempLastDir = Some(sfDir)
-    st
-  }
-  private val tempReg =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Double)]
-  @volatile private var tempLastDir: Option[String] = None
+    }
+  private val tempReg = new graft.sources.Memo[String, (Long, Double)]("tempstats")
 
   /** DuckDB twin of [[temperatureSample]] — identical expression order
     * in the rate arithmetic, with (n, z) frozen to the literals the plan
@@ -488,7 +480,7 @@ object Pipeline {
     * so DuckDB parses back the identical double). Run-then-dump:
     * present only after the query ran in this JVM. */
   def temperatureSampleOracles: Map[String, String] =
-    tempLastDir.flatMap(tempReg.get).map { case (n, z) =>
+    tempLiterals.map { case (n, z) =>
       Map("sample_temperature" ->
         s"""WITH d AS (SELECT doc_id, lang FROM documents),
            |c AS (SELECT lang, count(*) AS n_g FROM d GROUP BY lang),
@@ -507,7 +499,7 @@ object Pipeline {
   /** Frozen (total docs, Z) literals of the last [[temperatureSample]] /
     * [[pipelineE2e]] run — for oracle builders outside this object
     * (run-then-dump; None until a temperature-rated query ran). */
-  def tempLiterals: Option[(Long, Double)] = tempLastDir.flatMap(tempReg.get)
+  def tempLiterals: Option[(Long, Double)] = tempReg.lastKey.flatMap(tempReg.get)
 
   // -------------------------------------------------- composed E2E funnel
 

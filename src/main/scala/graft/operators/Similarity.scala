@@ -629,10 +629,8 @@ object Similarity {
     * per JVM, deterministic) — shared by [[pqTopK]] and the oracle dump
     * (run-then-dump, the [[graft.kmeans.FitFinal]] contract). */
   private[operators] def pqCodebooks(spark: SparkSession, sfDir: String,
-      keepMod: Option[Long] = None): Array[Array[Array[Double]]] = {
-    val pqKey = (sfDir, keepMod)
-    val pqHit = pqReg.contains(pqKey)
-    val cbs = pqReg.getOrElseUpdate(pqKey, {
+      keepMod: Option[Long] = None): Array[Array[Array[Double]]] =
+    pqReg((sfDir, keepMod)) {
       val p = points(spark, sfDir, keepMod)
       (0 until PQ_M).map { s =>
         val subPts = p.select(col("vec_id").as("id"),
@@ -644,16 +642,11 @@ object Similarity {
           k = PQ_KS, maxIter = 2, initialCentroids = Some(seeds)))
           .centroids.sortBy(_._1).map(_._2)
       }.toArray
-    })
-    graft.sources.CacheProbe.record(s"pq:$pqKey", built = !pqHit)(
-      { pqReg.remove(pqKey); () })
-    pqLastDir = Some(sfDir)
-    cbs
-  }
+    }
 
-  private val pqReg = scala.collection.concurrent.TrieMap
-    .empty[(String, Option[Long]), Array[Array[Array[Double]]]]
-  @volatile private var pqLastDir: Option[String] = None
+  private val pqReg =
+    new graft.sources.Memo[(String, Option[Long]), Array[Array[Array[Double]]]]("pq")
+  private def pqLastDir: Option[String] = pqReg.lastKey.map(_._1)
 
   /** DuckDB oracle for [[pqTopK]] — frozen codebook literals, encode via
     * per-subspace argmin, ADC with the identical per-subspace grouping,

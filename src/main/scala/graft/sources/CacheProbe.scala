@@ -1,12 +1,11 @@
 package graft.sources
 
 /** Per-JVM cache instrumentation behind the bench's cold/warm floor
-  * provenance (VERDICT r15 task 1). Every compute cache — [[Scratch]]
-  * disk materializations and the per-JVM model/result registries
-  * (HNSW frozen pairs, PQ codebooks, BPE model, k-means frozen fits,
-  * SemDeDup scaled centroids, temperature-sample stats) — reports each
-  * lookup here: whether it BUILT the entry (paid the compute) or HIT
-  * it (amortized read), plus a closure that evicts the entry.
+  * provenance (VERDICT r15 task 1). Every [[Memo]] — and so every
+  * compute-once cache, [[Scratch]] materializations included — reports
+  * each lookup here: whether it BUILT the entry (paid the compute) or
+  * HIT it (amortized read), plus a closure that evicts the entry.
+  * `Memo` is the only caller of [[record]].
   *
   * Why: the bench's de-noising re-run of a cache-building query hits
   * the per-JVM cache and records the amortized read as the query's
@@ -30,7 +29,7 @@ package graft.sources
 object CacheProbe {
   /** One cache lookup: the cache-qualified key, whether this lookup
     * ran the build, and an eviction closure (idempotent — evicting an
-    * already-evicted key is a no-op on every registered cache). */
+    * already-evicted key is a no-op). */
   final case class Access(key: String, built: Boolean, evict: () => Unit)
 
   @volatile private var enabled = false
@@ -44,7 +43,7 @@ object CacheProbe {
 
   /** Report one cache lookup. No-op unless enabled. `evict` must
     * remove the entry so the next lookup rebuilds. */
-  def record(key: String, built: Boolean)(evict: => Unit): Unit =
+  private[sources] def record(key: String, built: Boolean)(evict: => Unit): Unit =
     if (enabled) log.synchronized { log += Access(key, built, () => evict) }
 
   /** Accesses recorded since the last drain, in order. */

@@ -11,16 +11,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one corpus-sized write (a materialized index/feature build) paid
   * once per corpus, read by every downstream query against it.
   *
-  * The build runs under the registry lock: TrieMap.getOrElseUpdate is
-  * not atomic for SIDE EFFECTS — two concurrent first callers would
-  * both run the corpus-sized write and leak one temp dir; serializing
-  * first-call materialization is exactly the intent (later callers
-  * reuse the parquet). Temp dirs are removed by one JVM-exit hook.
+  * The key → dir registry is a [[Memo]]: concurrent first callers of a
+  * key run one corpus-sized write. Temp dirs are removed by one JVM-exit
+  * hook.
   */
 object Scratch {
-  private val reg =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  // every dir ever created, including ones dropped by reset(): the
+  private val reg = new Memo[String, String]("scratch")
+  // builds of different keys run concurrently, so the two buffers below
+  // are guarded by their own monitors.
+  // Every dir ever created, including ones dropped by reset(): the
   // JVM-exit hook removes them all
   private val allDirs =
     scala.collection.mutable.ArrayBuffer.empty[String]
@@ -32,7 +31,7 @@ object Scratch {
 
   private lazy val cleanup: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      reg.synchronized(allDirs.toList).foreach { p =>
+      allDirs.synchronized(allDirs.toList).foreach { p =>
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles).foreach(_.foreach(rm))
           f.delete(): Unit
@@ -43,7 +42,7 @@ object Scratch {
   /** Builds executed since the last call — (key, build DataFrame)
     * pairs for plan audits. */
   private[graft] def drainBuilds(): Seq[(String, DataFrame)] =
-    reg.synchronized {
+    buildLog.synchronized {
       val out = buildLog.toList
       buildLog.clear()
       out
@@ -52,9 +51,9 @@ object Scratch {
   /** Drop every materialization so subsequent calls rebuild — for plan
     * gates that must observe the build plans regardless of which suite
     * ran first in the JVM (dirs stay on disk until the exit hook). */
-  private[graft] def reset(): Unit = reg.synchronized {
+  private[graft] def reset(): Unit = {
     reg.clear()
-    buildLog.clear()
+    buildLog.synchronized(buildLog.clear())
   }
 
   /** Content-addressed corpus key: `sfDir` plus a fingerprint of every
@@ -111,22 +110,14 @@ object Scratch {
     * and different corpora never collide. */
   def materialize(spark: SparkSession, key: String)
       (build: => DataFrame): DataFrame = {
-    val path = reg.synchronized {
-      cleanup
-      val hit = reg.contains(key)
-      val p = reg.getOrElseUpdate(key, {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_scratch").toString
-        val df = build
-        df.write.mode("overwrite").parquet(p)
-        allDirs += p
-        buildLog += ((key, df))
-        p
-      })
-      // cold/warm provenance + re-run eviction (bench-only; the dir
-      // stays on disk until the exit hook — eviction re-materializes)
-      CacheProbe.record(s"scratch:$key", built = !hit)(
-        reg.synchronized { reg.remove(key); () })
+    cleanup
+    val path = reg(key) {
+      val p = java.nio.file.Files
+        .createTempDirectory("graft_scratch").toString
+      val df = build
+      df.write.mode("overwrite").parquet(p)
+      allDirs.synchronized(allDirs += p)
+      buildLog.synchronized(buildLog += ((key, df)))
       p
     }
     spark.read.parquet(path)

@@ -368,4 +368,30 @@ class DedupSpec extends AnyFunSuite {
         assert(c._4 >= Dedup.CdcMinSize, s"doc $d non-tail chunk ${c._4} < m"))
     }
   }
+
+  test("concurrent first use of the scaled centroids trains once and tags one build") {
+    import graft.sources.CacheProbe
+    val sf = "/root/testdata/sf0.001"
+    val key = s"semdedup:$sf"
+    def mine() = CacheProbe.drain().filter(_.key == key)
+    CacheProbe.setEnabled(true)
+    try {
+      // make the entry cold: look it up once, then evict it
+      Dedup.scaledCentroids(spark, sf)
+      mine().foreach(_.evict())
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val calls = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Array[Array[Double]]] {
+          def call(): Array[Array[Double]] = { start.await(); Dedup.scaledCentroids(spark, sf) }
+        }))
+        start.countDown()
+        val results = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+        assert(results(0) eq results(1), "both callers must get the one trained centroid set")
+      } finally pool.shutdown()
+      val accesses = mine()
+      assert(accesses.size == 2)
+      assert(accesses.count(_.built) == 1, s"built flags: ${accesses.map(_.built)}")
+    } finally CacheProbe.setEnabled(false)
+  }
 }
