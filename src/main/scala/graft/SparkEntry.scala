@@ -1992,8 +1992,9 @@ object SparkEntry {
          |WHERE c * 1.0 / (x.n + y.n - c) >= 0.5
          |ORDER BY doc_a, doc_b""".stripMargin,
     // identical ordering (df asc, shh asc), identical prefix length
-    // n − ⌈3n/5⌉ + 1, identical size-compat prune and exact-integer
-    // threshold test as Dedup.jaccardPrefix
+    // n − ⌈3n/5⌉ + 1 and exact-integer threshold test as
+    // Dedup.jaccardPrefix; the size-compat prune here is weaker than
+    // its positional filter, and both filters are exact
     "dedup_jaccard_prefix" ->
       s"""WITH $SHROWS,
          |df AS (SELECT shh, count(*) AS df FROM sh GROUP BY shh),

@@ -42,7 +42,9 @@ object Dedup {
     * every dedup operator, downstream joins shuffle 8-byte longs instead
     * of shingle strings, and the oracle derives the identical keys (so
     * even a hash collision — P ≈ n²/2⁶¹ — reproduces exactly on both
-    * sides). */
+    * sides). Each array is sorted ascending, once, for the merge verify
+    * of [[jaccardPrefix]]; the other consumers take a minimum or explode
+    * to a set, so the order is invisible to them. */
   private[graft] def hashedShingles(spark: SparkSession, sfDir: String): DataFrame =
     // r16: materialized per corpus (the coOrderEdges device) — the md5
     // shingle kernel sweep feeds several dedup pipelines per pass
@@ -54,8 +56,8 @@ object Dedup {
       // and the fixture layout provides fewer scan tasks than cores
       Tables.documentsWide(spark, sfDir)
         .select(col("doc_id"),
-          column(graft.plans.HashedShingles(
-            expression(split(col("text"), " ")), 3)).as("hsh"))
+          sort_array(column(graft.plans.HashedShingles(
+            expression(split(col("text"), " ")), 3))).as("hsh"))
     }
 
   /** (doc_id, shh) — exploded form of [[hashedShingles]]. */
@@ -281,65 +283,69 @@ object Dedup {
   val JacDen = 5
 
   /** EXACT Jaccard similarity join over the FULL per-doc shingle sets
-    * via prefix filtering (the PPJoin family, Xiao et al. WWW 2008 /
-    * Chaudhuri et al. ICDE 2006): no df cap, no sampling — every pair
-    * with J ≥ [[JacNum]]/[[JacDen]] is returned, yet no O(N²) work
-    * happens. Complements [[ngramJaccard]], whose rare-shingle
-    * restriction + posting-list cap trade exactness for bounded
-    * fan-out: here exactness is recovered from the prefix-filter
-    * THEOREM instead — order each doc's shingles by ascending global
-    * df (tie: shh), keep only the first n − ⌈t·n⌉ + 1 as candidate
-    * keys; two sets with J ≥ t MUST share a prefix key (if they
-    * disagreed on all prefix keys, the overlap is bounded below t·n).
-    * A size-compatibility prune (t·max ≤ min) drops cross-length pairs
-    * before they expand.
+    * with PPJoin's prefix and positional filters (Xiao et al., WWW 2008;
+    * prefix filtering after Chaudhuri et al., ICDE 2006): no df cap, no
+    * sampling — every pair with J ≥ [[JacNum]]/[[JacDen]] is returned,
+    * yet no O(N²) work happens. Complements [[ngramJaccard]], whose
+    * rare-shingle restriction + posting-list cap trade exactness for
+    * bounded fan-out.
+    *
+    * Prefix filter: order each doc's n shingles by the global key
+    * (df asc, shh asc) and keep the first n − ⌈t·n⌉ + 1 as its prefix
+    * (rank rn = 1, 2, …); two sets with J ≥ t MUST share a prefix
+    * shingle. Positional filter ([[graft.plans.PrefixJoin.positional]]):
+    * both docs use the same global order, so their FIRST common shingle
+    * lies in both prefixes and is the shared instance with the smallest
+    * ranks ra, rb; every other common shingle comes after it, so
+    * c ≤ 1 + min(na − ra, nb − rb). Any later shared instance of the same
+    * pair has a smaller bound, so dropping each instance that fails its
+    * own bound and then taking `distinct` keeps exactly the pairs that
+    * can still reach the threshold. The bound implies the size filter
+    * (t·max ≤ min).
+    *
+    * Verify: each surviving pair joins back to the two docs' shingle
+    * arrays, already ascending ([[hashedShingles]]), and ONE merge
+    * ([[graft.plans.JaccardPpm]]) counts the distinct overlap — the full
+    * sets never re-shuffle per shingle.
     *
     * Scale shape: corpus-sized relations cross exactly two key spaces —
     * the shingle hash (df count + prefix posting lists) and the doc id
-    * (prefix selection window, verification joins); candidate pairs
-    * (116 at sf0.01, vs 11,533 share-any-shingle pairs — a 99% prune,
-    * measured) join back to the per-doc shingle ARRAYS for one
-    * `array_intersect` verification, so the full sets never re-shuffle
-    * per pair. Prefix posting lists stay short by construction: a
+    * (prefix selection window, verification joins). On the benchmark's
+    * 5,000-doc corpus, 107,442 prefix rows expand to 314,180 pair
+    * instances; the size filter alone would keep 191,270 distinct
+    * candidates, the positional filter keeps 67,739, and 288 pairs
+    * verify. Prefix posting lists stay short by construction: a
     * shingle enters a doc's prefix only while it is among that doc's
     * ~(1−t)·n RAREST, so hot shingles drop out of every prefix as their
     * df grows — the self-limiting property that replaces [[ngramJaccard]]'s
     * hard cap. Output: (doc_a, doc_b, jaccard_ppm) — the score as exact
     * integer ppm (floor), the FIXTURES.md rounding-tie device. */
-  def jaccardPrefix(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = hashedShingles(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh = base.select(col("doc_id"), explode(col("hsh")).as("shh"))
+  def jaccardPrefix(spark: SparkSession, sfDir: String): DataFrame =
+    jaccardPrefixFrom(hashedShingles(spark, sfDir)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** [[jaccardPrefix]] over a pre-built (doc_id, hsh) base whose arrays
+    * are ascending (caller owns its persistence). */
+  private[graft] def jaccardPrefixFrom(base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+    val sh = base.select(col("doc_id"), size(col("hsh")).as("n"),
+      explode(col("hsh")).as("shh"))
     val dfRel = sh.groupBy("shh").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy("doc_id")
     val pref = sh.join(dfRel, "shh")
-      .select(col("doc_id"), col("shh"),
-        row_number().over(w.orderBy("df", "shh")).as("rn"),
-        count(lit(1)).over(w).as("n"))
+      .select(col("doc_id"), col("shh"), col("n"),
+        row_number().over(Window.partitionBy("doc_id").orderBy("df", "shh")).as("rn"))
       .filter(col("rn") <= col("n") - expr(s"($JacNum * n + $JacDen - 1) div $JacDen") + 1)
-    // posting-list pair expansion with the size-compat prune inline —
-    // same narrow per-group loop as [[ngramJaccardFrom]], no self-join
-    val pairExpr = flatten(transform(col("ds"), (x, i) =>
-      filter(
-        transform(slice(col("ds"), i + 2, size(col("ds"))), y =>
-          struct(x.getField("doc_id").as("doc_a"), y.getField("doc_id").as("doc_b"),
-            x.getField("n").as("na"), y.getField("n").as("nb"))),
-        p => lit(JacNum) * greatest(p.getField("na"), p.getField("nb")) <=
-          lit(JacDen) * least(p.getField("na"), p.getField("nb")))))
     val cand = pref.groupBy("shh")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ds"))
-      .select(explode(pairExpr).as("p"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.na"), col("p.nb"))
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("n"), col("rn")))).as("ds"))
+      .select(column(graft.plans.PrefixPairs(expression(col("ds")), JacNum, JacDen))
+        .as(Seq("doc_a", "doc_b")))
       .distinct()
-    val c = size(array_intersect(col("ha"), col("hb")))
-    val u = col("na") + col("nb") - c
     cand
       .join(base.select(col("doc_id").as("doc_a"), col("hsh").as("ha")), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("hsh").as("hb")), "doc_b")
-      .filter(c * lit(JacDen) >= u * lit(JacNum))
-      .select(col("doc_a"), col("doc_b"), c.cast("long").as("c"), u.cast("long").as("u"))
-      .select(col("doc_a"), col("doc_b"),
-        expr("c * 1000000 div u").as("jaccard_ppm"))
+      .select(col("doc_a"), col("doc_b"), column(graft.plans.JaccardPpm(
+        expression(col("ha")), expression(col("hb")), JacNum, JacDen)).as("jaccard_ppm"))
+      .filter(col("jaccard_ppm").isNotNull)
       .orderBy("doc_a", "doc_b")
   }
 

@@ -915,7 +915,7 @@ object Graphs {
     * per-round checkpoint is needed and the whole state derivation
     * runs as one job whose plan the scratch gate can audit). Only a
     * non-default `rounds` (tests) bypasses the registry. */
-  private def lpaLabels(spark: SparkSession, sfDir: String,
+  private[operators] def lpaLabels(spark: SparkSession, sfDir: String,
       rounds: Int = LpaRounds): DataFrame = {
     def build = {
       val e = coOrderEdges(spark, sfDir)

@@ -105,6 +105,44 @@ class DedupSpec extends AnyFunSuite {
     assert(got == naive)
   }
 
+  test("jaccard prefix equals the naive all-pairs exact join on a dense vocabulary") {
+    import spark.implicits._
+    // ~400 docs of 10-100 words from 31 words, 5% near-copies (0-2 word
+    // substitutions plus a trailing "dup") of earlier docs — the
+    // benchmark corpus's shape: shingles are widely shared, so prefix
+    // lists are long and the positional filter does the pruning. Seed 26
+    // yields result pairs that clear the positional bound by less than
+    // one shingle: a bound one tighter loses them
+    val rnd = new scala.util.Random(26)
+    val vocab = (0 until 31).map(i => s"v$i")
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (i <- 0 until 400) {
+      val words = if (i >= 20 && rnd.nextDouble() < 0.05) {
+        val w = texts(rnd.nextInt(i)).split(" ").filter(_ != "dup")
+        for (_ <- 0 until rnd.nextInt(3)) w(rnd.nextInt(w.length)) = vocab(rnd.nextInt(31))
+        w.toSeq :+ "dup"
+      } else Seq.fill(10 + rnd.nextInt(91))(vocab(rnd.nextInt(31)))
+      texts += words.mkString(" ")
+    }
+    val d3 = Files.createTempDirectory("graft_jp_dense").toString
+    texts.toSeq.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "s", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$d3/documents.parquet")
+    val sets = texts.zipWithIndex.map { case (t, i) =>
+      val w = t.split(" ")
+      i.toLong -> w.sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }.toMap
+    val naive = (for {
+      a <- sets.keys; b <- sets.keys if a < b
+      c = (sets(a) & sets(b)).size; u = sets(a).size + sets(b).size - c
+      if u > 0 && c * Dedup.JacDen >= u * Dedup.JacNum
+    } yield (a, b, c.toLong * 1000000L / u)).toSeq.sorted
+    val got = Dedup.jaccardPrefix(spark, d3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(naive.size >= 10 && naive.exists(_._3 < 1000000L)) // non-trivial
+    assert(got == naive)
+  }
+
   test("minhash LSH finds the identical pair with jaccard 1.0") {
     val pairs = Dedup.minhashLSH(spark, dir).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap

@@ -197,6 +197,36 @@ class GraphsSpec extends AnyFunSuite {
     assert(got == want, s"got $got")
   }
 
+  test("labelProp and labelPropTrajectory agree on every edge node; an isolated node gets no label") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_lpa_iso").toString
+    val in = java.sql.Timestamp.valueOf("1997-06-01 00:00:00")
+    // the converging triangle {1,2,3} + pendant 4, plus order 40 with a
+    // single part: node 7 has degree 0, so it never enters the co-order
+    // edge relation both LPA forms (and their DuckDB oracles) start from
+    Seq((10L, 1L, in), (10L, 2L, in), (10L, 3L, in), (20L, 3L, in), (20L, 4L, in),
+      (40L, 7L, in))
+      .toDF("l_orderkey", "l_partkey", "l_shipdate")
+      .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+    val traj = Graphs.labelPropTrajectory(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(traj == Seq((1L, 4L, 10L), (2L, 2L, 5L), (3L, 0L, 0L)), s"got $traj")
+    def labels(rounds: Int): Map[Long, Long] = Graphs.lpaLabels(spark, d, rounds).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // per node: the fixed-round states change exactly where the
+    // trajectory says, round by round
+    val states = (0 to traj.size).map(labels)
+    assert(states.forall(_.keySet == Set(1L, 2L, 3L, 4L)), s"got $states")
+    for ((round, nChanged, idSum) <- traj) {
+      val changed = states(round.toInt).keys
+        .filter(v => states(round.toInt)(v) != states(round.toInt - 1)(v))
+      assert((changed.size.toLong, changed.sum) == (nChanged, idSum), s"round $round")
+    }
+    val prop = Graphs.labelProp(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(prop == Seq((1L, 4L, 1L, 10L)), s"got $prop")
+  }
+
   test("modularity: hand-computed Q over the LPA partition, exact ppm") {
     import spark.implicits._
     val d = java.nio.file.Files.createTempDirectory("graft_mod").toString

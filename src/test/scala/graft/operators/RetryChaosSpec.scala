@@ -29,8 +29,9 @@ import graft.kmeans.RefKMeans
   * one-task fit of a one-partition input; block decoding + persistence +
   * per-round k×(d+1) partials of a four-partition input), the MinHash LSH sweep
   * (native signature kernel + banding + verification joins over a
-  * persisted intermediate), and the real GIF encode `mapPartitions`
-  * codec stage.
+  * persisted intermediate), the prefix-filter Jaccard join (native pair
+  * expansion + merge verify kernels), and the real GIF encode
+  * `mapPartitions` codec stage.
   */
 object RetryChaosSpec {
   /** In-JVM (local-mode) once-per-run injection latch for the
@@ -108,8 +109,25 @@ class RetryChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       "LSH pairs under injected task failures diverged from the clean run")
   }
 
+  test("jaccard prefix pairs are bit-identical when every first task attempt dies") {
+    // the retry re-runs the native pair expansion and merge verify
+    // kernels inside the killed tasks' stages
+    def run(wrap: DataFrame => DataFrame): Seq[(Long, Long, Long)] = {
+      val base = wrap(Dedup.hashedShingles(spark, sf))
+      val out = Dedup.jaccardPrefixFrom(base)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      spark.catalog.clearCache()
+      out
+    }
+    val clean = run(identity)
+    val chaotic = run(chaos)
+    assert(clean.nonEmpty, "fixture must produce jaccard prefix pairs")
+    assert(chaotic == clean,
+      "jaccard prefix pairs under injected task failures diverged from the clean run")
+  }
+
   test("recenter aggregate is bit-identical after an injected FETCH failure re-runs the map stage") {
-    // The other half of the retry story: the first three tests kill
+    // The other half of the retry story: the other tests kill
     // tasks (plain task retry, map outputs intact). A 1000-executor run
     // mostly sees the OTHER mode — a reduce task's fetch fails, the
     // DAGScheduler unregisters the lost map output and RESUBMITS THE
