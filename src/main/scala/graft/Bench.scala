@@ -145,11 +145,11 @@ object Bench {
       if (acc.exists(_.built)) Some("cold")
       else if (acc.nonEmpty) Some("warm")
       else None
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+    def timeOne(name: String, fn: SparkEntry.Query)
         : (Double, Boolean, Seq[graft.sources.CacheProbe.Access]) = {
       graft.sources.CacheProbe.drain()
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
+      val ok = try { fn(spark, sfDir).df.count(); true }
       catch { case e: Throwable =>
         System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
         false

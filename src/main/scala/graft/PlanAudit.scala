@@ -39,7 +39,7 @@ object PlanAudit {
     if (args.nonEmpty) {
       for (name <- args) {
         println(s"\n===== $name =====")
-        println(SparkEntry.queries(name)(spark, sf).queryExecution
+        println(SparkEntry.queries(name)(spark, sf).df.queryExecution
           .explainString(FormattedMode))
       }
     } else {
@@ -50,7 +50,7 @@ object PlanAudit {
           // materialize first: under AQE the pre-execution plan is the
           // INITIAL one — runtime SMJ→BHJ conversions, coalesced
           // exchanges and codegen stage ids only exist in the final plan
-          val qe = fn(spark, sf).queryExecution
+          val qe = fn(spark, sf).df.queryExecution
           qe.executedPlan.execute().count()
           val full = qe.explainString(FormattedMode)
           val p = full.split("== Initial Plan ==")(0)

@@ -32,7 +32,7 @@ object PlanDump {
       graft.sources.Scratch.drainBuilds() // drop leftovers from prior query
       val sb = new StringBuilder
       try {
-        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        val qe = SparkEntry.queries(name)(spark, sfDir).df.queryExecution
         qe.executedPlan.execute().count()
         sb ++= s"===== $name (executed final plan, sf=$sfDir) =====\n"
         sb ++= qe.explainString(FormattedMode).split("== Initial Plan ==")(0)

@@ -1,8 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json (the static oracles and the ones the queries
+  * returned), for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -32,10 +35,11 @@ object Verify {
     // correctness record (the r7 driver artifact silently omitted six
     // crashed queries): collect name → exception and write errors.json
     // alongside the dumps for compare_oracle.py to merge as err entries.
-    val errors = Seq.newBuilder[(String, String)]
+    val errors = Map.newBuilder[String, String]
+    val returned = Map.newBuilder[String, String]
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
+        val Checked(df, oracle) = fn(spark, sfDir)
         // hashed-output typing rule (FIXTURES.md, r12): the driver's
         // hasher canonicalizes DECIMAL values differently from the
         // local DuckDB (the r11 4-query breach) — fail the dump loudly
@@ -46,39 +50,29 @@ object Verify {
             "hashed outputs must be BIGINT/STRING/DATE/DOUBLE " +
             "(FIXTURES.md typing rule)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        oracle.foreach(returned += name -> _)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors += name -> s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}"
       }
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // negative-// audit over the FULL oracle map, run-then-dump oracles
-    // included (OracleAuditSpec can only see the static subset): a
-    // version-unportable division must fail the dump loudly, not ship
-    // to the driver's DuckDB (the r10 stats_ols/ts_autocorr breach)
-    val violations = OracleAudit.auditAll(SparkEntry.oracleSql)
+    // negative-// audit over every static oracle plus the ones the
+    // queries returned: a version-unportable division must fail the
+    // dump loudly, not ship to the driver's DuckDB (the r10
+    // stats_ols/ts_autocorr breach)
+    val returnedOracles = returned.result()
+    val violations = OracleAudit.auditAll(SparkEntry.oracleSql ++ returnedOracles)
     if (violations.nonEmpty)
       throw new IllegalStateException(
         "negative-division oracle audit failed (FIXTURES.md negative-// " +
           "rule):\n" + violations.mkString("\n"))
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.result()
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    // Jackson escapes quotes, backslashes and every control char, so the
+    // driver's json.load reads any builder-authored SQL
+    val oracles = SparkEntry.oracleSql.filter(kv => keep(kv._1)) ++ returnedOracles
+    val json = new ObjectMapper()
+    json.writeValue(new File(s"$outDir/oracle_sql.json"), oracles.asJava)
+    json.writeValue(new File(s"$outDir/errors.json"), errors.result().asJava)
     spark.stop()
   }
 }

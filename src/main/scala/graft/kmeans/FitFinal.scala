@@ -35,10 +35,10 @@ import graft.sources.{Memo, Tables}
   * so those (cluster_id, n) outputs are cross-pinned by the
   * oracle-checked sizes here.
   *
-  * The oracle SQL depends on the data (the fitted state), so it is
-  * generated AFTER the queries run: `graft.Verify` executes every query
-  * first, then dumps [[graft.SparkEntry.oracleSql]], by which time
-  * [[last]] holds the frozen state for the verified sf directory.
+  * The oracle SQL depends on the data (the fitted state): each query
+  * renders it from the frozen fit stored under its own (sfDir,
+  * variant) key — [[summaryOracle]] / [[assignOracle]] — right after
+  * the fit it used, so the literals always match that call's directory.
   */
 object FitFinal {
 
@@ -77,13 +77,9 @@ object FitFinal {
     def claimsConvergence: Boolean = res.converged
   }
 
-  /** Frozen fits keyed by (sfDir, variant). The parameterless
-    * [[oracleSqls]] dumps the slice of the most recently looked-up
-    * directory (`cache.lastKey`); concurrent fits or a second sf
-    * directory in the same JVM can never drop a variant or pair
-    * literals with the wrong directory — the worst a racing lookup can
-    * do is flip WHICH complete directory gets dumped, matching Verify's
-    * one-directory-per-run contract. */
+  /** Frozen fits keyed by (sfDir, variant): every oracle reads the
+    * entry of its own directory, so several sf directories in one JVM
+    * never share literals. */
   private val cache = new Memo[(String, String), Frozen]("kmeans_fit")
 
   /** The frozen fit for (sfDir, variant), built once. */
@@ -194,83 +190,61 @@ object FitFinal {
         "rid")
   }
 
-  /** Frozen-state oracles for `sfDir`, straight from the memo —
-    * present only once the fit has run in this JVM for the variant
-    * (Verify's dump ordering guarantees that); absent otherwise so a
-    * partial dev run degrades to the rows-only check instead of
-    * emitting stale literals. */
-  def oracleSqlsFor(sfDir: String): Map[String, String] =
-    render(cache.entries.collect { case ((d, v), f) if d == sfDir => v -> f })
+  /** DuckDB twin of [[finalSummary]] over the fit frozen for (`sfDir`,
+    * `variant`): the stop-rule replay rides along exactly when the
+    * summary carries the `converged` claim. The fit must have run in
+    * this JVM (`IllegalStateException` otherwise). */
+  def summaryOracle(sfDir: String, variant: String = "fit"): String = {
+    val f = cache.stored((sfDir, variant))
+    summarySql(f, variants(variant)._2, withDelta = f.claimsConvergence)
+  }
 
-  /** Parameterless variant for the [[graft.SparkEntry.oracleSql]]
-    * contract: dumps the most recently verified directory's slice. */
-  def oracleSqls: Map[String, String] =
-    cache.lastKey.map(k => oracleSqlsFor(k._1)).getOrElse(Map.empty)
+  /** DuckDB twin of [[finalAssign]] over the same frozen fit. */
+  def assignOracle(sfDir: String, variant: String = "fit"): String =
+    assignSql(cache.stored((sfDir, variant)))
 
-  /** Frozen converged 'fit' centroids (sorted by cid) for the most
-    * recently verified directory — shared with
-    * [[graft.operators.Dedup.semanticDedup]], whose oracle must carry
-    * the exact same literals. Same run-then-dump contract as
-    * [[oracleSqls]]: present only after the fit ran in this JVM. */
-  def frozenFitCentroids: Option[Array[(Int, Array[Double])]] =
-    cache.lastKey.flatMap(k => cache.get((k._1, "fit"))).map(_.res.centroids.sortBy(_._1))
+  /** Frozen 'fit' centroids (sorted by cid) of `sfDir` — shared with
+    * [[graft.operators.Dedup.semanticDedup]]'s oracle, which must carry
+    * the exact same literals. */
+  private[graft] def frozenCentroids(sfDir: String): Array[Array[Double]] =
+    cents(cache.stored((sfDir, "fit")).res)
 
-  private def render(byVariant: Map[String, Frozen]): Map[String, String] =
-    byVariant match {
-    case m if m.isEmpty => Map.empty
-    case byVariant =>
-      def assign(key: String) =
-        s"""d AS (SELECT p.$key, c.cid, list_distance(p.v, c.c) AS dist
-           |       FROM pts p CROSS JOIN cents c),
-           |a AS (SELECT $key, cid, dist FROM (
-           |        SELECT $key, cid, dist,
-           |               row_number() OVER (PARTITION BY $key ORDER BY dist, cid) AS rn
-           |        FROM d) WHERE rn = 1)""".stripMargin
-      def summarySql(f: Frozen, cfg: RefKMeans.Config, withDelta: Boolean): String = {
-        val (pts, key) = ptsSql(f)
-        val deltaCtes = if (!withDelta) "" else
-          s""",
-             |l AS (SELECT a.cid, generate_subscripts(p.v, 1) - 1 AS dim, unnest(p.v) AS x
-             |      FROM a JOIN pts p USING ($key)),
-             |m AS (SELECT cid, dim, sum(x) / count(*) AS mean FROM l GROUP BY cid, dim),
-             |c0 AS (SELECT cid, generate_subscripts(c, 1) - 1 AS dim, unnest(c) AS x FROM cents),
-             |disp AS (SELECT c0.cid,
-             |                sqrt(sum((coalesce(m.mean, c0.x) - c0.x)
-             |                       * (coalesce(m.mean, c0.x) - c0.x))) AS disp
-             |         FROM c0 LEFT JOIN m USING (cid, dim) GROUP BY c0.cid),
-             |delta AS (SELECT sum(disp) / ${cfg.k} AS delta FROM disp)""".stripMargin
-        val convergedCol = if (!withDelta) "" else
-          s""",
-             |       CAST((SELECT delta FROM delta) < ${cfg.deltaThreshold} AS BIGINT) AS converged""".stripMargin
-        s"""WITH $pts, ${centsSql(f.res)},
-           |${assign(key)}$deltaCtes
-           |SELECT CAST(a.cid AS BIGINT) AS cluster_id, count(*) AS n,
-           |       round(sum(a.dist * a.dist), 6) AS wcss$convergedCol
-           |FROM a GROUP BY a.cid ORDER BY cluster_id""".stripMargin
-      }
-      def assignSql(f: Frozen): String = {
-        val (pts, key) = ptsSql(f)
-        s"""WITH $pts, ${centsSql(f.res)},
-           |${assign(key)}
-           |SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id
-           |FROM a ORDER BY vec_id""".stripMargin
-      }
-      byVariant.flatMap {
-        case ("fit", f) => Map(
-          "kmeans_fit_final" -> summarySql(f, Cfg, withDelta = true),
-          "kmeans_fit_assign" -> assignSql(f))
-        case ("pp", f) => Map(
-          "kmeans_fit_pp_final" -> summarySql(f, CfgPP, withDelta = true))
-        case ("lineitem", f) => Map(
-          "kmeans_fit_lineitem_final" ->
-            summarySql(f, CfgLineitem, withDelta = f.claimsConvergence))
-        case ("ts", f) => Map(
-          "ts_cluster_final" ->
-            summarySql(f, graft.operators.TimeSeries.ClusterCfg,
-              withDelta = f.claimsConvergence))
-        case ("mllib", f) => Map(
-          "kmeans_mllib_final" -> summarySql(f, Cfg, withDelta = false))
-        case _ => Map.empty[String, String]
-      }
+  private def assign(key: String) =
+    s"""d AS (SELECT p.$key, c.cid, list_distance(p.v, c.c) AS dist
+       |       FROM pts p CROSS JOIN cents c),
+       |a AS (SELECT $key, cid, dist FROM (
+       |        SELECT $key, cid, dist,
+       |               row_number() OVER (PARTITION BY $key ORDER BY dist, cid) AS rn
+       |        FROM d) WHERE rn = 1)""".stripMargin
+
+  private def summarySql(f: Frozen, cfg: RefKMeans.Config, withDelta: Boolean): String = {
+    val (pts, key) = ptsSql(f)
+    val deltaCtes = if (!withDelta) "" else
+      s""",
+         |l AS (SELECT a.cid, generate_subscripts(p.v, 1) - 1 AS dim, unnest(p.v) AS x
+         |      FROM a JOIN pts p USING ($key)),
+         |m AS (SELECT cid, dim, sum(x) / count(*) AS mean FROM l GROUP BY cid, dim),
+         |c0 AS (SELECT cid, generate_subscripts(c, 1) - 1 AS dim, unnest(c) AS x FROM cents),
+         |disp AS (SELECT c0.cid,
+         |                sqrt(sum((coalesce(m.mean, c0.x) - c0.x)
+         |                       * (coalesce(m.mean, c0.x) - c0.x))) AS disp
+         |         FROM c0 LEFT JOIN m USING (cid, dim) GROUP BY c0.cid),
+         |delta AS (SELECT sum(disp) / ${cfg.k} AS delta FROM disp)""".stripMargin
+    val convergedCol = if (!withDelta) "" else
+      s""",
+         |       CAST((SELECT delta FROM delta) < ${cfg.deltaThreshold} AS BIGINT) AS converged""".stripMargin
+    s"""WITH $pts, ${centsSql(f.res)},
+       |${assign(key)}$deltaCtes
+       |SELECT CAST(a.cid AS BIGINT) AS cluster_id, count(*) AS n,
+       |       round(sum(a.dist * a.dist), 6) AS wcss$convergedCol
+       |FROM a GROUP BY a.cid ORDER BY cluster_id""".stripMargin
+  }
+
+  private def assignSql(f: Frozen): String = {
+    val (pts, key) = ptsSql(f)
+    s"""WITH $pts, ${centsSql(f.res)},
+       |${assign(key)}
+       |SELECT vec_id, CAST(cid AS BIGINT) AS cluster_id
+       |FROM a ORDER BY vec_id""".stripMargin
   }
 }

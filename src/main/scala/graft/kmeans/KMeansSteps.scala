@@ -3,6 +3,7 @@ package graft.kmeans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checked
 import graft.functions.VectorOps._
 import graft.sources.Tables
 
@@ -235,31 +236,6 @@ object KMeansSteps {
     (out.result(), cents)
   }
 
-  /** Per-(sfDir, query) trajectory record: rounds actually run plus the
-    * head CTEs (`pts`/`cents0`) the oracle replay starts from — read by
-    * the oracle generator (Verify dumps oracle SQL after the queries
-    * run, so the record is always present for the verified directory).
-    * The head is captured at run time because some feature spaces embed
-    * data-dependent literals (the lineitem standardization stats). */
-  private case class TrajState(rounds: Int, head: String, k: Int,
-      threshold: Double, scale: Int)
-  private val trajStates =
-    scala.collection.concurrent.TrieMap.empty[(String, String), TrajState]
-
-  /** Most recently run trajectory's sf directory (selects the
-    * parameterless oracles' slice — same convention as
-    * [[FitFinal.oracleSqls]]). */
-  @volatile private var trajectoryLastDir: Option[String] = None
-
-  /** All trajectory oracles for the most recently verified sf directory,
-    * keyed by query name — the [[graft.SparkEntry.oracleSql]] contract. */
-  def trajectoryOracles: Map[String, String] =
-    trajectoryLastDir.map { dir =>
-      trajStates.collect { case ((d, q), st) if d == dir =>
-        q -> trajectorySql(st)
-      }.toMap
-    }.getOrElse(Map.empty)
-
   /** The FULL Lloyd trajectory, oracle-checkable: the rounded-fixpoint
     * loop of [[fitSteps]] run from the literal seeds until the stop rule
     * fires (delta < `threshold`), emitting one row per round —
@@ -284,14 +260,14 @@ object KMeansSteps {
     * shuffle-map stage registers its outputs on the first job, and every
     * later collect on the same lineage skips the map stage. */
   def fitTrajectory(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.01, cap: Int = 60): DataFrame = {
+      threshold: Double = 0.01, cap: Int = 60): Checked = {
     val cs0 = centroids(spark, sfDir)
     val head =
       s"""WITH pts AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |cents0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS c
          |           FROM embeddings WHERE vec_id < ${cs0.length})""".stripMargin
     fitTrajectoryOf(spark, pts(spark, sfDir), cs0, threshold, cap, 6,
-      requireConverge = true, sfDir, "kmeans_fit_trajectory", head)
+      requireConverge = true, "kmeans_fit_trajectory", head)
   }
 
   /** The FULL standardized-lineitem Lloyd trajectory — the cap-exit fit
@@ -319,7 +295,7 @@ object KMeansSteps {
     * cap with `stopped = 0` throughout, each round's POST-update delta
     * (`master.go:212-231`) independently recomputed by the replay. */
   def lineitemTrajectory(spark: SparkSession, sfDir: String, k: Int = 5,
-      cap: Int = 20): DataFrame = {
+      cap: Int = 20): Checked = {
     val stats = Tables.lineitemStatsShared(spark, sfDir)
     // reads the scratch-materialized std points (r16 shared build; the
     // oracle head still embeds the stats literals, identical doubles)
@@ -338,7 +314,7 @@ object KMeansSteps {
          |               $proj AS v FROM lineitem),
          |${seedsValuesCte(seeds)}""".stripMargin
     fitTrajectoryOf(spark, p, seeds, threshold = 0.01 * 1e6, cap = cap,
-      scale = 0, requireConverge = false, sfDir,
+      scale = 0, requireConverge = false,
       "kmeans_fit_lineitem_trajectory", head)
   }
 
@@ -366,13 +342,13 @@ object KMeansSteps {
     * is visible round by round.
     *
     * `headSql` is the oracle's data-dependent prologue (CTEs `pts` and
-    * `cents0`), captured at run time because some spaces embed fitted
-    * literals (the lineitem standardization stats); the replay itself is
-    * generated after Verify runs the query ([[trajectoryOracles]]). */
+    * `cents0`; some spaces embed fitted literals, the lineitem
+    * standardization stats); the returned oracle appends the replay of
+    * exactly the rounds this call ran ([[trajectorySql]]). */
   def fitTrajectoryOf(spark: SparkSession, points: DataFrame,
       cs0: Seq[(Int, Array[Double])], threshold: Double, cap: Int,
-      scale: Int, requireConverge: Boolean, sfDir: String,
-      queryName: String, headSql: String): DataFrame = {
+      scale: Int, requireConverge: Boolean,
+      queryName: String, headSql: String): Checked = {
     val d = cs0.head._2.length
     val k = cs0.length
     val p = points.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -415,20 +391,18 @@ object KMeansSteps {
     } finally p.unpersist(blocking = false)
     require(stopped || !requireConverge,
       s"$queryName: no convergence within $cap rounds")
-    trajStates.put((sfDir, queryName),
-      TrajState(iter, headSql, k, threshold, scale))
-    trajectoryLastDir = Some(sfDir)
-    spark.createDataFrame(rows.result())
-      .toDF("iter", "delta", "stopped")
-      .orderBy("iter")
+    Checked(
+      spark.createDataFrame(rows.result()).toDF("iter", "delta", "stopped").orderBy("iter"),
+      Some(trajectorySql(iter, headSql, k, threshold, scale)))
   }
 
-  /** DuckDB replay of a recorded trajectory — one mechanical CTE chain
-    * per round (assign → recenter → `scale`-rounded means + carry → new
-    * centroid lists → delta) appended to the recorded head, with every
+  /** DuckDB replay of a `rounds`-round trajectory — one mechanical CTE
+    * chain per round (assign → recenter → `scale`-rounded means + carry
+    * → new centroid lists → delta) appended to `head`, with every
     * round's delta AND stop flag independently recomputed. */
-  private def trajectorySql(st: TrajState): String = {
-    val perRound = (1 to st.rounds).map { r =>
+  private def trajectorySql(rounds: Int, head: String, k: Int,
+      threshold: Double, scale: Int): String = {
+    val perRound = (1 to rounds).map { r =>
       val prev = s"cents${r - 1}"
       s"""a$r AS (SELECT vec_id, cid FROM (
          |        SELECT p.vec_id, c.cid,
@@ -437,19 +411,19 @@ object KMeansSteps {
          |        FROM pts p CROSS JOIN $prev c) WHERE rn = 1),
          |l$r AS (SELECT a.cid, generate_subscripts(p.v, 1) - 1 AS dim, unnest(p.v) AS x
          |       FROM a$r a JOIN pts p USING (vec_id)),
-         |m$r AS (SELECT cid, dim, round(sum(x) / count(*), ${st.scale}) AS mean
+         |m$r AS (SELECT cid, dim, round(sum(x) / count(*), $scale) AS mean
          |       FROM l$r GROUP BY cid, dim),
          |p$r AS (SELECT cid, generate_subscripts(c, 1) - 1 AS dim, unnest(c) AS x FROM $prev),
          |n$r AS (SELECT p.cid, p.dim, coalesce(m.mean, p.x) AS nx
          |       FROM p$r p LEFT JOIN m$r m USING (cid, dim)),
          |cents$r AS MATERIALIZED (SELECT cid, list(nx ORDER BY dim) AS c FROM n$r GROUP BY cid),
-         |d$r AS (SELECT round(sum(list_distance(a.c, b.c)) / ${st.k}, 6) AS delta
+         |d$r AS (SELECT round(sum(list_distance(a.c, b.c)) / $k, 6) AS delta
          |       FROM $prev a JOIN cents$r b USING (cid))""".stripMargin
     }.mkString(",\n")
-    val rowsSql = (1 to st.rounds).map { r =>
-      s"SELECT CAST($r AS BIGINT) AS iter, delta, CAST(delta < ${st.threshold} AS BIGINT) AS stopped FROM d$r"
+    val rowsSql = (1 to rounds).map { r =>
+      s"SELECT CAST($r AS BIGINT) AS iter, delta, CAST(delta < $threshold AS BIGINT) AS stopped FROM d$r"
     }.mkString("\nUNION ALL ")
-    s"${st.head},\n$perRound\n$rowsSql\nORDER BY iter"
+    s"$head,\n$perRound\n$rowsSql\nORDER BY iter"
   }
 
   /** Within-cluster sum of squares per cluster (the elbow-curve metric):

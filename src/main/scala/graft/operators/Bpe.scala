@@ -20,9 +20,9 @@ import graft.sources.Tables
   *    table is VOCABULARY-sized (thousands of rows at any corpus scale,
   *    one Spark aggregate), so training collects it to the driver — the
   *    [[graft.kmeans.FitFinal]] bounded-materialization convention — and
-  *    the learned vocab freezes into a per-corpus registry
-  *    (run-then-dump, so the DuckDB oracle replays the encode from
-  *    identical literals).
+  *    the learned vocab freezes into a per-corpus memo, so the DuckDB
+  *    oracle ([[oracleSqls]]) replays the encode from identical
+  *    literals.
   *
   *  - '''Encode''' (distributed): deterministic greedy LONGEST-MATCH
   *    scan against the frozen vocab (the WordPiece-style inference pass;
@@ -154,8 +154,8 @@ object Bpe {
       .getOrElse(1000000L), Int.MaxValue - 1L)
 
   /** Frozen tokenizer for `sfDir` — trained once per JVM from the
-    * corpus word-frequency table, shared by the queries and the oracle
-    * dump (run-then-dump contract). Driver-side under
+    * corpus word-frequency table, shared by the queries and their
+    * oracles ([[oracleSqls]]). Driver-side under
     * [[TrainLocalMaxWords]] distinct words, Spark-side above — the two
     * paths learn IDENTICAL models (spec-pinned: same pair counts, same
     * (count desc, pair asc) argmax, same left-to-right merge). */
@@ -413,51 +413,52 @@ object Bpe {
        |        FROM steps WHERE id IS NOT NULL GROUP BY w)""".stripMargin
   }
 
-  /** Run-then-dump DuckDB twins of [[encode]] and [[packSequencesBpe]]
-    * — carry the frozen vocab the queries actually used; empty until a
-    * BPE query ran in this JVM. */
-  def oracleSqls: Map[String, String] =
-    reg.lastKey.flatMap(reg.get).map { m =>
-      Map(
-        "bpe_encode" ->
-          s"""WITH RECURSIVE ${encOracleCtes(m)},
-             |tok AS (SELECT doc_id, pos, w FROM (
-             |          SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS w
-             |          FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
-             |        WHERE w <> '')
-             |SELECT t.doc_id, count(*) AS n_words,
-             |       CAST(sum(e.n_tok) AS BIGINT) AS n_tokens,
-             |       md5(string_agg(e.ids, ' ' ORDER BY t.pos)) AS tok_hash
-             |FROM tok t JOIN enc e USING (w)
-             |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-        "bpe_roundtrip" ->
-          s"""WITH RECURSIVE ${encOracleCtes(m)},
-             |dec AS (SELECT s.w, string_agg(v.tok, '' ORDER BY s.step) AS d
-             |        FROM steps s JOIN vocab v ON v.id = s.id
-             |        GROUP BY s.w),
-             |tok AS (SELECT doc_id, w FROM (
-             |          SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-             |        WHERE w <> '')
-             |SELECT t.doc_id, count(*) AS n_words,
-             |       CAST(sum(CASE WHEN d.d = t.w THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
-             |       CAST(sum(length(t.w)) AS BIGINT) AS n_chars,
-             |       CAST(sum(length(d.d)) AS BIGINT) AS n_chars_dec
-             |FROM tok t JOIN dec d USING (w)
-             |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
-        "pack_sequences_bpe" ->
-          s"""WITH RECURSIVE ${encOracleCtes(m)},
-             |tok AS (SELECT doc_id, w FROM (
-             |          SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-             |        WHERE w <> ''),
-             |dt AS (SELECT doc_id, sum(e.n_tok) AS n_tok
-             |       FROM tok JOIN enc e USING (w) GROUP BY doc_id),
-             |c AS (SELECT doc_id, doc_id % 8 AS shard, n_tok,
-             |             sum(n_tok) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-             |                              ROWS UNBOUNDED PRECEDING) AS cum
-             |      FROM dt)
-             |SELECT CAST(shard AS BIGINT) AS shard,
-             |       CAST((cum - n_tok) // $BpeBudget AS BIGINT) AS seq,
-             |       count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-             |FROM c GROUP BY 1, 2 ORDER BY shard, seq""".stripMargin)
-    }.getOrElse(Map.empty)
+  /** DuckDB twins of [[encode]], [[roundtrip]] and [[packSequencesBpe]]
+    * by query name — they carry the vocab frozen for `sfDir`, the one
+    * the queries used (a BPE query must have run on `sfDir` in this
+    * JVM — `IllegalStateException` otherwise). */
+  def oracleSqls(sfDir: String): Map[String, String] = {
+    val m = reg.stored(sfDir)
+    Map(
+      "bpe_encode" ->
+        s"""WITH RECURSIVE ${encOracleCtes(m)},
+           |tok AS (SELECT doc_id, pos, w FROM (
+           |          SELECT doc_id, generate_subscripts(t, 1) - 1 AS pos, unnest(t) AS w
+           |          FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents))
+           |        WHERE w <> '')
+           |SELECT t.doc_id, count(*) AS n_words,
+           |       CAST(sum(e.n_tok) AS BIGINT) AS n_tokens,
+           |       md5(string_agg(e.ids, ' ' ORDER BY t.pos)) AS tok_hash
+           |FROM tok t JOIN enc e USING (w)
+           |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
+      "bpe_roundtrip" ->
+        s"""WITH RECURSIVE ${encOracleCtes(m)},
+           |dec AS (SELECT s.w, string_agg(v.tok, '' ORDER BY s.step) AS d
+           |        FROM steps s JOIN vocab v ON v.id = s.id
+           |        GROUP BY s.w),
+           |tok AS (SELECT doc_id, w FROM (
+           |          SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+           |        WHERE w <> '')
+           |SELECT t.doc_id, count(*) AS n_words,
+           |       CAST(sum(CASE WHEN d.d = t.w THEN 1 ELSE 0 END) AS BIGINT) AS n_ok,
+           |       CAST(sum(length(t.w)) AS BIGINT) AS n_chars,
+           |       CAST(sum(length(d.d)) AS BIGINT) AS n_chars_dec
+           |FROM tok t JOIN dec d USING (w)
+           |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
+      "pack_sequences_bpe" ->
+        s"""WITH RECURSIVE ${encOracleCtes(m)},
+           |tok AS (SELECT doc_id, w FROM (
+           |          SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+           |        WHERE w <> ''),
+           |dt AS (SELECT doc_id, sum(e.n_tok) AS n_tok
+           |       FROM tok JOIN enc e USING (w) GROUP BY doc_id),
+           |c AS (SELECT doc_id, doc_id % 8 AS shard, n_tok,
+           |             sum(n_tok) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
+           |                              ROWS UNBOUNDED PRECEDING) AS cum
+           |      FROM dt)
+           |SELECT CAST(shard AS BIGINT) AS shard,
+           |       CAST((cum - n_tok) // $BpeBudget AS BIGINT) AS seq,
+           |       count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS n_tokens
+           |FROM c GROUP BY 1, 2 ORDER BY shard, seq""".stripMargin)
+  }
 }

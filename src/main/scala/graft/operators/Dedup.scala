@@ -1147,9 +1147,8 @@ object Dedup {
   }
 
   /** [[semanticDedupScaled]] with the [[scaledK]] schedule — the
-    * `queries` entry. Trained centroids land in a registry so the
-    * oracle dump can carry the identical literals (run-then-dump, the
-    * [[graft.kmeans.FitFinal]] contract). */
+    * `queries` entry. Trained centroids are memoized per `sfDir`, so
+    * [[semanticScaledOracle]] carries the identical literals. */
   def semanticDedupAuto(spark: SparkSession, sfDir: String): DataFrame =
     semanticFromCentroids(spark, sfDir, scaledCentroids(spark, sfDir),
       threshold = 0.4)
@@ -1255,26 +1254,19 @@ object Dedup {
       .orderBy("vec_id")
   }
 
-  /** DuckDB oracles for [[semanticDedup]] and [[semanticDedupAuto]],
-    * carrying each pipeline's centroids as literals — same run-then-dump
-    * contract as [[graft.kmeans.FitFinal.oracleSqls]] (entries appear
-    * only after the corresponding query ran in this JVM). */
-  def semanticOracleSqls: Map[String, String] = {
-    val frozen = graft.kmeans.FitFinal.frozenFitCentroids
-      .map(cs => Map("dedup_semantic" -> semanticSql(cs.map(_._2))))
-      .getOrElse(Map.empty)
-    val scaled = scaledReg.lastKey.flatMap(scaledReg.get)
-      .map(cs => Map("dedup_semantic_scaled" -> semanticSql(cs)))
-      .getOrElse(Map.empty)
-    val recall = for {
-      f <- graft.kmeans.FitFinal.frozenFitCentroids
-      s <- scaledReg.lastKey.flatMap(scaledReg.get)
-    } yield Map(
-      "dedup_semantic_recall" -> recallSql(f.map(_._2), s),
-      "dedup_semantic_recall_sampled" ->
-        recallSql(f.map(_._2), s, keepMod = Some(5L)))
-    frozen ++ scaled ++ recall.getOrElse(Map.empty)
-  }
+  /** DuckDB twins of [[semanticDedup]], [[semanticDedupAuto]] and
+    * [[semanticRecall]] for `sfDir`, carrying the centroids the query
+    * used as literals: the frozen 'fit' of [[graft.kmeans.FitFinal]]
+    * and the memoized [[scaledCentroids]] (the query must have run in
+    * this JVM — `IllegalStateException` otherwise). */
+  def semanticOracle(sfDir: String): String =
+    semanticSql(graft.kmeans.FitFinal.frozenCentroids(sfDir))
+
+  def semanticScaledOracle(sfDir: String): String =
+    semanticSql(scaledReg.stored(sfDir))
+
+  def semanticRecallOracle(sfDir: String, keepMod: Option[Long] = None): String =
+    recallSql(graft.kmeans.FitFinal.frozenCentroids(sfDir), scaledReg.stored(sfDir), keepMod)
 
   private def centsValues(cs: Array[Array[Double]], name: String): String =
     cs.zipWithIndex.map { case (v, cid) =>

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checked
 import graft.sources.Tables
 
 /** Iterative graph analytics on DataFrames — the capability class the
@@ -208,13 +209,6 @@ object Graphs {
     * defines. */
   val PrTrajL1ThresholdPico = 10000000000L
 
-  // rounds the last pageRankTrajectory run executed per corpus — the
-  // run-then-dump registry the trajectory oracle replays (the LPA
-  // trajectory pattern)
-  private val prTrajReg =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-  @volatile private var prTrajLast: Option[String] = None
-
   /** CONVERGENCE trajectory of PageRank — the per-round delta signal
     * [[pageRank]]'s fixed 2 rounds lack (kcore peels to its fixpoint
     * and LPA has [[labelPropTrajectory]]; this closes the last
@@ -241,13 +235,14 @@ object Graphs {
     * the driver sees two longs per round, the kcore/LPA trajectory
     * traffic. Lineage truncates per round via `localCheckpoint` with
     * eager release, checkpoints coalesced to the measured node count
-    * with a core-count floor ([[sizedPartsFloor]]). The DuckDB twin replays the executed rounds as
-    * chained materialized CTEs and differences consecutive states on
-    * the identical pico grid (run-then-dump). */
+    * with a core-count floor ([[sizedPartsFloor]]). The returned DuckDB
+    * twin replays the rounds this call executed as chained materialized
+    * CTEs and differences consecutive states on the identical pico
+    * grid ([[prTrajOracleSqlFor]]). */
   def pageRankTrajectory(spark: SparkSession, sfDir: String,
       maxRounds: Int = PrTrajMaxRounds,
       thresholdPico: Long = PrTrajL1ThresholdPico,
-      bcastMaxNodes: Long = GraphBroadcastMaxNodes): DataFrame = {
+      bcastMaxNodes: Long = GraphBroadcastMaxNodes): Checked = {
     import spark.implicits._
     val (n, nodes, eDeg) = rankGraph(spark, sfDir, bcastMaxNodes)
     val pico = (c: Column) => round(c * lit(1e12), 0).cast("long")
@@ -287,25 +282,15 @@ object Graphs {
     }
     releaseLocalCheckpoint(ranks)
     val out = rows.result()
-    prTrajReg(sfDir) = out.length
-    prTrajLast = Some(sfDir)
-    out.toDF("round", "n_changed", "l1_delta_pico").orderBy("round")
+    Checked(out.toDF("round", "n_changed", "l1_delta_pico").orderBy("round"),
+      Some(prTrajOracleSqlFor(out.length)))
   }
-
-  /** Run-then-dump DuckDB twin of [[pageRankTrajectory]] — replays the
-    * executed round count as chained materialized CTEs (every rank
-    * state is referenced by the next round AND its diff — the
-    * FIXTURES.md chain-CTE rule), differencing consecutive states on
-    * the identical pico grid; empty until the trajectory ran in this
-    * JVM. */
-  def pageRankTrajectoryOracles: Map[String, String] =
-    prTrajLast.flatMap(prTrajReg.get).map { rounds =>
-      Map("graph_pagerank_trajectory" -> prTrajOracleSqlFor(rounds))
-    }.getOrElse(Map.empty)
 
   /** The replayed-rounds trajectory SQL — ONE source for the absolute
     * and relative-threshold twins (both replay exactly the rounds the
-    * query executed; the stop rule itself never crosses engines). */
+    * call executed; the stop rule itself never crosses engines). Every
+    * rank state is referenced by the next round AND its diff, so each
+    * is a materialized CTE (the FIXTURES.md chain-CTE rule). */
   private def prTrajOracleSqlFor(rounds: Int): String = {
     val chain = (1 to rounds).map { i =>
       s"""c$i AS MATERIALIZED (SELECT e.b AS v, sum(r${i - 1}.r / deg.d) AS s
@@ -347,11 +332,6 @@ object Graphs {
     * (VERDICT r15 task 4). */
   val PrTrajRelDivisor = 3L
 
-  // rounds the last relative-threshold trajectory executed per corpus
-  private val prTrajRelReg =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-  @volatile private var prTrajRelLast: Option[String] = None
-
   /** RELATIVE-threshold convergence trajectory of PageRank — the
     * [[pageRankTrajectory]] loop with the stop rule
     * `PrTrajRelDivisor · l1_r < l1_1` (or `l1_r = 0`): movement
@@ -367,7 +347,7 @@ object Graphs {
   def pageRankTrajectoryRel(spark: SparkSession, sfDir: String,
       maxRounds: Int = PrTrajMaxRounds,
       divisor: Long = PrTrajRelDivisor,
-      bcastMaxNodes: Long = GraphBroadcastMaxNodes): DataFrame = {
+      bcastMaxNodes: Long = GraphBroadcastMaxNodes): Checked = {
     import spark.implicits._
     val (n, nodes, eDeg) = rankGraph(spark, sfDir, bcastMaxNodes)
     val pico = (c: Column) => round(c * lit(1e12), 0).cast("long")
@@ -403,18 +383,10 @@ object Graphs {
     }
     releaseLocalCheckpoint(ranks)
     val out = rows.result()
-    prTrajRelReg(sfDir) = out.length
-    prTrajRelLast = Some(sfDir)
-    out.toDF("round", "n_changed", "l1_delta_pico").orderBy("round")
+    // the absolute twin's replay, cut at the rounds the relative rule ran
+    Checked(out.toDF("round", "n_changed", "l1_delta_pico").orderBy("round"),
+      Some(prTrajOracleSqlFor(out.length)))
   }
-
-  /** Run-then-dump DuckDB twin of [[pageRankTrajectoryRel]] — the same
-    * replayed-rounds chain as the absolute twin, cut at the rounds the
-    * relative rule actually executed. */
-  def pageRankTrajectoryRelOracles: Map[String, String] =
-    prTrajRelLast.flatMap(prTrajRelReg.get).map { rounds =>
-      Map("graph_pagerank_trajectory_rel" -> prTrajOracleSqlFor(rounds))
-    }.getOrElse(Map.empty)
 
   /** Partition count sized to a MEASURED row count — for iterative
     * loops whose state shrinks (peels, frontiers): a `localCheckpoint`
@@ -1001,13 +973,6 @@ object Graphs {
     * explicit 0 row (the [[kcore]] device). */
   val LpaTrajMaxRounds = 10
 
-  // rounds the last labelPropTrajectory run executed per corpus — the
-  // run-then-dump registry the trajectory oracle replays (the Bpe
-  // frozen-vocab pattern: Verify runs queries first, dumps SQL after)
-  private val lpaTrajReg =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-  @volatile private var lpaTrajLast: Option[String] = None
-
   /** CONVERGENCE trajectory of synchronous LPA — the signal
     * [[labelProp]]'s fixed rounds lack (a community-detection user
     * needs to know whether labels stabilized): one row per round,
@@ -1025,12 +990,11 @@ object Graphs {
     * exactly the kcore trajectory traffic. Lineage truncates per
     * round via `localCheckpoint` with eager release, checkpoints
     * coalesced to the measured node count with a core-count floor
-    * ([[sizedPartsFloor]]). The DuckDB twin replays the executed rounds as chained
-    * materialized CTEs and differences consecutive states identically
-    * (run-then-dump: the chain length is the round count this corpus
-    * actually ran). */
+    * ([[sizedPartsFloor]]). The returned DuckDB twin replays the rounds
+    * this call executed as chained CTEs and differences consecutive
+    * states identically ([[labelPropTrajectorySql]]). */
   def labelPropTrajectory(spark: SparkSession, sfDir: String,
-      maxRounds: Int = LpaTrajMaxRounds): DataFrame = {
+      maxRounds: Int = LpaTrajMaxRounds): Checked = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     val e = coOrderEdges(spark, sfDir).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1070,9 +1034,8 @@ object Graphs {
     releaseLocalCheckpoint(labels)
     e.unpersist(blocking = false)
     val out = rows.result()
-    lpaTrajReg(sfDir) = out.length
-    lpaTrajLast = Some(sfDir)
-    out.toDF("round", "n_changed", "changed_id_sum").orderBy("round")
+    Checked(out.toDF("round", "n_changed", "changed_id_sum").orderBy("round"),
+      Some(labelPropTrajectorySql(out.length)))
   }
 
   /** Newman modularity of the round-[[LpaRounds]] LPA partition — the
@@ -1336,7 +1299,7 @@ object Graphs {
     * both partitions. */
   /** The Q numerator CTE block for the partition labeled by `lbl`,
     * suffixed so several pricings coexist in one WITH chain — ONE
-    * source for [[louvainMoveOracle]] and [[louvainOracles]] so the
+    * source for [[louvainMoveOracle]] and [[louvainSql]] so the
     * replays cannot drift (the pqCbCte convention). Expects `e0`,
     * `deg`, `m` CTEs in scope. */
   private def qPriceCtes(lbl: String, s: String): String =
@@ -1400,12 +1363,6 @@ object Graphs {
     * emitted record says whether the fixpoint was reached). */
   val LouvainPassCap = 6
 
-  // move passes the last louvain run executed per corpus — the
-  // run-then-dump registry its oracle replays (the trajectory pattern)
-  private val louvainReg =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
-  @volatile private var louvainLast: Option[String] = None
-
   /** FULL Louvain on the part co-order graph (Blondel et al., J. Stat.
     * Mech. 2008) — [[louvainMove]]'s one pass extended to the real
     * algorithm (VERDICT r15 task 3): synchronous local-move passes run
@@ -1458,7 +1415,7 @@ object Graphs {
     * + three one-row pricings. Lineage truncates per pass via
     * `localCheckpoint` with eager release. */
   def louvain(spark: SparkSession, sfDir: String, rounds: Int = LpaRounds,
-      passCap: Int = LouvainPassCap): DataFrame = {
+      passCap: Int = LouvainPassCap): Checked = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     val e = coOrderEdges(spark, sfDir).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1562,99 +1519,96 @@ object Graphs {
     val accepted = numCoarsen >= numFix
     val (nComm, numFinal) =
       if (accepted) (nCommCoarsen, numCoarsen) else (nCommFix, numFix)
-    louvainReg(sfDir) = passes
-    louvainLast = Some(sfDir)
-    Seq((nNodes, passes.toLong, movedLast, if (accepted) 1L else 0L, nComm,
+    val df = Seq((nNodes, passes.toLong, movedLast, if (accepted) 1L else 0L, nComm,
       qPpm(numStart, m), qPpm(numFix, m), qPpm(numFinal, m)))
       .toDF("n_nodes", "n_passes", "n_moved_last", "coarsen_accepted",
         "n_communities", "q_start_ppm", "q_fixpoint_ppm", "q_final_ppm")
+    Checked(df, Some(louvainSql(rounds, passes)))
   }
 
-  /** Run-then-dump DuckDB twin of [[louvain]] — replays the LPA
-    * rounds, the EXECUTED move-pass count as chained pick CTEs
+  /** DuckDB twin of [[louvain]] — replays the `rounds` LPA rounds, the
+    * `passes` move passes the call executed as chained pick CTEs
     * (identical gain rational and (g desc, nl) tie order), the
     * contraction, the weighted singleton pass, and the three HUGEINT
-    * Q pricings; empty until the query ran in this JVM. */
-  def louvainOracles(rounds: Int = LpaRounds): Map[String, String] =
-    louvainLast.flatMap(louvainReg.get).map { passes =>
-      // per-pass CTE block: pick$p / lv$p from lv${p-1} (lv0 = l$rounds)
-      val passCtes = (1 to passes).map { p =>
-        val prev = if (p == 1) s"l$rounds" else s"lv${p - 1}"
-        s"""pdc$p AS (SELECT l.lbl, CAST(sum(deg.d) AS HUGEINT) AS dc
-           |       FROM deg JOIN $prev l ON deg.a = l.v GROUP BY l.lbl),
-           |kic$p AS (SELECT u.a, l.lbl AS nl, CAST(count(*) AS HUGEINT) AS k
-           |        FROM u JOIN $prev l ON u.b = l.v GROUP BY u.a, l.lbl),
-           |cand$p AS (SELECT a, nl, max(k) AS k FROM (
-           |           SELECT a, nl, k FROM kic$p
-           |           UNION ALL SELECT v AS a, lbl AS nl, CAST(0 AS HUGEINT) AS k
-           |           FROM $prev) GROUP BY a, nl),
-           |gain$p AS (SELECT c.a, c.nl, l.lbl,
-           |           4 * (SELECT m FROM m) * c.k
-           |           - 2 * deg.d * (dq.dc - CASE WHEN c.nl = l.lbl
-           |                                       THEN deg.d ELSE CAST(0 AS HUGEINT) END) AS g
-           |         FROM cand$p c JOIN deg ON deg.a = c.a
-           |           JOIN $prev l ON l.v = c.a
-           |           JOIN pdc$p dq ON dq.lbl = c.nl),
-           |pick$p AS MATERIALIZED (SELECT a, nl, lbl FROM (
-           |          SELECT a, nl, lbl,
-           |                 row_number() OVER (PARTITION BY a ORDER BY g DESC, nl) AS rn
-           |          FROM gain$p) WHERE rn = 1),
-           |lv$p AS MATERIALIZED (SELECT a AS v, nl AS lbl FROM pick$p)""".stripMargin
-      }.mkString(",\n")
-      val fix = s"lv$passes"
-      Map("graph_louvain" ->
-        s"""WITH $lpaOracleBase,
-           |${lpaOracleRounds(rounds)},
-           |m AS (SELECT CAST(count(*) AS HUGEINT) AS m FROM e0),
-           |deg AS (SELECT a, CAST(count(*) AS HUGEINT) AS d FROM u GROUP BY a),
-           |$passCtes,
-           |${qPriceCtes(s"l$rounds", "s")},
-           |${qPriceCtes(fix, "f")},
-           |ce AS MATERIALIZED (
-           |  SELECT LEAST(la.lbl, lb.lbl) AS ca, GREATEST(la.lbl, lb.lbl) AS cb,
-           |         CAST(count(*) AS HUGEINT) AS w
-           |  FROM e0 JOIN $fix la ON e0.a = la.v JOIN $fix lb ON e0.b = lb.v
-           |  GROUP BY 1, 2),
-           |ucb AS (SELECT ca AS a, cb AS b, w FROM ce WHERE ca <> cb
-           |        UNION ALL SELECT cb AS a, ca AS b, w FROM ce WHERE ca <> cb),
-           |degc AS (SELECT l.lbl AS a, CAST(sum(deg.d) AS HUGEINT) AS d
-           |         FROM deg JOIN $fix l ON deg.a = l.v GROUP BY l.lbl),
-           |kicc AS (SELECT a, b AS nl, CAST(sum(w) AS HUGEINT) AS k
-           |         FROM ucb GROUP BY a, b),
-           |candc AS (SELECT a, nl, max(k) AS k FROM (
-           |            SELECT a, nl, k FROM kicc
-           |            UNION ALL SELECT a AS a, a AS nl, CAST(0 AS HUGEINT) AS k
-           |            FROM degc) GROUP BY a, nl),
-           |gainc AS (SELECT c.a, c.nl,
-           |            4 * (SELECT m FROM m) * c.k
-           |            - 2 * dg.d * (dcc.d - CASE WHEN c.nl = c.a
-           |                                       THEN dg.d ELSE CAST(0 AS HUGEINT) END) AS g
-           |          FROM candc c JOIN degc dg ON dg.a = c.a
-           |            JOIN degc dcc ON dcc.a = c.nl),
-           |pickc AS MATERIALIZED (SELECT a, nl FROM (
-           |           SELECT a, nl,
-           |                  row_number() OVER (PARTITION BY a ORDER BY g DESC, nl) AS rn
-           |           FROM gainc) WHERE rn = 1),
-           |lz AS MATERIALIZED (SELECT l.v, pc.nl AS lbl
-           |                    FROM $fix l JOIN pickc pc ON pc.a = l.lbl),
-           |${qPriceCtes("lz", "z")},
-           |mv AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-           |              CAST(coalesce(sum(CASE WHEN nl <> lbl THEN 1 ELSE 0 END), 0)
-           |                AS BIGINT) AS n_moved_last
-           |       FROM pick$passes),
-           |ncf AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tf),
-           |ncz AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tz)
-           |SELECT mv.n_nodes, CAST($passes AS BIGINT) AS n_passes, mv.n_moved_last,
-           |       CAST(CASE WHEN qz.num >= qf.num THEN 1 ELSE 0 END AS BIGINT)
-           |         AS coarsen_accepted,
-           |       CASE WHEN qz.num >= qf.num THEN ncz.n ELSE ncf.n END
-           |         AS n_communities,
-           |       ${qPpmSql("qs")} AS q_start_ppm,
-           |       ${qPpmSql("qf")} AS q_fixpoint_ppm,
-           |       CASE WHEN qz.num >= qf.num THEN ${qPpmSql("qz")}
-           |            ELSE ${qPpmSql("qf")} END AS q_final_ppm
-           |FROM mv, ncf, ncz, qs, qf, qz""".stripMargin)
-    }.getOrElse(Map.empty)
+    * Q pricings. */
+  private def louvainSql(rounds: Int, passes: Int): String = {
+    // per-pass CTE block: pick$p / lv$p from lv${p-1} (lv0 = l$rounds)
+    val passCtes = (1 to passes).map { p =>
+      val prev = if (p == 1) s"l$rounds" else s"lv${p - 1}"
+      s"""pdc$p AS (SELECT l.lbl, CAST(sum(deg.d) AS HUGEINT) AS dc
+         |       FROM deg JOIN $prev l ON deg.a = l.v GROUP BY l.lbl),
+         |kic$p AS (SELECT u.a, l.lbl AS nl, CAST(count(*) AS HUGEINT) AS k
+         |        FROM u JOIN $prev l ON u.b = l.v GROUP BY u.a, l.lbl),
+         |cand$p AS (SELECT a, nl, max(k) AS k FROM (
+         |           SELECT a, nl, k FROM kic$p
+         |           UNION ALL SELECT v AS a, lbl AS nl, CAST(0 AS HUGEINT) AS k
+         |           FROM $prev) GROUP BY a, nl),
+         |gain$p AS (SELECT c.a, c.nl, l.lbl,
+         |           4 * (SELECT m FROM m) * c.k
+         |           - 2 * deg.d * (dq.dc - CASE WHEN c.nl = l.lbl
+         |                                       THEN deg.d ELSE CAST(0 AS HUGEINT) END) AS g
+         |         FROM cand$p c JOIN deg ON deg.a = c.a
+         |           JOIN $prev l ON l.v = c.a
+         |           JOIN pdc$p dq ON dq.lbl = c.nl),
+         |pick$p AS MATERIALIZED (SELECT a, nl, lbl FROM (
+         |          SELECT a, nl, lbl,
+         |                 row_number() OVER (PARTITION BY a ORDER BY g DESC, nl) AS rn
+         |          FROM gain$p) WHERE rn = 1),
+         |lv$p AS MATERIALIZED (SELECT a AS v, nl AS lbl FROM pick$p)""".stripMargin
+    }.mkString(",\n")
+    val fix = s"lv$passes"
+    s"""WITH $lpaOracleBase,
+       |${lpaOracleRounds(rounds)},
+       |m AS (SELECT CAST(count(*) AS HUGEINT) AS m FROM e0),
+       |deg AS (SELECT a, CAST(count(*) AS HUGEINT) AS d FROM u GROUP BY a),
+       |$passCtes,
+       |${qPriceCtes(s"l$rounds", "s")},
+       |${qPriceCtes(fix, "f")},
+       |ce AS MATERIALIZED (
+       |  SELECT LEAST(la.lbl, lb.lbl) AS ca, GREATEST(la.lbl, lb.lbl) AS cb,
+       |         CAST(count(*) AS HUGEINT) AS w
+       |  FROM e0 JOIN $fix la ON e0.a = la.v JOIN $fix lb ON e0.b = lb.v
+       |  GROUP BY 1, 2),
+       |ucb AS (SELECT ca AS a, cb AS b, w FROM ce WHERE ca <> cb
+       |        UNION ALL SELECT cb AS a, ca AS b, w FROM ce WHERE ca <> cb),
+       |degc AS (SELECT l.lbl AS a, CAST(sum(deg.d) AS HUGEINT) AS d
+       |         FROM deg JOIN $fix l ON deg.a = l.v GROUP BY l.lbl),
+       |kicc AS (SELECT a, b AS nl, CAST(sum(w) AS HUGEINT) AS k
+       |         FROM ucb GROUP BY a, b),
+       |candc AS (SELECT a, nl, max(k) AS k FROM (
+       |            SELECT a, nl, k FROM kicc
+       |            UNION ALL SELECT a AS a, a AS nl, CAST(0 AS HUGEINT) AS k
+       |            FROM degc) GROUP BY a, nl),
+       |gainc AS (SELECT c.a, c.nl,
+       |            4 * (SELECT m FROM m) * c.k
+       |            - 2 * dg.d * (dcc.d - CASE WHEN c.nl = c.a
+       |                                       THEN dg.d ELSE CAST(0 AS HUGEINT) END) AS g
+       |          FROM candc c JOIN degc dg ON dg.a = c.a
+       |            JOIN degc dcc ON dcc.a = c.nl),
+       |pickc AS MATERIALIZED (SELECT a, nl FROM (
+       |           SELECT a, nl,
+       |                  row_number() OVER (PARTITION BY a ORDER BY g DESC, nl) AS rn
+       |           FROM gainc) WHERE rn = 1),
+       |lz AS MATERIALIZED (SELECT l.v, pc.nl AS lbl
+       |                    FROM $fix l JOIN pickc pc ON pc.a = l.lbl),
+       |${qPriceCtes("lz", "z")},
+       |mv AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes,
+       |              CAST(coalesce(sum(CASE WHEN nl <> lbl THEN 1 ELSE 0 END), 0)
+       |                AS BIGINT) AS n_moved_last
+       |       FROM pick$passes),
+       |ncf AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tf),
+       |ncz AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tz)
+       |SELECT mv.n_nodes, CAST($passes AS BIGINT) AS n_passes, mv.n_moved_last,
+       |       CAST(CASE WHEN qz.num >= qf.num THEN 1 ELSE 0 END AS BIGINT)
+       |         AS coarsen_accepted,
+       |       CASE WHEN qz.num >= qf.num THEN ncz.n ELSE ncf.n END
+       |         AS n_communities,
+       |       ${qPpmSql("qs")} AS q_start_ppm,
+       |       ${qPpmSql("qf")} AS q_fixpoint_ppm,
+       |       CASE WHEN qz.num >= qf.num THEN ${qPpmSql("qz")}
+       |            ELSE ${qPpmSql("qf")} END AS q_final_ppm
+       |FROM mv, ncf, ncz, qs, qf, qz""".stripMargin
+  }
 
   /** DuckDB twin of [[modularity]] — identical rounds, identical
     * integer rational in HUGEINT. */
@@ -1681,23 +1635,21 @@ object Graphs {
        |                      // (4 * (SELECT m FROM m) * (SELECT m FROM m))) AS BIGINT) END AS q_ppm
        |FROM s""".stripMargin
 
-  /** Run-then-dump DuckDB twin of [[labelPropTrajectory]] — replays the
-    * executed round count as chained CTEs, differencing consecutive
-    * label states; empty until the trajectory ran in this JVM. */
-  def labelPropTrajectoryOracles: Map[String, String] =
-    lpaTrajLast.flatMap(lpaTrajReg.get).map { rounds =>
-      val diffs = (1 to rounds).map { i =>
-        s"""SELECT CAST($i AS BIGINT) AS round,
-           |       CAST(count(*) AS BIGINT) AS n_changed,
-           |       CAST(coalesce(sum(a.v), 0) AS BIGINT) AS changed_id_sum
-           |FROM l$i a JOIN l${i - 1} b ON a.v = b.v AND a.lbl <> b.lbl""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      Map("graph_label_prop_trajectory" ->
-        s"""WITH $lpaOracleBase,
-           |${lpaOracleRounds(rounds)}
-           |$diffs
-           |ORDER BY round""".stripMargin)
-    }.getOrElse(Map.empty)
+  /** DuckDB twin of a `rounds`-round [[labelPropTrajectory]] — replays
+    * the rounds as chained CTEs, differencing consecutive label
+    * states. */
+  private def labelPropTrajectorySql(rounds: Int): String = {
+    val diffs = (1 to rounds).map { i =>
+      s"""SELECT CAST($i AS BIGINT) AS round,
+         |       CAST(count(*) AS BIGINT) AS n_changed,
+         |       CAST(coalesce(sum(a.v), 0) AS BIGINT) AS changed_id_sum
+         |FROM l$i a JOIN l${i - 1} b ON a.v = b.v AND a.lbl <> b.lbl""".stripMargin
+    }.mkString("\nUNION ALL\n")
+    s"""WITH $lpaOracleBase,
+       |${lpaOracleRounds(rounds)}
+       |$diffs
+       |ORDER BY round""".stripMargin
+  }
 
   /** DuckDB twin of [[pageRank]] (iters = 2, topN = 20). */
   def pageRankOracle: String =

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *
   * Contract: the BUILD is declared rows-only (a sequential insertion
   * graph is not SQL-replayable — the raw-fit convention), but its
-  * search RESULTS freeze into a run-then-dump registry, so the recall
+  * search RESULTS freeze into a per-parameterization memo, so the recall
   * legs of `ann_recall`/`ann_recall_sampled` hold the graph accountable
   * against the DuckDB-replayed brute-force truth: the frozen pairs ride
   * the oracle as literals and the overlap with the exact top-k is
@@ -264,23 +264,21 @@ object Hnsw {
         StructField("n_id", LongType), StructField("cos", DoubleType))))
   }
 
-  /** `SELECT q_id, n_id FROM (VALUES …)` over the frozen pairs for the
-    * given twin — present only after [[topK]] ran in this JVM
-    * (run-then-dump). Consumed by the recall oracles as the hnsw leg. */
+  /** `SELECT q_id, n_id FROM (VALUES …)` over the pairs frozen for the
+    * given twin — [[topK]] must have run with these parameters in this
+    * JVM (`IllegalStateException` otherwise). Consumed by the recall
+    * oracles as the hnsw leg. */
   def pairsSql(sfDir: String, keepMod: Option[Long], nQueries: Int,
-      k: Int = 5, efSearch: Int = EfSearch): Option[String] =
-    // an empty frozen row set would render `VALUES ` — a SQL syntax
-    // error, not an empty relation (ADVICE r10): degrade to None so the
-    // recall oracle falls back to the rows-only check like the other
-    // run-then-dump legs
-    reg.get((sfDir, keepMod, nQueries, k, efSearch)).filter(_.nonEmpty).map { rows =>
-      val vals = rows.map(t => s"(${t._1}, ${t._3})").mkString(", ")
-      s"SELECT q_id, n_id FROM (VALUES $vals) t(q_id, n_id)"
+      k: Int = 5, efSearch: Int = EfSearch): String =
+    reg.stored((sfDir, keepMod, nQueries, k, efSearch)) match {
+      // `VALUES` with no rows is a syntax error, not an empty relation
+      // (ADVICE r10)
+      case rows if rows.isEmpty =>
+        "SELECT CAST(NULL AS BIGINT) AS q_id, CAST(NULL AS BIGINT) AS n_id WHERE false"
+      case rows =>
+        val vals = rows.map(t => s"(${t._1}, ${t._3})").mkString(", ")
+        s"SELECT q_id, n_id FROM (VALUES $vals) t(q_id, n_id)"
     }
-
-  /** Last sfDir a [[topK]] ran against (the run-then-dump key the
-    * oracle builder uses, mirroring the PQ registry convention). */
-  def lastRunDir: Option[String] = reg.lastKey.map(_._1)
 
   /** Recall-vs-search-effort curve (VERDICT r15 task 5): recall@k of
     * the NSW search at [[EfSearchLow]] and [[EfSearch]] against the
@@ -316,32 +314,28 @@ object Hnsw {
         round(col("n_hit_hi") * lit(1.0) / col("n_brute"), 6).as("recall_hi"))
   }
 
-  /** Run-then-dump oracle for [[efRecall]] — the SQL-replayed brute
-    * truth re-counted against BOTH legs' frozen pairs; present only
-    * after both searches ran in this JVM. `bruteSql` is the exact
-    * brute-force top-k SQL the `ann_recall` oracle uses. */
+  /** DuckDB twin of [[efRecall]] — the SQL-replayed brute truth
+    * re-counted against BOTH legs' pairs frozen under `sfDir`.
+    * `bruteSql` is the exact brute-force top-k SQL the `ann_recall`
+    * oracle uses. */
   def efRecallOracleSql(sfDir: String, bruteSql: String,
       nQueries: Int = 10, k: Int = 5,
-      efLo: Int = EfSearchLow, efHi: Int = EfSearch): Option[String] =
-    for {
-      loSql <- pairsSql(sfDir, None, nQueries, k, efLo)
-      hiSql <- pairsSql(sfDir, None, nQueries, k, efHi)
-    } yield
-      s"""WITH brute AS ($bruteSql),
-         |b AS (SELECT q_id, n_id FROM brute),
-         |lo AS ($loSql),
-         |hi AS ($hiSql),
-         |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_brute FROM b),
-         |hl AS (SELECT CAST(count(*) AS BIGINT) AS n_hit_lo
-         |       FROM b WHERE EXISTS (SELECT 1 FROM lo
-         |                            WHERE lo.q_id = b.q_id AND lo.n_id = b.n_id)),
-         |hh AS (SELECT CAST(count(*) AS BIGINT) AS n_hit_hi
-         |       FROM b WHERE EXISTS (SELECT 1 FROM hi
-         |                            WHERE hi.q_id = b.q_id AND hi.n_id = b.n_id))
-         |SELECT nb.n_brute,
-         |       CAST($efLo AS BIGINT) AS ef_lo, hl.n_hit_lo,
-         |       round(hl.n_hit_lo * 1.0 / nb.n_brute, 6) AS recall_lo,
-         |       CAST($efHi AS BIGINT) AS ef_hi, hh.n_hit_hi,
-         |       round(hh.n_hit_hi * 1.0 / nb.n_brute, 6) AS recall_hi
-         |FROM nb, hl, hh""".stripMargin
+      efLo: Int = EfSearchLow, efHi: Int = EfSearch): String =
+    s"""WITH brute AS ($bruteSql),
+       |b AS (SELECT q_id, n_id FROM brute),
+       |lo AS (${pairsSql(sfDir, None, nQueries, k, efLo)}),
+       |hi AS (${pairsSql(sfDir, None, nQueries, k, efHi)}),
+       |nb AS (SELECT CAST(count(*) AS BIGINT) AS n_brute FROM b),
+       |hl AS (SELECT CAST(count(*) AS BIGINT) AS n_hit_lo
+       |       FROM b WHERE EXISTS (SELECT 1 FROM lo
+       |                            WHERE lo.q_id = b.q_id AND lo.n_id = b.n_id)),
+       |hh AS (SELECT CAST(count(*) AS BIGINT) AS n_hit_hi
+       |       FROM b WHERE EXISTS (SELECT 1 FROM hi
+       |                            WHERE hi.q_id = b.q_id AND hi.n_id = b.n_id))
+       |SELECT nb.n_brute,
+       |       CAST($efLo AS BIGINT) AS ef_lo, hl.n_hit_lo,
+       |       round(hl.n_hit_lo * 1.0 / nb.n_brute, 6) AS recall_lo,
+       |       CAST($efHi AS BIGINT) AS ef_hi, hh.n_hit_hi,
+       |       round(hh.n_hit_hi * 1.0 / nb.n_brute, 6) AS recall_hi
+       |FROM nb, hl, hh""".stripMargin
 }

@@ -460,9 +460,8 @@ object Pipeline {
   }
 
   /** (total docs, Z = Σ_g sqrt(n_g) folded in sorted-lang order) for
-    * `sfDir` — registry-backed so the oracle dump replays the exact
-    * literals the plan used (run-then-dump, the
-    * [[graft.kmeans.FitFinal]] contract). */
+    * `sfDir` — memoized so the oracles replay the exact literals the
+    * plan used ([[frozenTempStats]]). */
   private def tempStats(spark: SparkSession, sfDir: String): (Long, Double) =
     tempReg(sfDir) {
       val counts = Tables(spark, sfDir, "documents")
@@ -474,32 +473,31 @@ object Pipeline {
     }
   private val tempReg = new graft.sources.Memo[String, (Long, Double)]("tempstats")
 
+  /** The (n, Z) literals frozen for `sfDir` — for oracle builders
+    * outside this object. A temperature-rated query
+    * ([[temperatureSample]], [[pipelineE2e]]) must have run on `sfDir`
+    * in this JVM (`IllegalStateException` otherwise). */
+  private[graft] def frozenTempStats(sfDir: String): (Long, Double) = tempReg.stored(sfDir)
+
   /** DuckDB twin of [[temperatureSample]] — identical expression order
     * in the rate arithmetic, with (n, z) frozen to the literals the plan
-    * used (`java.lang.Double.toString` is the shortest round-trip form,
-    * so DuckDB parses back the identical double). Run-then-dump:
-    * present only after the query ran in this JVM. */
-  def temperatureSampleOracles: Map[String, String] =
-    tempLiterals.map { case (n, z) =>
-      Map("sample_temperature" ->
-        s"""WITH d AS (SELECT doc_id, lang FROM documents),
-           |c AS (SELECT lang, count(*) AS n_g FROM d GROUP BY lang),
-           |rates AS (SELECT c.lang, c.n_g,
-           |                 least(1000, CAST(floor(round(1000.0 * ($n * 0.5)
-           |                   * (sqrt(c.n_g) / $z) / c.n_g, 6)) AS BIGINT)) AS keep_permille
-           |          FROM c),
-           |k AS (SELECT doc_id, lang, keep_permille, ${HashOps.wordHashSqlN(15)} AS hk
-           |      FROM (SELECT d.doc_id, d.lang, r.keep_permille, md5('temp:' || d.doc_id) AS m
-           |            FROM d JOIN rates r USING (lang)))
-           |SELECT doc_id, lang, keep_permille,
-           |       CAST(hk % 1000 < keep_permille AS BIGINT) AS kept
-           |FROM k ORDER BY doc_id""".stripMargin)
-    }.getOrElse(Map.empty)
-
-  /** Frozen (total docs, Z) literals of the last [[temperatureSample]] /
-    * [[pipelineE2e]] run — for oracle builders outside this object
-    * (run-then-dump; None until a temperature-rated query ran). */
-  def tempLiterals: Option[(Long, Double)] = tempReg.lastKey.flatMap(tempReg.get)
+    * used for `sfDir` (`java.lang.Double.toString` is the shortest
+    * round-trip form, so DuckDB parses back the identical double). */
+  def temperatureSampleOracle(sfDir: String): String = {
+    val (n, z) = frozenTempStats(sfDir)
+    s"""WITH d AS (SELECT doc_id, lang FROM documents),
+       |c AS (SELECT lang, count(*) AS n_g FROM d GROUP BY lang),
+       |rates AS (SELECT c.lang, c.n_g,
+       |                 least(1000, CAST(floor(round(1000.0 * ($n * 0.5)
+       |                   * (sqrt(c.n_g) / $z) / c.n_g, 6)) AS BIGINT)) AS keep_permille
+       |          FROM c),
+       |k AS (SELECT doc_id, lang, keep_permille, ${HashOps.wordHashSqlN(15)} AS hk
+       |      FROM (SELECT d.doc_id, d.lang, r.keep_permille, md5('temp:' || d.doc_id) AS m
+       |            FROM d JOIN rates r USING (lang)))
+       |SELECT doc_id, lang, keep_permille,
+       |       CAST(hk % 1000 < keep_permille AS BIGINT) AS kept
+       |FROM k ORDER BY doc_id""".stripMargin
+  }
 
   // -------------------------------------------------- composed E2E funnel
 
@@ -519,7 +517,7 @@ object Pipeline {
     * the exact keeper is min doc_id per identical text; MinHash losers
     * are each pair's doc_b over the FULL corpus pairs
     * ([[Dedup.minhashLSH]]'s exact output); temperature rates come from
-    * the frozen (n, Z) literals ([[temperatureSample]]'s registry).
+    * the frozen (n, Z) literals ([[temperatureSample]]'s memo).
     *
     * Scale shape: the base persists once; signals are one narrow
     * codegen pass + the md5-keyed keeper window; decontamination's

@@ -236,9 +236,8 @@ object Similarity {
       keepMod: Option[Long] = None): DataFrame =
     // materialized per parameterization: the standalone query and the
     // recall harness leg share one train+probe pass (r12 judge task 3).
-    // trainedCentroidsFor stays INSIDE the build — its frozen-state
-    // registration happens on whichever call builds first, in the same
-    // JVM the oracle builder later reads (run-then-dump convention)
+    // trainedCentroidsFor stays INSIDE the build, so a scratch hit
+    // skips the training
     graft.sources.Scratch.materialize(spark,
         s"ann_ivf_trained:$nQueries:$k:$nprobe:$keepMod:${graft.sources.Scratch.corpusKey(sfDir)}") {
       ivfTrainedTopKBuild(spark, sfDir, nQueries, k, nprobe, keepMod)
@@ -464,8 +463,8 @@ object Similarity {
       nQueries: Int = nQueriesDefault, k: Int = kDefault,
       rerank: Int = rerankDefault, keepMod: Option[Long] = None): DataFrame =
     // materialized per parameterization — standalone + recall leg share
-    // one encode+ADC pass per bench pass (r12 judge task 3); codebook
-    // freezing stays inside the build (run-then-dump, same JVM)
+    // one encode+ADC pass per bench pass (r12 judge task 3); the
+    // codebooks freeze inside the build ([[pqOracle]] reads them back)
     graft.sources.Scratch.materialize(spark,
         s"ann_pq:$nQueries:$k:$rerank:$keepMod:${graft.sources.Scratch.corpusKey(sfDir)}") {
       pqTopKBuild(spark, sfDir, nQueries, k, rerank, keepMod)
@@ -583,51 +582,52 @@ object Similarity {
     * training replay (CTE chain defining `pts` and `cents2(cid, c)`,
     * the `ann_ivf_trained` prefix); the frozen PQ codebooks, encode,
     * ADC grouping and both ranks come from the same string pieces as
-    * [[pqSqlFor]]. Empty until the PQ registry trained in this JVM
-    * (run-then-dump). k/nprobe/rerank are THREADED (same defaults as
-    * [[ivfPqTopK]]) so a non-default query call can be given a
-    * matching oracle instead of silently drifting (ADVICE r10). */
-  def ivfPqOracleSql(lloydPrefix: String, keepMod: Option[Long] = None,
+    * [[pqSqlFor]], read under (`sfDir`, `keepMod`) — the codebooks must
+    * have trained in this JVM (`IllegalStateException` otherwise).
+    * k/nprobe/rerank are THREADED (same defaults as [[ivfPqTopK]]) so a
+    * non-default query call can be given a matching oracle instead of
+    * silently drifting (ADVICE r10). */
+  def ivfPqOracleSql(sfDir: String, lloydPrefix: String, keepMod: Option[Long] = None,
       nQueries: Int = nQueriesDefault, k: Int = kDefault,
-      nprobe: Int = nprobeDefault, rerank: Int = rerankDefault): Option[String] =
-    pqLastDir.flatMap(d => pqReg.get((d, keepMod))).map { cbs =>
-      s"""WITH $lloydPrefix,
-         |p AS (SELECT vec_id, v FROM pts),
-         |${(0 until PQ_M).map(pqCbCte(cbs)).mkString(",\n")},
-         |$pqEncCtes,
-         |enc AS (SELECT p.vec_id, ${(0 until PQ_M).map(s => s"e$s.c$s").mkString(", ")}
-         |        FROM p $pqEncJoin),
-         |bkt AS (SELECT vec_id, cid AS bucket FROM (
-         |          SELECT p.vec_id, c.cid,
-         |                 row_number() OVER (PARTITION BY p.vec_id
-         |                   ORDER BY list_distance(p.v, c.c), c.cid) AS rn
-         |          FROM p CROSS JOIN cents2 c) WHERE rn = 1),
-         |q AS (SELECT vec_id AS q_id, v AS qv FROM p WHERE vec_id < $nQueries),
-         |probes AS (SELECT q_id, cid AS bucket FROM (
-         |             SELECT q.q_id, c.cid,
-         |                    row_number() OVER (PARTITION BY q.q_id
-         |                      ORDER BY list_distance(q.qv, c.c), c.cid) AS rn
-         |             FROM q CROSS JOIN cents2 c) WHERE rn <= $nprobe),
-         |sc AS (SELECT q.q_id, enc.vec_id AS n_id, $pqAdcExpr AS adc
-         |       FROM enc JOIN bkt USING (vec_id)
-         |       JOIN probes pr ON bkt.bucket = pr.bucket
-         |       JOIN q ON q.q_id = pr.q_id AND enc.vec_id <> q.q_id
-         |       $pqAdcJoins),
-         |cand AS (SELECT q_id, n_id FROM
-         |           (SELECT q_id, n_id,
-         |              row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rn FROM sc)
-         |         WHERE rn <= $rerank),
-         |s AS (SELECT c.q_id, c.n_id,
-         |             list_inner_product(qp.v, np.v) / (sqrt(list_inner_product(qp.v, qp.v)) * sqrt(list_inner_product(np.v, np.v))) AS cos
-         |      FROM cand c JOIN p qp ON qp.vec_id = c.q_id JOIN p np ON np.vec_id = c.n_id)
-         |SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, round(cos, 6) AS cos
-         |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn FROM s)
-         |WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
-    }
+      nprobe: Int = nprobeDefault, rerank: Int = rerankDefault): String = {
+    val cbs = pqReg.stored((sfDir, keepMod))
+    s"""WITH $lloydPrefix,
+       |p AS (SELECT vec_id, v FROM pts),
+       |${(0 until PQ_M).map(pqCbCte(cbs)).mkString(",\n")},
+       |$pqEncCtes,
+       |enc AS (SELECT p.vec_id, ${(0 until PQ_M).map(s => s"e$s.c$s").mkString(", ")}
+       |        FROM p $pqEncJoin),
+       |bkt AS (SELECT vec_id, cid AS bucket FROM (
+       |          SELECT p.vec_id, c.cid,
+       |                 row_number() OVER (PARTITION BY p.vec_id
+       |                   ORDER BY list_distance(p.v, c.c), c.cid) AS rn
+       |          FROM p CROSS JOIN cents2 c) WHERE rn = 1),
+       |q AS (SELECT vec_id AS q_id, v AS qv FROM p WHERE vec_id < $nQueries),
+       |probes AS (SELECT q_id, cid AS bucket FROM (
+       |             SELECT q.q_id, c.cid,
+       |                    row_number() OVER (PARTITION BY q.q_id
+       |                      ORDER BY list_distance(q.qv, c.c), c.cid) AS rn
+       |             FROM q CROSS JOIN cents2 c) WHERE rn <= $nprobe),
+       |sc AS (SELECT q.q_id, enc.vec_id AS n_id, $pqAdcExpr AS adc
+       |       FROM enc JOIN bkt USING (vec_id)
+       |       JOIN probes pr ON bkt.bucket = pr.bucket
+       |       JOIN q ON q.q_id = pr.q_id AND enc.vec_id <> q.q_id
+       |       $pqAdcJoins),
+       |cand AS (SELECT q_id, n_id FROM
+       |           (SELECT q_id, n_id,
+       |              row_number() OVER (PARTITION BY q_id ORDER BY adc, n_id) AS rn FROM sc)
+       |         WHERE rn <= $rerank),
+       |s AS (SELECT c.q_id, c.n_id,
+       |             list_inner_product(qp.v, np.v) / (sqrt(list_inner_product(qp.v, qp.v)) * sqrt(list_inner_product(np.v, np.v))) AS cos
+       |      FROM cand c JOIN p qp ON qp.vec_id = c.q_id JOIN p np ON np.vec_id = c.n_id)
+       |SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id, round(cos, 6) AS cos
+       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rn FROM s)
+       |WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
+  }
 
-  /** Registry-backed per-subspace codebooks for `sfDir` (trained once
-    * per JVM, deterministic) — shared by [[pqTopK]] and the oracle dump
-    * (run-then-dump, the [[graft.kmeans.FitFinal]] contract). */
+  /** Memoized per-subspace codebooks for `sfDir` (trained once per
+    * JVM, deterministic) — shared by [[pqTopK]], [[ivfPqTopK]] and
+    * their oracles. */
   private[operators] def pqCodebooks(spark: SparkSession, sfDir: String,
       keepMod: Option[Long] = None): Array[Array[Array[Double]]] =
     pqReg((sfDir, keepMod)) {
@@ -646,23 +646,17 @@ object Similarity {
 
   private val pqReg =
     new graft.sources.Memo[(String, Option[Long]), Array[Array[Array[Double]]]]("pq")
-  private def pqLastDir: Option[String] = pqReg.lastKey.map(_._1)
 
-  /** DuckDB oracle for [[pqTopK]] — frozen codebook literals, encode via
+  /** DuckDB oracle for [[pqTopK]] over the codebooks frozen under
+    * (`sfDir`, `keepMod`) — frozen codebook literals, encode via
     * per-subspace argmin, ADC with the identical per-subspace grouping,
-    * both ranking stages. Empty until the query ran in this JVM. */
-  def pqOracleSqls: Map[String, String] =
-    pqLastDir.flatMap(d => pqReg.get((d, None)))
-      .map(cbs => Map("ann_pq_topk" -> pqSqlFor(cbs, "", nQueriesDefault)))
-      .getOrElse(Map.empty)
-
-  /** Sampled-twin PQ SQL — codebooks trained on the vec_id % keepMod = 0
-    * corpus, replayed over the same restriction; consumed as a subquery
-    * inside `ann_recall_sampled`'s oracle. Empty until the sampled
-    * pipeline ran in this JVM (run-then-dump). */
-  def pqOracleSqlSampled(keepMod: Long, nQueries: Int): Option[String] =
-    pqLastDir.flatMap(d => pqReg.get((d, Some(keepMod))))
-      .map(cbs => pqSqlFor(cbs, s" WHERE vec_id % $keepMod = 0", nQueries))
+    * both ranking stages. The sampled twin (`keepMod`) replays over the
+    * same `vec_id % keepMod = 0` restriction; `ann_recall_sampled`'s
+    * oracle consumes it as a subquery. */
+  def pqOracle(sfDir: String, keepMod: Option[Long] = None,
+      nQueries: Int = nQueriesDefault): String =
+    pqSqlFor(pqReg.stored((sfDir, keepMod)),
+      keepMod.map(m => s" WHERE vec_id % $m = 0").getOrElse(""), nQueries)
 
   // ---- PQ oracle string pieces, shared by pqSqlFor and ivfPqOracleSql
   // (one source for codebook literals / encode CTEs / the ADC grouping,

@@ -194,7 +194,7 @@ object TimeSeries {
     * independently replayed (see
     * [[graft.kmeans.KMeansSteps.lineitemTrajectory]]'s contract note). */
   def clusterTrajectory(spark: SparkSession, sfDir: String,
-      stride: Int = 4): DataFrame = {
+      stride: Int = 4): graft.Checked = {
     val p = microPoints(spark, sfDir, stride)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = graft.kmeans.RefKMeans.seed(p,
@@ -205,7 +205,7 @@ object TimeSeries {
          |${graft.kmeans.KMeansSteps.seedsValuesCte(seeds)}""".stripMargin
     graft.kmeans.KMeansSteps.fitTrajectoryOf(spark, p, seeds,
       threshold = 0.01 * 1e6, cap = ClusterCfg.maxIter, scale = 0,
-      requireConverge = false, sfDir, "ts_cluster_trajectory", head)
+      requireConverge = false, "ts_cluster_trajectory", head)
   }
 
   /** Top-k nearest windows to the corpus's first window (lowest user id,

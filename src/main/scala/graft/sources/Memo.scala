@@ -32,7 +32,6 @@ import scala.jdk.CollectionConverters._
 final class Memo[K, V](name: String) {
   private final class Slot { @volatile var value: Option[V] = None }
   private val slots = new ConcurrentHashMap[K, Slot]
-  @volatile private var last: Option[K] = None
 
   /** The value for `key`, built (once) on first use. */
   def apply(key: K)(build: => V): V = {
@@ -47,26 +46,24 @@ final class Memo[K, V](name: String) {
       }
     }
     CacheProbe.record(s"$name:$key", built)(evict(key))
-    last = Some(key)
     v
   }
 
   /** The stored value for `key`, if any — a peek: no build, no record. */
   def get(key: K): Option[V] = Option(slots.get(key)).flatMap(_.value)
 
+  /** The stored value for `key` — a peek like [[get]] — for an oracle
+    * rendered from the value its own query call just built; a missing
+    * value is an error, never a silent fall-back. */
+  def stored(key: K): V = get(key).getOrElse(
+    throw new IllegalStateException(s"$name: no stored value for $key"))
+
   /** Every stored (key, value). */
   def entries: Map[K, V] =
     slots.asScala.flatMap { case (k, s) => s.value.map(k -> _) }.toMap
 
-  /** Key of the most recent successful lookup — the run-then-dump
-    * oracles read the directory that was last run from it. */
-  def lastKey: Option[K] = last
-
   /** Drop every entry, so each next lookup rebuilds. */
-  def clear(): Unit = {
-    slots.keySet.asScala.foreach(evict)
-    last = None
-  }
+  def clear(): Unit = slots.keySet.asScala.foreach(evict)
 
   /** Idempotent: evicting an absent key is a no-op. */
   private def evict(key: K): Unit =

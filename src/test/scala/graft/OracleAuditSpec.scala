@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate for the FIXTURES.md negative-// rule: no oracle may feed a
@@ -9,11 +10,30 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[OracleAudit.allow]] with a proof; anything new fails here. */
 class OracleAuditSpec extends AnyFunSuite {
 
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .getOrCreate()
+
+  val sf = "/root/testdata/sf0.001"
+
   test("every static oracle passes the negative-division audit") {
-    // the run-then-dump oracles (frozen centroids/codebooks/vocab) are
-    // absent before their queries run; Verify re-audits the FULL map at
-    // dump time, so they are gated on every verify run instead
+    // the data-dependent oracles (frozen centroids/codebooks/vocab,
+    // round counts) come back with their query's reply — audited below
     val violations = OracleAudit.auditAll(SparkEntry.oracleSql)
+    assert(violations.isEmpty,
+      "negative-division audit violations:\n" + violations.mkString("\n"))
+  }
+
+  test("every returned (data-dependent) oracle passes the audit on sf0.001") {
+    val returned = SparkEntry.dataOracleQueries.keySet.toSeq.sorted.map { name =>
+      val sql = SparkEntry.queries(name)(spark, sf).oracleSql
+      assert(sql.exists(_.trim.nonEmpty), s"$name returned no oracle")
+      name -> sql.get
+    }.toMap
+    val violations = OracleAudit.auditAll(returned)
     assert(violations.isEmpty,
       "negative-division audit violations:\n" + violations.mkString("\n"))
   }

@@ -74,7 +74,7 @@ class PlanGateSpec extends AnyFunSuite {
     val liveQueries = Set.newBuilder[String]
     val liveBuilds = Set.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = nljCount(PlanAudit.finalPlanString(fn(spark, sf)))
+      val n = nljCount(PlanAudit.finalPlanString(fn(spark, sf).df))
       if (n > 0) {
         if (declared.contains(name)) liveQueries += name
         else offenders += s"$name (nlj+cart=$n)"

@@ -18,7 +18,7 @@ class PlanSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution
+    SparkEntry.queries(name)(spark, sf).df.queryExecution
       .explainString(FormattedMode)
 
   /** Plan of a scratch-materialized operator's BUILD (the scan that

@@ -53,9 +53,13 @@ class FitFinalSpec extends AnyFunSuite {
     assert(replay < FitFinal.Cfg.deltaThreshold)
   }
 
+  /** Each query's returned oracle, keyed by query name. */
+  private def returnedOracles(names: String*): Map[String, String] =
+    names.flatMap(n => graft.SparkEntry.queries(n)(spark, sf).oracleSql.map(n -> _)).toMap
+
   test("oracle SQL is generated from the frozen centroids after a fit ran") {
     FitFinal.result(spark, sf)
-    val sqls = FitFinal.oracleSqls
+    val sqls = returnedOracles("kmeans_fit_final", "kmeans_fit_assign")
     assert(Set("kmeans_fit_final", "kmeans_fit_assign").subsetOf(sqls.keySet))
     // literals present: at least k rows of VALUES with full-precision doubles
     assert(sqls("kmeans_fit_final").contains("VALUES"))
@@ -65,7 +69,7 @@ class FitFinalSpec extends AnyFunSuite {
   test("cap-exit variant records its end state without a convergence claim") {
     val res = FitFinal.result(spark, sf, "lineitem")
     assert(!res.converged && res.iterations == FitFinal.CfgLineitem.maxIter)
-    val sqls = FitFinal.oracleSqls
+    val sqls = returnedOracles("kmeans_fit_lineitem_final")
     assert(!sqls("kmeans_fit_lineitem_final").contains("converged"))
     // the frozen standardization stats ride in the oracle's pts CTE
     assert(sqls("kmeans_fit_lineitem_final").contains("l_quantity -"))

@@ -168,11 +168,12 @@ class GraphsSpec extends AnyFunSuite {
     Seq((10L, 1L, in), (10L, 2L, in), (10L, 3L, in), (20L, 3L, in), (20L, 4L, in))
       .toDF("l_orderkey", "l_partkey", "l_shipdate")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val got = Graphs.labelPropTrajectory(spark, d).collect()
+    val traj = Graphs.labelPropTrajectory(spark, d)
+    val got = traj.df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got == Seq((1L, 4L, 10L), (2L, 2L, 5L), (3L, 0L, 0L)), s"got $got")
-    // the run registers its round count for the run-then-dump oracle
-    val sql = Graphs.labelPropTrajectoryOracles("graph_label_prop_trajectory")
+    // the run hands back the oracle for the round count it executed
+    val sql = traj.oracleSql.get
     assert(sql.contains("l3 AS") && !sql.contains("l4 AS"),
       "oracle chain must replay exactly the executed 3 rounds")
   }
@@ -189,7 +190,7 @@ class GraphsSpec extends AnyFunSuite {
       (30L, 8L, in), (30L, 9L, in))
       .toDF("l_orderkey", "l_partkey", "l_shipdate")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val got = Graphs.labelPropTrajectory(spark, d).collect()
+    val got = Graphs.labelPropTrajectory(spark, d).df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val cap = Graphs.LpaTrajMaxRounds
     val want = Seq((1L, 6L, 27L), (2L, 4L, 22L)) ++
@@ -208,7 +209,7 @@ class GraphsSpec extends AnyFunSuite {
       (40L, 7L, in))
       .toDF("l_orderkey", "l_partkey", "l_shipdate")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val traj = Graphs.labelPropTrajectory(spark, d).collect()
+    val traj = Graphs.labelPropTrajectory(spark, d).df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(traj == Seq((1L, 4L, 10L), (2L, 2L, 5L), (3L, 0L, 0L)), s"got $traj")
     def labels(rounds: Int): Map[Long, Long] = Graphs.lpaLabels(spark, d, rounds).collect()
@@ -293,7 +294,7 @@ class GraphsSpec extends AnyFunSuite {
       lbl = nxt
       if (changed.isEmpty) going = false else r += 1
     }
-    val got = Graphs.labelPropTrajectory(spark, sf).collect()
+    val got = Graphs.labelPropTrajectory(spark, sf).df.collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     assert(got == want.result(), s"got $got")
   }
@@ -361,14 +362,14 @@ class GraphsSpec extends AnyFunSuite {
       (30L, 8L, in), (30L, 9L, in))
       .toDF("l_orderkey", "l_partkey", "l_shipdate")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val r = Graphs.louvain(spark, d).collect().head
+    val r = Graphs.louvain(spark, d).df.collect().head
     assert((0 until 8).map(r.getLong) ==
       Seq(6L, Graphs.LouvainPassCap.toLong, 2L, 1L, 3L,
         140000L, 140000L, 140000L))
   }
 
   test("louvain on the fixture corpus: Q non-decreasing across levels, deterministic") {
-    def run() = Graphs.louvain(spark, sf).collect().head
+    def run() = Graphs.louvain(spark, sf).df.collect().head
     val r = run()
     val (nNodes, passes, movedLast, accepted, nComm, qs, qf, qz) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
@@ -425,7 +426,7 @@ class GraphsSpec extends AnyFunSuite {
         going = false
       else rd += 1
     }
-    val got = Graphs.pageRankTrajectoryRel(spark, sf).collect()
+    val got = Graphs.pageRankTrajectoryRel(spark, sf).df.collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     assert(got == want.result(), s"got $got")
     // the whole point of the variant (VERDICT r15 task 4): the
@@ -475,7 +476,7 @@ class GraphsSpec extends AnyFunSuite {
       rank = next
       if (l1 < Graphs.PrTrajL1ThresholdPico) going = false else rd += 1
     }
-    val got = Graphs.pageRankTrajectory(spark, sf).collect()
+    val got = Graphs.pageRankTrajectory(spark, sf).df.collect()
       .map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq
     assert(got == want.result(), s"got $got")
     // the damped iteration contracts L1 every round — the signal the
@@ -495,7 +496,7 @@ class GraphsSpec extends AnyFunSuite {
     assert(kc(0L) == kc(Graphs.GraphBroadcastMaxNodes))
     def pt(limit: Long) = Graphs.pageRankTrajectory(spark, sf,
         bcastMaxNodes = limit)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      .df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(pt(0L) == pt(Graphs.GraphBroadcastMaxNodes))
   }
 }

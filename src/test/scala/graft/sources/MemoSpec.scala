@@ -159,20 +159,13 @@ class MemoSpec extends AnyFunSuite {
     }
   }
 
-  test("lastKey tracks the last successful lookup") {
-    val memo = new Memo[String, Int]("memo-spec-last")
-    assert(memo.lastKey.isEmpty)
+  test("stored returns the value without a lookup and throws when absent") {
+    val memo = new Memo[String, Int]("memo-spec-stored")
+    val e = intercept[IllegalStateException](memo.stored("a"))
+    assert(e.getMessage.contains("memo-spec-stored") && e.getMessage.contains("a"))
     memo("a")(1)
-    assert(memo.lastKey.contains("a"))
-    memo("b")(2)
-    assert(memo.lastKey.contains("b"))
-    memo("a")(0) // a hit counts as a lookup
-    assert(memo.lastKey.contains("a"))
-    intercept[RuntimeException](memo("c")(throw new RuntimeException("no")))
-    assert(memo.lastKey.contains("a"))
-    // a peek is not a lookup
-    memo.get("b")
-    assert(memo.lastKey.contains("a"))
-    assert(memo.entries == Map("a" -> 1, "b" -> 2))
+    assert(memo.stored("a") == 1)
+    memo.clear()
+    intercept[IllegalStateException](memo.stored("a"))
   }
 }

@@ -37,7 +37,7 @@ class StreamBatchParitySpec extends AnyFunSuite {
   val SENTINEL_USER = 999999L
 
   private def batchQuery(name: String): DataFrame =
-    graft.SparkEntry.queries(name)(spark, sf)
+    graft.SparkEntry.queries(name)(spark, sf).df
 
   /** events dir: the real file plus THREE far-future sentinel batches
     * (2030-01/02/03 as raw nanos) so every real window finalizes and
