@@ -13,7 +13,7 @@ SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-$(mktemp -d /tmp/verify_out.XXXXXX)}
 cd /root/repo
 rm -rf "$OUT"
-sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | grep -vE "^\[info\]" | grep -vE "WARN|INFO" | head -20
+sbt -batch "runMain graft.Verify $SF $OUT" 2>&1 | grep -vE "^\[info\]" | grep -vE "WARN|INFO|\[verify\] begin " | head -20
 JSON_ARGS=()
 if [[ -z "${SPARK_GRAFT_ONLY:-}" && -z "${SPARK_GRAFT_SKIP:-}" && "$SF" == *sf0.01* ]]; then
   JSON_ARGS=(--json /root/repo/CORRECTNESS_LOCAL.json)

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,6 +36,10 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a failure outside the timed query (warm-up, snapshot, cache clear)
+    // does not stop the pass, but it is never silent
+    def warn(name: String, what: String, e: Throwable): Unit =
+      System.err.println(s"BENCH WARN $name: $what failed: ${e.getClass.getName}: ${e.getMessage}")
     // JIT/codegen warmup so the first measured queries aren't charged
     // for JVM cold start: exercise each hot operator CLASS once on
     // tiny data — scan + vector kernel, hash aggregate, window,
@@ -47,7 +52,7 @@ object Bench {
       graft.sources.Tables.points(spark, sfDir)
         .select(sum(graft.functions.VectorOps.dot(col("features"), col("features"))))
         .count()
-      spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      graft.sources.Tables(spark, sfDir, "lineitem").count()
       val t = spark.range(1000).select(col("id"), (col("id") % 7).as("k"),
         graft.functions.HashOps.wordHashN(col("id").cast("string"), 15).as("h"))
       t.groupBy("k").agg(sum("h").as("s"), count(lit(1)).as("n")).count()
@@ -71,7 +76,7 @@ object Bench {
           concat(lit("{\"k\": "), (col("id") % 100).cast("string"), lit("}")),
           js).getField("k").as("k"))
         .agg(sum("k")).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => warn("warm-up", "JIT warm-up", e) }
     // deterministic run order; clear leaked caches between queries so a
     // branched pipeline's persist() doesn't tax its successors
     // dev-loop subset filter (unset for the driver's full run)
@@ -99,7 +104,7 @@ object Bench {
     // late heavy queries 1.6-3× their standalone times; these snapshots
     // attribute it (PERF.md "sf10 shared-pass inflation").
     val snapshots = sys.env.get("SPARK_GRAFT_SNAPSHOTS").contains("1")
-    def dirFootprint(prefixes: Seq[String]): (Long, Long) = {
+    def dirFootprint(name: String, prefixes: Seq[String]): (Long, Long) = {
       val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
       var bytes = 0L; var files = 0L
       def walk(f: java.io.File): Unit =
@@ -107,7 +112,7 @@ object Bench {
         else Option(f.listFiles).foreach(_.foreach(walk))
       Option(tmp.listFiles).foreach(_.foreach { d =>
         if (prefixes.exists(d.getName.startsWith))
-          try walk(d) catch { case _: Throwable => }
+          try walk(d) catch { case e: Throwable => warn(name, s"snapshot walk of $d", e) }
       })
       (bytes, files)
     }
@@ -123,13 +128,13 @@ object Bench {
       // (public API; block DISK usage shows up in the tmp footprint below)
       val memUsed = spark.sparkContext.getExecutorMemoryStatus.values
         .map { case (max, free) => max - free }.sum / (1 << 20)
-      val (shufB, shufF) = dirFootprint(Seq("blockmgr-", "spark-"))
-      val (scrB, scrF) = dirFootprint(Seq("graft_scratch"))
+      val (shufB, shufF) = dirFootprint(name, Seq("blockmgr-", "spark-"))
+      val (scrB, scrF) = dirFootprint(name, Seq("graft_scratch"))
       println(s"""BENCH-SNAP {"q":"$name","heap_mb":$heapMb,"gc_ms":$gcMs,""" +
         s""""gc_n":$gcN,"rdds":$rdds,"storage_mem_mb":$memUsed,""" +
         s""""tmp_shuffle_mb":${shufB / (1 << 20)},"tmp_shuffle_files":$shufF,""" +
         s""""scratch_mb":${scrB / (1 << 20)},"scratch_files":$scrF}""")
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => warn(name, "snapshot", e) }
     // cold/warm floor provenance (VERDICT r15 task 1): every compute
     // cache (Scratch + the per-JVM registries) reports lookups to
     // CacheProbe while a query is timed. An observation that BUILT ≥ 1
@@ -156,7 +161,7 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       val acc = graft.sources.CacheProbe.drain()
-      try spark.catalog.clearCache() catch { case _: Throwable => }
+      try spark.catalog.clearCache() catch { case e: Throwable => warn(name, "clearCache", e) }
       snap(name)
       (dt, ok, acc)
     }
@@ -187,15 +192,21 @@ object Bench {
     // ("remeasured": {name: [first, rerun]}), so a genuinely
     // intermittent slowdown stays evidenced instead of being dropped.
     val repoDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
-    def readQueryMap(f: java.io.File): Map[String, Double] =
-      if (!f.isFile) Map.empty
+    // a prior record that is missing, unreadable, not JSON or lacks the
+    // key reads as empty: it only anchors the re-measure trigger
+    def readRecordKey(f: java.io.File, key: String)
+        : Seq[(String, com.fasterxml.jackson.databind.JsonNode)] =
+      if (!f.isFile) Nil
       else try {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        val it = root.get("queries").fields()
-        val b = Map.newBuilder[String, Double]
-        while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble }
-        b.result()
-      } catch { case _: Throwable => Map.empty[String, Double] }
+        Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f))
+          .flatMap(root => Option(root.get(key))).toSeq
+          .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
+      } catch { case e: java.io.IOException =>
+        System.err.println(s"BENCH WARN ignoring prior record $f: ${e.getClass.getName}: ${e.getMessage}")
+        Nil
+      }
+    def readQueryMap(f: java.io.File): Map[String, Double] =
+      readRecordKey(f, "queries").map { case (k, v) => k -> v.asDouble }.toMap
     val priorFile = new java.io.File(repoDir,
       s"BENCH_LAST_${new java.io.File(sfDir).getName}.json")
     val prior = readQueryMap(priorFile)
@@ -315,18 +326,7 @@ object Bench {
       // amortized warm read) — the convention PERF.md "cache-provenance
       // floors" documents.
       val priorProv: Map[String, String] =
-        if (!minFile.isFile) Map.empty
-        else try {
-          val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(minFile)
-          val c = root.get("cache")
-          if (c == null) Map.empty
-          else {
-            val it = c.fields()
-            val b = Map.newBuilder[String, String]
-            while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText }
-            b.result()
-          }
-        } catch { case _: Throwable => Map.empty[String, String] }
+        readRecordKey(minFile, "cache").map { case (k, v) => k -> v.asText }.toMap
       val thisRun = results.collect { case (k, v, true, _, p) => k -> (v, p) }.toMap
       val merged = (minRec.keySet ++ thisRun.keySet).toSeq.map { k =>
         val old = minRec.get(k)

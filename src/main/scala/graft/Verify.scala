@@ -38,6 +38,9 @@ object Verify {
     val errors = Map.newBuilder[String, String]
     val returned = Map.newBuilder[String, String]
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
+      // boundary line on the stream Spark logs to: every log line up to
+      // the next one belongs to this query
+      System.err.println(s"[verify] begin $name")
       try {
         val Checked(df, oracle) = fn(spark, sfDir)
         // hashed-output typing rule (FIXTURES.md, r12): the driver's

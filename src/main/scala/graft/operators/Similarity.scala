@@ -1370,7 +1370,7 @@ object Similarity {
   def ivfTopKLayout(spark: SparkSession, layout: String, sfDir: String,
       nQueries: Int = 10, k: Int = 5, nprobe: Int = 2): DataFrame = {
     val cs = KMeansSteps.centroids(spark, sfDir)
-    val corpus = spark.read.parquet(layout)
+    val corpus = Tables.parquet(spark, layout)
     val q = corpus.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qnrm"))
     val probes = q.select(col("q_id"), col("qv"), col("qnrm"),

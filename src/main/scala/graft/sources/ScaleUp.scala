@@ -85,7 +85,7 @@ object ScaleUp {
   }
 
   def scaleUp(spark: SparkSession, inDir: String, outDir: String, factor: Int): Unit = {
-    def in(t: String) = spark.read.parquet(s"$inDir/$t.parquet")
+    def in(t: String) = Tables(spark, inDir, t)
     def write(t: String, df: DataFrame): Unit = {
       // multi-file layout: one round-robin shuffle per table (a one-time
       // derivation cost) so downstream scans get file-count parallelism
@@ -94,7 +94,7 @@ object ScaleUp {
         dataBytes(s"$inDir/$t.parquet") * factor / TargetFileBytes)).toInt
       val out = if (nFiles > 1) df.repartition(nFiles) else df
       out.write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-      println(s"[scaleup] $t: ${spark.read.parquet(s"$outDir/$t.parquet").count()} " +
+      println(s"[scaleup] $t: ${Tables(spark, outDir, t).count()} " +
         s"rows in $nFiles file(s)")
     }
     def maxOf(df: DataFrame, c: String): Long =

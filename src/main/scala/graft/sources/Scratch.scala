@@ -120,6 +120,6 @@ object Scratch {
       buildLog.synchronized(buildLog += ((key, df)))
       p
     }
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
   }
 }

@@ -228,7 +228,7 @@ object Sinks {
       s"compact: output $out must not contain the input $dir")
     val bytes = fs.getContentSummary(p).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    spark.read.parquet(dir).repartition(n)
+    Tables.parquet(spark, dir).repartition(n)
       .write.mode("overwrite").parquet(out)
     n
   }

@@ -1,7 +1,21 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Readers for the driver-generated parquet tables (`/root/testdata/sf*`,
   * see TESTDATA.md) plus the reference's native headerless-CSV point format.
@@ -9,7 +23,7 @@ import org.apache.spark.sql.functions._
   * Reference ingest surface: CSV scan (`main/client/client.go:172-186`),
   * float64 cast projection with ordinal row ids (`utils/utils.go:21-42`),
   * dataset catalog listing (`main/client/client.go:151-170`). Here the scan
-  * is `spark.read.parquet`/`csv` (columnar, predicate-pushdown capable);
+  * is [[parquet]]/`csv` (columnar, predicate-pushdown capable);
   * row ids come from the source (`vec_id`) instead of the reference's
   * per-chunk ordinal quirk (ids restart every 100k rows,
   * `main/client/client.go:61-63,122`).
@@ -21,7 +35,80 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a parquet schema inside a 1-task job that reads one footer
+    * (`ParquetUtils.inferSchema` → `mergeSchemasInParallel`), even for a
+    * single file; on a 4-core host that job is 55–70 ms of a 0.34–0.36 s
+    * `fit_small` op (PERF.md). [[footerSchema]] reads the same footer on
+    * the driver and hands the read its schema. Anything it does not
+    * cover goes to `spark.read.parquet(path)` unchanged, so Spark's
+    * inference and Spark's errors stay the only error path. Keeps no
+    * state: an in-place rewrite is read with its new footer. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark would infer for `path` with `mergeSchema` off, or
+    * None where that takes Spark's own listing: a glob, a missing path,
+    * no data file, `spark.sql.parquet.mergeSchema` on, a subdirectory
+    * (`k=v` partitions), or a footer that does not read or convert.
+    * Picks the file inference touches (`_common_metadata`, else
+    * `_metadata`, else the first data file by path string, among the
+    * names Spark's file index lists) and converts its footer with the
+    * five session flags inference passes to its converter. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val files = visible(root.getFileSystem(hadoopConf), root)
+      if (files.exists(_.isDirectory)) None
+      else {
+        def named(n: String) = files.find(_.getPath.getName == n)
+        named("_common_metadata").orElse(named("_metadata"))
+          .orElse(files.find(f => !summary(f.getPath.getName)))
+          .map { f =>
+            val converter = new ParquetToSparkSchemaConverter(
+              assumeBinaryIsString = conf.isParquetBinaryAsString,
+              assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+              inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+              nanosAsLong = conf.legacyParquetNanosAsLong,
+              respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+            ParquetFileFormat.readSchemaFromFooter(
+              new Footer(f.getPath, footer(f, hadoopConf)), converter)
+          }
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  private def footer(f: FileStatus, hadoopConf: Configuration) = {
+    val opts = HadoopReadOptions.builder(hadoopConf, f.getPath)
+      .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hadoopConf), opts)
+    try reader.getFooter finally reader.close()
+  }
+
+  private def summary(name: String) = name == "_common_metadata" || name == "_metadata"
+
+  // `root` itself if it is a file, else the entries of `root` that
+  // Spark's file index lists, by path string
+  private def visible(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val st = fs.getFileStatus(root)
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(root).toSeq.filterNot(f => hidden(f.getPath.getName))
+      .sortBy(_.getPath.toString)
+  }
+
+  // the names Spark's file index skips (`HadoopFSUtils.shouldFilterOutPathName`)
+  private def hidden(name: String) =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** Register every table as a temp view so `spark.sql` mirrors the
     * DuckDB oracle's table namespace. */
@@ -151,13 +238,34 @@ object Tables {
 
   /** Reference-native ingest: headerless CSV of floats, ordinal row id
     * (`utils/utils.go:21-42` — but with globally-unique ids, fixing the
-    * 100k-chunk id-restart quirk of `client.go:61-63`). */
+    * 100k-chunk id-restart quirk of `client.go:61-63`). Every column is
+    * declared DOUBLE, the reference's float64 parse (`utils/utils.go:27-30`),
+    * and the column count comes from the first non-empty line, read on
+    * the driver: the scan is the only pass over the file (`inferSchema`
+    * added a second, plus a job for the first line). */
   def csvPoints(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read
-      .option("header", "false").option("inferSchema", "true").csv(path)
-    val cols = raw.columns.toIndexedSeq.map(c => col(c).cast("double"))
-    raw.select(array(cols: _*).as("features"))
+    val schema = StructType((0 until csvWidth(spark, path))
+      .map(i => StructField(s"_c$i", DoubleType)))
+    val raw = spark.read.option("header", "false").schema(schema).csv(path)
+    raw.select(array(raw.columns.toIndexedSeq.map(col): _*).as("features"))
       .withColumn("id", monotonically_increasing_id())
       .select(col("id"), col("features"))
+  }
+
+  // fields on the first non-empty line of `path` (of its first visible
+  // file by path string, for a directory); 0 when there is none
+  private def csvWidth(spark: SparkSession, path: String): Int = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    visible(fs, root).find(_.isFile).map(_.getPath).fold(0) { p =>
+      val codec = new CompressionCodecFactory(hadoopConf).getCodec(p)
+      val raw = fs.open(p)
+      val in = new BufferedReader(new InputStreamReader(
+        if (codec == null) raw else codec.createInputStream(raw), StandardCharsets.UTF_8))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .find(_.trim.nonEmpty).fold(0)(_.split(",", -1).length)
+      finally in.close()
+    }
   }
 }

@@ -51,7 +51,7 @@ object EventStream {
     * it) and fall back to the [[rawSchema]] default for an empty dir. */
   def readEvents(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     val tsType =
-      try spark.read.parquet(dir).schema("ts").dataType
+      try graft.sources.Tables.parquet(spark, dir).schema("ts").dataType
       catch { case _: Throwable => rawSchema("ts").dataType }
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
@@ -319,7 +319,7 @@ object EventStream {
         .map(_.getPath.getName.stripPrefix("v=").toLong)
         .filter(v => below.forall(v < _))
     versions.sorted.lastOption
-      .map(v => spark.read.parquet(s"$dir/v=$v"))
+      .map(v => graft.sources.Tables.parquet(spark, s"$dir/v=$v"))
   }
 
   /** Remove every `v=` snapshot directory under `dir` — the

@@ -2,11 +2,11 @@ package graft.kmeans
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkJobs.jobsOf
 import graft.functions.VectorOps
 import graft.sources.Tables
 
@@ -341,43 +341,16 @@ class RefKMeansSpec extends AnyFunSuite {
     }
   }
 
-  /** Number of Spark jobs `body` runs on this thread, from job starts
-    * tagged with a fresh job group. The listener bus is FIFO, so once a
-    * later marker job's start arrives every earlier start has too. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"refkmeans-jobs-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      def inGroup[U](g: String)(f: => U): U = {
-        sc.setJobGroup(g, g)
-        try f finally sc.clearJobGroup()
-      }
-      val out = inGroup(group)(body)
-      inGroup(group + "-marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(group + "-marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(group + "-marker"), "marker job start never arrived")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a one-partition fit is one Spark job; a 4-partition fit is one job per round") {
     val p1 = Tables.points(spark, sf001)
     assert(p1.queryExecution.toRdd.getNumPartitions == 1)
     val cfg = RefKMeans.Config(k = 4, firstId = Some(0L))
-    val (r1, jobs1) = jobsOf(RefKMeans.fit(p1, cfg))
+    val (r1, jobs1) = jobsOf(spark)(RefKMeans.fit(p1, cfg))
     assert(jobs1 == 1, s"one-partition fit ran $jobs1 jobs")
     // the same rows as a 4-slice local relation: 4 partitions, no shuffle
     val p4 = spark.createDataFrame(p1.collect().toSeq.asJava, p1.schema)
     assert(p4.queryExecution.toRdd.getNumPartitions == 4)
-    val (r4, jobs4) = jobsOf(RefKMeans.fit(p4, cfg))
+    val (r4, jobs4) = jobsOf(spark)(RefKMeans.fit(p4, cfg))
     assert(jobs4 <= 1 + (cfg.k - 1) + r4.iterations,
       s"4-partition fit ran $jobs4 jobs for ${r4.iterations} Lloyd rounds")
     assert(pin(r4) == pin(r1))

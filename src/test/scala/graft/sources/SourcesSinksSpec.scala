@@ -32,6 +32,31 @@ class SourcesSinksSpec extends AnyFunSuite {
     assert(pts.select("id").distinct().count() == 6)
   }
 
+  test("csvPoints' declared DOUBLE read equals the inferSchema-then-cast read") {
+    val dir = Files.createTempDirectory("graft_csv").toString
+    // int, float, negative and exponent columns; a blank line; a column
+    // that mixes ints and floats; a value past the long range
+    Files.writeString(java.nio.file.Paths.get(s"$dir/points.csv"),
+      "1,0.5,-3,1e3,7,12345678901234567890\n" +
+      "\n" +
+      "-2,-0.25,4,-2.5E-7,7.5,1\n" +
+      "30,1.0000000000000002,-1,6.02e+23,-8,-99\n")
+    val path = s"$dir/points.csv"
+    val inferred = spark.read
+      .option("header", "false").option("inferSchema", "true").csv(path)
+    assert(inferred.schema.map(_.dataType.typeName).take(4) ==
+      Seq("integer", "double", "integer", "double"))
+    val old = inferred.select(array(inferred.columns.toIndexedSeq
+      .map(c => col(c).cast("double")): _*).as("features"))
+      .collect().map(_.getSeq[Double](0)).toSeq
+    val declared = Tables.csvPoints(spark, path)
+    assert(declared.schema("features").dataType.simpleString == "array<double>")
+    val now = declared.orderBy("id").collect().map(_.getSeq[Double](1)).toSeq
+    assert(now.length == 3)
+    assert(now.map(_.map(java.lang.Double.doubleToRawLongBits)) ==
+      old.map(_.map(java.lang.Double.doubleToRawLongBits)))
+  }
+
   test("per-cluster sink writes one partition dir per cluster (O19) and round-trips") {
     import spark.implicits._
     val pts = Seq(
