@@ -14,10 +14,11 @@ final case class VecMeanBuf(sum: Array[Double], var n: Long)
   * as ONE reusable aggregate: partial buffers merge associatively, so
   * Catalyst runs it map-side exactly like the built-in sum columns.
   *
-  * The hot recenter path ([[graft.kmeans.KMeansSteps.recenterLong]])
-  * keeps its d independent `sum` columns — those stay inside codegen'd
-  * HashAggregate; this UDAF is the API for ad-hoc vector means where
-  * d is unknown at plan time.
+  * The Lloyd loops recenter on decoded point blocks
+  * ([[graft.kmeans.RefKMeans.lloyd]]), and the standalone recenter step
+  * ([[graft.kmeans.KMeansSteps.recenterLong]]) keeps its d independent
+  * `sum` columns inside codegen'd HashAggregate; this UDAF is the API
+  * for ad-hoc vector means where d is unknown at plan time.
   */
 object VectorMeanAgg extends Aggregator[Seq[Double], VecMeanBuf, Seq[Double]] {
 

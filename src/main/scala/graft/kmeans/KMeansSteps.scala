@@ -16,10 +16,13 @@ import graft.sources.Tables
   * embedding rows (cid = vec_id), so both Spark and the SQL oracle derive
   * identical literals from the data itself.
   *
-  * Scale posture: every step is a single narrow projection or one
+  * Scale posture: every single step is a narrow projection or one
   * partial-aggregated shuffle of k×d rows — nothing materializes O(N)
   * driver-side. Centroids travel as plan literals (the broadcast of
-  * `master.go:313-333`).
+  * `master.go:313-333`). The multi-round queries ([[fitSteps]],
+  * [[fitTrajectory]], the trainers) run [[RefKMeans.lloyd]] on the
+  * decoded point blocks instead: the points are decoded once, and only
+  * k×(d+1) sums per block cross to the driver per round.
   */
 object KMeansSteps {
 
@@ -90,20 +93,17 @@ object KMeansSteps {
     * per-cluster reducer (`worker.go:192-210`) — then the tiny k-row
     * result explodes to long format (cluster_id, dim, n, mean) for the
     * oracle compare. The shuffle carries k×(d+1) values, not N×d. */
-  def recenterLong(spark: SparkSession, sfDir: String, assigned0: Option[DataFrame] = None): DataFrame = {
+  def recenterLong(spark: SparkSession, sfDir: String): DataFrame = {
     val cs = centroids(spark, sfDir)
-    val d = cs.head._2.length
-    val assigned = assigned0.getOrElse {
-      pts(spark, sfDir).select(
-        nearestCidK(col("features"), centArr(cs)).as("cluster_id"), col("features"))
-    }
-    recenterAggLong(assigned, d)
+    recenterAggLong(pts(spark, sfDir).select(
+      nearestCidK(col("features"), centArr(cs)).as("cluster_id"), col("features")),
+      cs.head._2.length)
   }
 
   /** The recenter aggregation contract shared with the oracle (d-column
-    * sums, posexplode, round 6) over any assigned (cluster_id, features)
-    * relation. */
-  private def recenterAggLong(assigned: DataFrame, d: Int, scale: Int = 6): DataFrame = {
+    * sums, posexplode, round `scale`) over any assigned
+    * (cluster_id, features) relation. */
+  private[kmeans] def recenterAggLong(assigned: DataFrame, d: Int, scale: Int = 6): DataFrame = {
     val aggs = count(lit(1)).as("n") +: (0 until d).map(i => sum(col("features").getItem(i)).as(s"s$i"))
     assigned.groupBy("cluster_id")
       .agg(aggs.head, aggs.tail: _*)
@@ -151,19 +151,12 @@ object KMeansSteps {
     * last-ulp difference in summation order cannot propagate across
     * iterations. Within an iteration the distance kernel folds
     * sequentially (same as DuckDB's `list_distance`), which is already
-    * hash-match-proven by `kmeans_assign`/`kmeans_recenter`.
-    *
-    * Scale posture: per iteration ONE narrow assignment map + ONE
-    * partial-aggregated shuffle of k×(d+1) values; only k×d rounded
-    * doubles cross to the driver per round — identical to the per-RPC
-    * payload of the reference (`utils/structs.go:34-37`). This query pins
-    * the round semantics of [[RefKMeans.fit]]'s loop to the oracle. */
-  def fitSteps(spark: SparkSession, sfDir: String, iters: Int = 2): DataFrame = {
-    val (rows, _) = lloydRounds(spark, sfDir, iters)
-    spark.createDataFrame(rows)
-      .toDF("iter", "cluster_id", "dim", "n", "mean")
-      .orderBy("iter", "cluster_id", "dim")
-  }
+    * hash-match-proven by `kmeans_assign`/`kmeans_recenter`, and the
+    * per-block sums merge in partition order, bit-identical to
+    * [[recenterLong]]'s hash aggregate. This query pins the round
+    * semantics of [[RefKMeans.fit]]'s loop to the oracle. */
+  def fitSteps(spark: SparkSession, sfDir: String, iters: Int = 2): DataFrame =
+    fitStepsOf(spark, pts(spark, sfDir), centroids(spark, sfDir), iters)
 
   /** [[fitSteps]] over an arbitrary (id, features) point set with
     * explicit seed centroids — the same rounded-fixpoint contract reused
@@ -172,10 +165,21 @@ object KMeansSteps {
     * carried means: 6 for raw-unit features, 0 for integer-valued
     * feature spaces (micro-units), where it makes the whole loop exact
     * integer arithmetic — order-independent, so cross-engine summation
-    * order can never flip a rounding boundary. */
+    * order can never flip a rounding boundary. A carried (empty) cluster
+    * keeps its unrounded coordinates, matching the oracle's
+    * `coalesce(mean, previous)`, and reports them rounded. */
   def fitStepsOf(spark: SparkSession, points: DataFrame,
       cs0: Seq[(Int, Array[Double])], iters: Int = 2, scale: Int = 6): DataFrame = {
-    val (rows, _) = lloydRoundsOf(spark, points, cs0, iters, scale)
+    val (_, l) = roundedLloyd(points, iters, scale)(literal(cs0))
+    val rows = for {
+      (r, it) <- l.rounds.zipWithIndex
+      cid <- r.next.indices
+      dim <- r.next(cid).indices
+    } yield {
+      val n = r.partial.counts(cid)
+      val mean = r.next(cid)(dim)
+      (it + 1L, cid.toLong, dim.toLong, n, if (n > 0) mean else roundHalfUp(mean, scale))
+    }
     spark.createDataFrame(rows)
       .toDF("iter", "cluster_id", "dim", "n", "mean")
       .orderBy("iter", "cluster_id", "dim")
@@ -185,10 +189,8 @@ object KMeansSteps {
     * .ivfTrainedTopK]]: the centroids after `iters` rounded Lloyd rounds,
     * frozen to (cid, coords) literals — SQL-replayable training, so the
     * whole train→bucket→probe→rerank pipeline is oracle-checkable. */
-  def trainedCentroids(spark: SparkSession, sfDir: String, iters: Int = 2): Seq[(Int, Array[Double])] = {
-    val (_, cents) = lloydRounds(spark, sfDir, iters)
-    cents.zipWithIndex.map { case (v, cid) => (cid, v) }.toSeq
-  }
+  def trainedCentroids(spark: SparkSession, sfDir: String, iters: Int = 2): Seq[(Int, Array[Double])] =
+    trainedCentroidsOf(spark, pts(spark, sfDir), centroids(spark, sfDir), iters)
 
   /** [[trainedCentroids]] over an explicit (id, features) relation with
     * explicit seeds — the sampled-corpus ANN twin's trainer
@@ -197,44 +199,38 @@ object KMeansSteps {
     * `pts` CTE). */
   def trainedCentroidsOf(spark: SparkSession, p: DataFrame,
       seeds: Seq[(Int, Array[Double])], iters: Int = 2): Seq[(Int, Array[Double])] = {
-    val (_, cents) = lloydRoundsOf(spark, p, seeds, iters)
-    cents.zipWithIndex.map { case (v, cid) => (cid, v) }.toSeq
+    val (_, l) = roundedLloyd(p, iters, scale = 6)(literal(seeds))
+    l.cents.zipWithIndex.map { case (v, cid) => (cid, v) }.toSeq
   }
 
-  /** Shared core of [[fitSteps]]/[[trainedCentroids]]: runs the rounded
-    * Lloyd rounds, returning the long-format per-round rows and the
-    * final centroid array (carried coordinates stay unrounded, matching
-    * the oracle's `coalesce(mean, previous)`). */
-  private def lloydRounds(spark: SparkSession, sfDir: String, iters: Int)
-      : (Seq[(Long, Long, Long, Long, Double)], Array[Array[Double]]) =
-    lloydRoundsOf(spark, pts(spark, sfDir), centroids(spark, sfDir), iters)
+  /** Spark's `round(x, scale)` on a DOUBLE: HALF_UP on the shortest
+    * decimal that reads back as `x`; NaN and ±∞ pass through. */
+  private def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(scale, java.math.RoundingMode.HALF_UP).doubleValue
 
-  private def lloydRoundsOf(spark: SparkSession, p: DataFrame,
-      cs0: Seq[(Int, Array[Double])], iters: Int, scale: Int = 6)
-      : (Seq[(Long, Long, Long, Long, Double)], Array[Array[Double]]) = {
-    val d = cs0.head._2.length
-    var cents = centArr(cs0)
-    val out = Seq.newBuilder[(Long, Long, Long, Long, Double)]
-    for (it <- 1 to iters) {
-      // the recenter step IS recenterLong's aggregation — one contract
-      // (d-column sums, posexplode, round scale) shared with the oracle
-      val assigned = p.select(
-        nearestCidK(col("features"), cents).as("cluster_id"), col("features"))
-      val m = recenterAggLong(assigned, d, scale)
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-      cents = Array.tabulate(cents.length, d) { (cid, dim) =>
-        m.get((cid, dim)).map(_._2).getOrElse(cents(cid)(dim))
-      }
-      for (cid <- cents.indices; dim <- 0 until d) {
-        val (n, mean) = m.getOrElse((cid, dim),
-          (0L, BigDecimal(cents(cid)(dim)).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        out += ((it.toLong, cid.toLong, dim.toLong, n, mean))
-      }
+  /** Seeds given as (cid, coords) literals. */
+  private def literal(cs0: Seq[(Int, Array[Double])]): RefKMeans.Rounds => Array[Array[Double]] = {
+    val cents = centArr(cs0)
+    _ => cents
+  }
+
+  /** The rounded Lloyd loop behind every multi-round query here: `seed`,
+    * then [[RefKMeans.lloyd]] over the decoded point blocks, each
+    * recentered mean rounded as `round(sum / n, scale)` before it seeds
+    * the next assignment — the oracle's `round(sum(x) / count(*), scale)`.
+    * With a `threshold` the loop stops once the 6-decimal delta falls
+    * below it, else it runs exactly `maxIter` rounds. Seeding and rounds
+    * share one [[RefKMeans.run]]: one task for a one-partition input,
+    * else one job per round. Returns the seeds and the loop. */
+  private def roundedLloyd(points: DataFrame, maxIter: Int, scale: Int,
+      threshold: Option[Double] = None)(seed: RefKMeans.Rounds => Array[Array[Double]])
+      : (Array[Array[Double]], RefKMeans.Lloyd) =
+    RefKMeans.run(points) { r =>
+      val cents = seed(r)
+      (cents, RefKMeans.lloyd(r, cents, maxIter, roundHalfUp(_, scale))(
+        d => threshold.exists(roundHalfUp(d, 6) < _)))
     }
-    (out.result(), cents)
-  }
 
   /** The FULL Lloyd trajectory, oracle-checkable: the rounded-fixpoint
     * loop of [[fitSteps]] run from the literal seeds until the stop rule
@@ -248,17 +244,10 @@ object KMeansSteps {
     *
     * Delta convention: per-cluster displacement is a sequential
     * left-to-right fold over dims (DuckDB's `list_distance`), computed
-    * driver-side over the k×d rounded means the loop already collects;
-    * the mean over clusters is rounded to 6 decimals (same convention as
-    * the oracle-green `kmeans_delta`). Rounded means feed the next round
-    * in BOTH engines, so no float divergence propagates across rounds.
-    *
-    * Scale posture: per round one narrow assignment map + one
-    * partial-aggregated k×(d+1) shuffle; k×d doubles to the driver per
-    * round; a FRESH DataFrame per round. Re-collecting one Dataset would
-    * replay round 1's shuffle output forever: the aggregation's
-    * shuffle-map stage registers its outputs on the first job, and every
-    * later collect on the same lineage skips the map stage. */
+    * driver-side over the k×d rounded means of the round; the mean over
+    * clusters is rounded to 6 decimals (same convention as the
+    * oracle-green `kmeans_delta`). Rounded means feed the next round in
+    * BOTH engines, so no float divergence propagates across rounds. */
   def fitTrajectory(spark: SparkSession, sfDir: String,
       threshold: Double = 0.01, cap: Int = 60): Checked = {
     val cs0 = centroids(spark, sfDir)
@@ -266,8 +255,8 @@ object KMeansSteps {
       s"""WITH pts AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |cents0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS c
          |           FROM embeddings WHERE vec_id < ${cs0.length})""".stripMargin
-    fitTrajectoryOf(spark, pts(spark, sfDir), cs0, threshold, cap, 6,
-      requireConverge = true, "kmeans_fit_trajectory", head)
+    trajectoryOf(spark, pts(spark, sfDir), literal(cs0), threshold, cap, scale = 6,
+      requireConverge = true, "kmeans_fit_trajectory")(_ => head)
   }
 
   /** The FULL standardized-lineitem Lloyd trajectory — the cap-exit fit
@@ -282,18 +271,19 @@ object KMeansSteps {
     *
     * Seeds: the fit family's OWN maximin seeding
     * ([[RefKMeans.seed]], k = 5, seed = 42 — `kmeans_fit_lineitem`'s
-    * config) run over the micro-unit points, then FROZEN into the
-    * oracle head as full-precision VALUES literals (the seeded xxhash64
-    * first-pick is not DuckDB-expressible). Only the k seed vectors are
-    * trusted from Spark — every one of the up-to-20 rounds after them
-    * is independently replayed, so this is strictly stronger than the
-    * end-state-only check of [[FitFinal]]. The oracle keys rows on an
-    * arbitrary rid (assignment is a pure function of `v` — id is NOT
-    * unique in the lineitem fixture — so every downstream aggregate is
-    * exact, same argument as [[FitFinal]]'s lineitem variant).
-    * Expected shape: the cap exit of the real fit — rounds up to the
-    * cap with `stopped = 0` throughout, each round's POST-update delta
-    * (`master.go:212-231`) independently recomputed by the replay. */
+    * config) run over the micro-unit points in the same pass as the
+    * rounds, then FROZEN into the oracle head as full-precision VALUES
+    * literals (the seeded xxhash64 first-pick is not DuckDB-expressible).
+    * Only the k seed vectors are trusted from Spark — every one of the
+    * up-to-20 rounds after them is independently replayed, so this is
+    * strictly stronger than the end-state-only check of [[FitFinal]].
+    * The oracle keys rows on an arbitrary rid (assignment is a pure
+    * function of `v` — id is NOT unique in the lineitem fixture — so
+    * every downstream aggregate is exact, same argument as [[FitFinal]]'s
+    * lineitem variant). Expected shape: the cap exit of the real fit —
+    * rounds up to the cap with `stopped = 0` throughout, each round's
+    * POST-update delta (`master.go:212-231`) independently recomputed by
+    * the replay. */
   def lineitemTrajectory(spark: SparkSession, sfDir: String, k: Int = 5,
       cap: Int = 20): Checked = {
     val stats = Tables.lineitemStatsShared(spark, sfDir)
@@ -302,37 +292,36 @@ object KMeansSteps {
     val p = Tables.lineitemPointsStd(spark, sfDir)
       .select(col("id"),
         transform(col("features"), x => round(round(x, 6) * 1e6, 0)).as("features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = RefKMeans.seed(p, RefKMeans.Config(k = k, seed = 42L))
-      .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
     val dims = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     val proj = stats.zip(dims).map { case ((m, s), c) =>
       s"round(round(($c - ${java.lang.Double.toString(m)}) / ${java.lang.Double.toString(s)}, 6) * 1000000, 0)"
     }.mkString("[", ", ", "]")
-    val head =
+    val cfg = RefKMeans.Config(k = k, seed = 42L)
+    trajectoryOf(spark, p, RefKMeans.seedOn(_, cfg, pp = false), threshold = 0.01 * 1e6,
+      cap = cap, scale = 0, requireConverge = false, "kmeans_fit_lineitem_trajectory") { seeds =>
       s"""WITH pts AS MATERIALIZED (SELECT row_number() OVER () AS vec_id,
          |               $proj AS v FROM lineitem),
          |${seedsValuesCte(seeds)}""".stripMargin
-    fitTrajectoryOf(spark, p, seeds, threshold = 0.01 * 1e6, cap = cap,
-      scale = 0, requireConverge = false,
-      "kmeans_fit_lineitem_trajectory", head)
+    }
   }
 
-  /** Frozen seed centroids as a DuckDB VALUES CTE `cents0(cid, c)` —
-    * `java.lang.Double.toString` round-trips to the identical IEEE
-    * double (same device as [[FitFinal]]'s frozen-state literals). */
-  private[graft] def seedsValuesCte(seeds: Seq[(Int, Array[Double])]): String =
-    seeds.sortBy(_._1).map { case (cid, v) =>
+  /** Frozen seed centroids (cid = array position) as a DuckDB VALUES CTE
+    * `cents0(cid, c)` — `java.lang.Double.toString` round-trips to the
+    * identical IEEE double (same device as [[FitFinal]]'s frozen-state
+    * literals). */
+  private[graft] def seedsValuesCte(seeds: Array[Array[Double]]): String =
+    seeds.zipWithIndex.map { case (v, cid) =>
       v.map(java.lang.Double.toString).mkString(s"($cid, CAST([", ", ", "] AS DOUBLE[]))")
     }.mkString("cents0 AS (SELECT * FROM (VALUES ", ", ", ") AS t(cid, c))")
 
-  /** [[fitTrajectory]] over an arbitrary (id, features) point set with
-    * explicit seeds — the full-loop sibling of [[fitStepsOf]], reused by
-    * the ts shape-clustering and standardized-lineitem feature spaces
-    * (both in integer micro-units, `scale = 0`, where every carried mean
-    * is an exact integer and summation order cannot flip a rounding
-    * boundary; the per-round delta is then a sqrt of exact integer sums,
-    * identically rounded in both engines).
+  /** [[fitTrajectory]] over an arbitrary (id, features) point set, seeded
+    * by `seed` in the same pass as the rounds — the full-loop sibling of
+    * [[fitStepsOf]], reused by the ts shape-clustering and
+    * standardized-lineitem feature spaces (both in integer micro-units,
+    * `scale = 0`, where every carried mean is an exact integer and
+    * summation order cannot flip a rounding boundary; the per-round delta
+    * is then a sqrt of exact integer sums, identically rounded in both
+    * engines).
     *
     * `requireConverge = false` lets a cap exit return normally with the
     * last row's `stopped = 0` — that IS the contract being pinned for
@@ -341,59 +330,24 @@ object KMeansSteps {
     * trajectory row is the post-update delta of its round, so the quirk
     * is visible round by round.
     *
-    * `headSql` is the oracle's data-dependent prologue (CTEs `pts` and
-    * `cents0`; some spaces embed fitted literals, the lineitem
-    * standardization stats); the returned oracle appends the replay of
-    * exactly the rounds this call ran ([[trajectorySql]]). */
-  def fitTrajectoryOf(spark: SparkSession, points: DataFrame,
-      cs0: Seq[(Int, Array[Double])], threshold: Double, cap: Int,
-      scale: Int, requireConverge: Boolean,
-      queryName: String, headSql: String): Checked = {
-    val d = cs0.head._2.length
-    val k = cs0.length
-    val p = points.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents = centArr(cs0)
-    val rows = Seq.newBuilder[(Long, Double, Long)]
-    var iter = 0
-    var stopped = false
-    try {
-      while (!stopped && iter < cap) {
-        iter += 1
-        // a FRESH DataFrame per round off the persisted base (see
-        // [[fitTrajectory]]: re-collecting one Dataset would replay round
-        // 1's shuffle output forever)
-        val assigned = p.select(
-          nearestCidK(col("features"), cents).as("cluster_id"), col("features"))
-        val m = recenterAggLong(assigned, d, scale)
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(3))
-          .toMap
-        val next = Array.tabulate(k, d) { (cid, dim) =>
-          m.getOrElse((cid, dim), cents(cid)(dim))
-        }
-        // per-cluster displacement: sequential fold over dims — the same
-        // IEEE evaluation order as DuckDB's list_distance
-        var sumDisp = 0.0
-        for (cid <- 0 until k) {
-          var s = 0.0
-          for (dim <- 0 until d) {
-            val diff = next(cid)(dim) - cents(cid)(dim)
-            s += diff * diff
-          }
-          sumDisp += math.sqrt(s)
-        }
-        val delta = BigDecimal(sumDisp / k)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        stopped = delta < threshold
-        rows += ((iter.toLong, delta, if (stopped) 1L else 0L))
-        cents = next
-      }
-    } finally p.unpersist(blocking = false)
-    require(stopped || !requireConverge,
+    * `headSql` renders the oracle's data-dependent prologue (CTEs `pts`
+    * and `cents0`) from the seeds; some spaces embed fitted literals, the
+    * lineitem standardization stats. The returned oracle appends the
+    * replay of exactly the rounds this call ran ([[trajectorySql]]). */
+  private[graft] def trajectoryOf(spark: SparkSession, points: DataFrame,
+      seed: RefKMeans.Rounds => Array[Array[Double]], threshold: Double, cap: Int,
+      scale: Int, requireConverge: Boolean, queryName: String)(
+      headSql: Array[Array[Double]] => String): Checked = {
+    val (seeds, l) = roundedLloyd(points, cap, scale, Some(threshold))(seed)
+    require(l.converged || !requireConverge,
       s"$queryName: no convergence within $cap rounds")
+    val rows = l.rounds.zipWithIndex.map { case (r, i) =>
+      val delta = roundHalfUp(r.delta, 6)
+      (i + 1L, delta, if (delta < threshold) 1L else 0L)
+    }
     Checked(
-      spark.createDataFrame(rows.result()).toDF("iter", "delta", "stopped").orderBy("iter"),
-      Some(trajectorySql(iter, headSql, k, threshold, scale)))
+      spark.createDataFrame(rows).toDF("iter", "delta", "stopped").orderBy("iter"),
+      Some(trajectorySql(l.rounds.length, headSql(seeds), seeds.length, threshold, scale)))
   }
 
   /** DuckDB replay of a `rounds`-round trajectory — one mechanical CTE

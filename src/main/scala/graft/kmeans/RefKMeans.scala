@@ -63,6 +63,14 @@ import graft.plans.CentroidKernel
   * fit ([[assign]]), fixing the reference's per-iteration member
   * shipping (`structs.go:40`, `master.go:234`).
   *
+  * [[lloyd]] is the engine's one Lloyd loop. Besides [[fit]] and
+  * [[fitSizes]] it runs the rounded loops of [[KMeansSteps]] — the step
+  * and trajectory queries (`kmeans_fit_steps`, `kmeans_fit_trajectory`,
+  * `kmeans_fit_lineitem_trajectory`, `ts_cluster_steps`,
+  * `ts_cluster_trajectory`) and the IVF quantizer trainer of
+  * `ann_ivf_trained`, `ann_ivf_pq` and `ann_recall_sampled`, which
+  * round each recentered mean before it seeds the next round.
+  *
   * Input. `points` has columns (id: LONG, features: ARRAY<DOUBLE>), every
   * row with the same number of coordinates. Like the reference, which
   * aborts on a non-numeric coordinate (`utils/utils.go:27-30`), the fit
@@ -263,7 +271,7 @@ object RefKMeans {
 
   /** Where a fit's rounds run: inside the one block's task, or as one job
     * per round over persisted blocks. */
-  private[kmeans] sealed trait Rounds {
+  private[graft] sealed trait Rounds {
     def top(r: SeedRound): Top
     def partial(cents: Array[Array[Double]]): Partial
   }
@@ -335,14 +343,14 @@ object RefKMeans {
     }
 
   /** [[schedule]] with the scheduler the input layout decides. */
-  private def run[T: ClassTag](points: DataFrame)(body: Rounds => T): T = {
+  private[graft] def run[T: ClassTag](points: DataFrame)(body: Rounds => T): T = {
     val blocks = blocksOf(points)
     schedule(blocks, oneTask = blocks.getNumPartitions == 1)(body)
   }
 
   /** Maximin (`pp` false) or D² (`pp` true) seeding over `rounds`: the
     * first pick, then k−1 rounds each adding one centroid. */
-  private def seedOn(rounds: Rounds, cfg: Config, pp: Boolean): Array[Array[Double]] = {
+  private[graft] def seedOn(rounds: Rounds, cfg: Config, pp: Boolean): Array[Array[Double]] = {
     val first = rounds.top(cfg.firstId match {
       case Some(id) => FirstById(id)
       case None => FirstByHash(cfg.seed)
@@ -361,32 +369,59 @@ object RefKMeans {
     cents
   }
 
-  /** Seeding, then Lloyd rounds under the reference's stop rule. */
-  private[kmeans] def fitOn(rounds: Rounds, cfg: Config): Result = {
-    var cents = cfg.initialCentroids.getOrElse(seedOn(rounds, cfg, cfg.ppSeeding))
-    require(cents.length == cfg.k, s"initialCentroids: ${cents.length} seeds for k=${cfg.k}")
+  /** One Lloyd round: the partial merged against the round's centroids,
+    * the centroids it moves to and their mean displacement. */
+  private[graft] final case class Round(partial: Partial, next: Array[Array[Double]],
+      delta: Double)
+
+  /** A Lloyd loop's rounds and the centroids it reports. */
+  private[graft] final case class Lloyd(rounds: Seq[Round], cents: Array[Array[Double]],
+      converged: Boolean)
+
+  /** The Lloyd loop (`master.go:193-236`) from `cents0`. Each round
+    * assigns and recenters: a cluster moves to `mean(sum / count)` of its
+    * members, and a cluster with none keeps its centroid (O15,
+    * `master.go:579-600`). delta is the mean Euclidean displacement
+    * (`master.go:569-576`). When `stop(delta)` holds the loop ends BEFORE
+    * the update, so the reported centroids are the ones the last round
+    * assigned against; after `maxIter` rounds it ends AFTER the update
+    * (the reference's cap-exit quirk, `master.go:212-231`). */
+  private[graft] def lloyd(rounds: Rounds, cents0: Array[Array[Double]], maxIter: Int,
+      mean: Double => Double = identity)(stop: Double => Boolean): Lloyd = {
+    val k = cents0.length
+    var cents = cents0
+    val out = Vector.newBuilder[Round]
     var iter = 0
-    var delta = Double.MaxValue
     var converged = false
-    while (!converged && iter < cfg.maxIter) {
+    while (!converged && iter < maxIter) {
       val p = rounds.partial(cents)
       if (p.rows == 0) throw new IllegalArgumentException("RefKMeans: no points")
-      // O15 empty-cluster carry-over (master.go:579-600).
-      val newCents = Array.tabulate(cfg.k) { c =>
-        if (p.counts(c) == 0) cents(c) else p.sums(c).map(_ / p.counts(c))
+      val next = Array.tabulate(k) { c =>
+        if (p.counts(c) == 0) cents(c) else p.sums(c).map(s => mean(s / p.counts(c)))
       }
-      delta = cents.zip(newCents)
+      val delta = cents.zip(next)
         .map { case (o, n) =>
           math.sqrt(o.zip(n).map { case (a, b) => (a - b) * (a - b) }.sum)
-        }.sum / cfg.k
+        }.sum / k
+      out += Round(p, next, delta)
       iter += 1
-      if (delta < cfg.deltaThreshold) {
-        converged = true // stop BEFORE update: cents stay as assigned
-      } else {
-        cents = newCents // iteration-cap exit reports updated centroids
-      }
+      converged = stop(delta)
+      if (!converged) cents = next
     }
-    Result(cents.zipWithIndex.map { case (c, i) => (i, c) }, iter, delta, converged)
+    Lloyd(out.result(), cents, converged)
+  }
+
+  /** Seeding, then Lloyd rounds under the reference's stop rule. */
+  private def fitLloyd(rounds: Rounds, cfg: Config): Lloyd = {
+    val cents = cfg.initialCentroids.getOrElse(seedOn(rounds, cfg, cfg.ppSeeding))
+    require(cents.length == cfg.k, s"initialCentroids: ${cents.length} seeds for k=${cfg.k}")
+    lloyd(rounds, cents, cfg.maxIter)(_ < cfg.deltaThreshold)
+  }
+
+  private[kmeans] def fitOn(rounds: Rounds, cfg: Config): Result = {
+    val l = fitLloyd(rounds, cfg)
+    Result(l.cents.zipWithIndex.map { case (c, i) => (i, c) }, l.rounds.length,
+      l.rounds.lastOption.fold(Double.MaxValue)(_.delta), l.converged)
   }
 
   /** Maximin seeding (`master.go:157-190`): the first pick (`firstId`, or
@@ -428,14 +463,25 @@ object RefKMeans {
     points.select(col("id"),
       nearestCidK(col("features"), centroids.sortBy(_._1).map(_._2)).as("cluster_id"))
 
-  /** Fit + summarize: (cluster_id, n, centroid-as-long-format rows are in
+  /** Fit + summarize: (cluster_id, n) for every non-empty cluster, in
+    * cluster order (the centroids as long-format rows are in
     * [[centroidsDF]]); this is the client's result summary
-    * (`main/client/client.go:208-234`). */
+    * (`main/client/client.go:208-234`). The sizes come from the fit's own
+    * rounds: on convergence the last round's partial was computed
+    * against the reported centroids; a cap exit moved them once more, so
+    * one more partial runs in the same schedule. Points that join no
+    * cluster (every distance +∞) count under cluster_id −1, as in
+    * [[assign]]'s output. */
   def fitSizes(spark: SparkSession, points: DataFrame, cfg: Config): DataFrame = {
-    val res = fit(points, cfg)
-    assign(points, res.centroids)
-      .groupBy("cluster_id").agg(count(lit(1)).as("n"))
-      .orderBy("cluster_id")
+    val (rows, counts) = run(points) { r =>
+      val l = fitLloyd(r, cfg)
+      val p = if (l.converged) l.rounds.last.partial else r.partial(l.cents)
+      (p.rows, p.counts)
+    }
+    val unassigned = rows - counts.sum
+    val sizes = (if (unassigned > 0) Seq((-1, unassigned)) else Nil) ++
+      counts.zipWithIndex.collect { case (n, c) if n > 0 => (c, n) }
+    spark.createDataFrame(sizes).toDF("cluster_id", "n")
   }
 
   def centroidsDF(spark: SparkSession, res: Result): DataFrame = {

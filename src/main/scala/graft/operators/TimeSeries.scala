@@ -124,22 +124,6 @@ object TimeSeries {
        |               list_transform(zw, x -> $v) AS v FROM st)""".stripMargin
   }
 
-  /** The shape-clustering Lloyd LOOP itself, oracle-checkable: exactly
-    * `iters` rounded rounds over the z-window point set, seeded with the
-    * k lowest-id windows — [[graft.kmeans.KMeansSteps.fitSteps]]'s
-    * rounded-fixpoint recipe applied to [[shapeClusters]]' feature space,
-    * so the only remaining rows-only piece of the ts pipeline is the
-    * unbounded fit.
-    *
-    * Exactness: unlike the parquet-born embeddings, z-windows are
-    * COMPUTED values, so cross-engine summation order could flip a
-    * 6-decimal rounding boundary in a recentered mean (observed once at
-    * sf0.01). The loop therefore runs in integer MICRO-units: features
-    * are `round(round(z, 6) · 1e6)` — integer-valued doubles whose sums
-    * (≪ 2^53) are exact and order-independent — and each round's carried
-    * state rounds to whole micro-units (`scale = 0`). Every value in the
-    * output (`mean_micro`) is an exact integer; no float comparison
-    * exists anywhere in the contract. */
   /** The strided z-window points on the shared 6-decimal grid — the
     * bit-exact cross-engine representation (`ts_windows` hash-matches at
     * this precision), used by both the step queries and the fit so the
@@ -173,6 +157,22 @@ object TimeSeries {
       .zipWithIndex
       .map { case (r, i) => (i, r.getSeq[Double](1).toArray) }.toSeq
 
+  /** The shape-clustering Lloyd LOOP itself, oracle-checkable: exactly
+    * `iters` rounded rounds over the z-window point set, seeded with the
+    * k lowest-id windows — [[graft.kmeans.KMeansSteps.fitSteps]]'s
+    * rounded-fixpoint recipe applied to [[shapeClusters]]' feature space,
+    * so the only remaining rows-only piece of the ts pipeline is the
+    * unbounded fit.
+    *
+    * Exactness: unlike the parquet-born embeddings, z-windows are
+    * COMPUTED values, so cross-engine summation order could flip a
+    * 6-decimal rounding boundary in a recentered mean (observed once at
+    * sf0.01). The loop therefore runs in integer MICRO-units: features
+    * are `round(round(z, 6) · 1e6)` — integer-valued doubles whose sums
+    * (≪ 2^53) are exact and order-independent — and each round's carried
+    * state rounds to whole micro-units (`scale = 0`). Every value in the
+    * output (`mean_micro`) is an exact integer; no float comparison
+    * exists anywhere in the contract. */
   def clusterSteps(spark: SparkSession, sfDir: String, k: Int = 4,
       stride: Int = 4, iters: Int = 2): DataFrame = {
     val p = microPoints(spark, sfDir, stride)
@@ -189,23 +189,21 @@ object TimeSeries {
     * with the units: 0.01 raw → 1e4 micro). Per-round deltas are sqrts
     * of exact integer sums — identically rounded in both engines.
     * Seeds: [[ClusterCfg]]'s own maximin seeding (k = 4, seed = 11 —
-    * the `ts_cluster` fit's config) over the micro points, frozen into
-    * the oracle head as VALUES literals; every round after them is
+    * the `ts_cluster` fit's config) over the micro points, run in the
+    * same pass over the decoded points as the rounds
+    * ([[graft.kmeans.KMeansSteps.trajectoryOf]]) and frozen into the
+    * oracle head as VALUES literals; every round after them is
     * independently replayed (see
     * [[graft.kmeans.KMeansSteps.lineitemTrajectory]]'s contract note). */
   def clusterTrajectory(spark: SparkSession, sfDir: String,
       stride: Int = 4): graft.Checked = {
-    val p = microPoints(spark, sfDir, stride)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seeds = graft.kmeans.RefKMeans.seed(p,
-        ClusterCfg.copy(firstId = None, ppSeeding = false))
-      .zipWithIndex.map { case (v, i) => (i, v) }.toSeq
-    val head =
+    graft.kmeans.KMeansSteps.trajectoryOf(spark, microPoints(spark, sfDir, stride),
+      graft.kmeans.RefKMeans.seedOn(_, ClusterCfg, pp = false), threshold = 0.01 * 1e6,
+      cap = ClusterCfg.maxIter, scale = 0, requireConverge = false,
+      "ts_cluster_trajectory") { seeds =>
       s"""WITH ${ptsOracleCtes(stride, micro = true)},
          |${graft.kmeans.KMeansSteps.seedsValuesCte(seeds)}""".stripMargin
-    graft.kmeans.KMeansSteps.fitTrajectoryOf(spark, p, seeds,
-      threshold = 0.01 * 1e6, cap = ClusterCfg.maxIter, scale = 0,
-      requireConverge = false, "ts_cluster_trajectory", head)
+    }
   }
 
   /** Top-k nearest windows to the corpus's first window (lowest user id,

@@ -58,10 +58,6 @@ final class Memo[K, V](name: String) {
   def stored(key: K): V = get(key).getOrElse(
     throw new IllegalStateException(s"$name: no stored value for $key"))
 
-  /** Every stored (key, value). */
-  def entries: Map[K, V] =
-    slots.asScala.flatMap { case (k, s) => s.value.map(k -> _) }.toMap
-
   /** Drop every entry, so each next lookup rebuilds. */
   def clear(): Unit = slots.keySet.asScala.foreach(evict)
 

@@ -355,4 +355,50 @@ class RefKMeansSpec extends AnyFunSuite {
       s"4-partition fit ran $jobs4 jobs for ${r4.iterations} Lloyd rounds")
     assert(pin(r4) == pin(r1))
   }
+
+  test("fitSizes equals the assign + groupBy table: converged, cap exit, k > n, 1 and 4 partitions") {
+    // the table fitSizes built before it read the fit's own rounds
+    def grouped(p: DataFrame, cfg: RefKMeans.Config): Seq[(Int, Long)] =
+      RefKMeans.assign(p, RefKMeans.fit(p, cfg).centroids)
+        .groupBy("cluster_id").agg(count(lit(1)).as("n")).orderBy("cluster_id")
+        .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    def sizes(p: DataFrame, cfg: RefKMeans.Config): Seq[(Int, Long)] =
+      RefKMeans.fitSizes(spark, p, cfg).collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val emb = Tables.points(spark, sf001)
+    val emb4 = spark.createDataFrame(emb.collect().toSeq.asJava, emb.schema)
+    val li = Tables.lineitemPointsStd(spark, sf001)
+    val small = pts(3L -> Seq(0.0, 0.0), 1L -> Seq(0.0, 1.0), 2L -> Seq(5.0, 0.0))
+    // (1e300, 0) is +∞ from the one centroid, so it joins no cluster
+    val far = pts(0L -> Seq(0.0, 0.0), 1L -> Seq(1e300, 0.0), 2L -> Seq(0.0, 1.0))
+    val fitCfg = RefKMeans.Config(k = 8, firstId = Some(0L))
+    val cases: Seq[(String, DataFrame, RefKMeans.Config, Boolean)] = Seq(
+      ("emb sf0.001", emb, fitCfg, true),
+      ("emb sf0.001 x4", emb4, fitCfg, true),
+      ("lineitem sf0.001", li, FitFinal.CfgLineitem, false),
+      ("lineitem sf0.01 x4", Tables.lineitemPointsStd(spark, sf01).repartition(4),
+        FitFinal.CfgLineitem, false),
+      ("ts sf0.01", graft.operators.TimeSeries.roundedPoints(spark, sf01),
+        graft.operators.TimeSeries.ClusterCfg, false),
+      ("k > n", small, RefKMeans.Config(k = 5, firstId = Some(1L)), true),
+      ("k > n x1", small.coalesce(1), RefKMeans.Config(k = 5, firstId = Some(1L)), true),
+      ("unassigned point", far.coalesce(1), RefKMeans.Config(k = 1, firstId = Some(0L)), true))
+    for ((name, p, cfg, converges) <- cases) {
+      assert(RefKMeans.fit(p, cfg).converged == converges, s"$name: exit path")
+      val want = grouped(p, cfg)
+      assert(sizes(p, cfg) == want, name)
+      assert(want.map(_._2).sum == p.count(), s"$name: every point counted once")
+    }
+    assert(emb4.queryExecution.toRdd.getNumPartitions == 4)
+    assert(sizes(small, RefKMeans.Config(k = 5, firstId = Some(1L))).length == 3,
+      "empty clusters are absent")
+    assert(sizes(far.coalesce(1), RefKMeans.Config(k = 1, firstId = Some(0L))) ==
+      Seq((-1, 1L), (0, 2L)))
+  }
+
+  test("a one-partition fitSizes, collected, is one Spark job") {
+    val p = Tables.points(spark, sf001)
+    val cfg = RefKMeans.Config(k = 4, firstId = Some(0L))
+    val (_, jobs) = jobsOf(spark)(RefKMeans.fitSizes(spark, p, cfg).collect())
+    assert(jobs == 1, s"fitSizes ran $jobs jobs")
+  }
 }
