@@ -1,41 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partition-count stress knob (PERF.md): the plans must not depend
-    // on shuffle.partitions == cpus — AQE coalescing should keep a
-    // 200-partition run within noise of the default
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // ContextCleaner only reclaims shuffle files / broadcasts / RDD
-      // blocks whose driver-side references have been GC'd, and its
-      // safety-net GC defaults to every 30 MINUTES — in a long shared-JVM
-      // pass (the sf10 probe runs ~60 min) a large driver heap almost
-      // never collects old gen on its own, so dead shuffle dirs pile up
-      // on /tmp and tax late heavy queries (the r13 in-pass inflation:
-      // graph_kcore 121.6 s in-pass vs 39 s standalone). A 2-minute
-      // interval keeps the debris window bounded at pass scale and costs
-      // one System.gc() per 2 min — noise at sf0.1 (≤2 GCs per pass).
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "2min"))
-      // let AQE coalesce partitions INSIDE cached plans too — persisted
-      // intermediates (posting lists, LSH buckets) otherwise pin the raw
-      // shuffle.partitions count and every downstream stage pays
-      // per-task overhead × partitions (the 200-partition stress run
-      // showed dedup_ngram 2.3 s → 23 s from exactly this)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // match Verify: the events NTZ→TIMESTAMP cast (Tables.events) must
-      // not depend on the machine's time zone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
+    val cpus = spark.sparkContext.defaultParallelism
+    // partition-count stress knob (SPARK_GRAFT_SHUFFLE_PARTITIONS,
+    // PERF.md): the plans must not depend on shuffle.partitions == cpus
+    // — AQE coalescing should keep a 200-partition run within noise of
+    // the default
+    val defaultShuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt == cpus
     // a failure outside the timed query (warm-up, snapshot, cache clear)
     // does not stop the pass, but it is never silent
     def warn(name: String, what: String, e: Throwable): Unit =
@@ -71,7 +46,7 @@ object Bench {
       val js = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k",
           org.apache.spark.sql.types.LongType)))
-      spark.range(20000).repartition(cpus.toInt)
+      spark.range(20000).repartition(cpus)
         .select(from_json(
           concat(lit("{\"k\": "), (col("id") % 100).cast("string"), lit("}")),
           js).getField("k").as("k"))
@@ -192,13 +167,14 @@ object Bench {
     // ("remeasured": {name: [first, rerun]}), so a genuinely
     // intermittent slowdown stays evidenced instead of being dropped.
     val repoDir = new java.io.File(sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
+    val json = new ObjectMapper()
     // a prior record that is missing, unreadable, not JSON or lacks the
     // key reads as empty: it only anchors the re-measure trigger
     def readRecordKey(f: java.io.File, key: String)
         : Seq[(String, com.fasterxml.jackson.databind.JsonNode)] =
       if (!f.isFile) Nil
       else try {
-        Option(new com.fasterxml.jackson.databind.ObjectMapper().readTree(f))
+        Option(json.readTree(f))
           .flatMap(root => Option(root.get(key))).toSeq
           .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
       } catch { case e: java.io.IOException =>
@@ -273,34 +249,35 @@ object Bench {
     // record becomes the next run's regression anchor (prior/min) — a
     // fast crash would otherwise anchor a spurious 2× trip once fixed
     // (exactly what the r7 events crashes did to BENCH_LAST)
-    val qs = results.collect { case (k, v, true, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val timed = results.collect { case (k, v, true, _, _) => k -> v }
+    val record = json.createObjectNode()
+      .put("metric", "total").put("value", timed.map(_._2).sum).put("unit", "sec")
+    val qs = record.putObject("queries")
+    timed.foreach { case (k, v) => qs.put(k, v) }
     // a crashed query must be visible in the JSON, not silently folded
     // into the total as its time-to-failure
-    val failed = results.collect { case (k, _, false, true, _) => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val failed = record.putArray("failed")
+    results.collect { case (k, _, false, true, _) => k }.foreach(k => failed.add(k))
     // queries never attempted because the SparkContext had already died
     // — neither measurements nor query failures
-    val skipped = results.collect { case (k, _, _, false, _) => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val skipped = record.putArray("skipped_dead_context")
+    results.collect { case (k, _, _, false, _) => k }.foreach(k => skipped.add(k))
+    // transparency: which recorded times are best-of-2, and what both
+    // observations were (see PERF.md bench methodology)
+    val rem = record.putObject("remeasured")
+    remeasured.result().foreach { case (n, obs) =>
+      val entries = rem.putArray(n)
+      obs.foreach { case (t, o) => entries.addObject().put("t", t).put("ok", o) }
+    }
     // cold/warm cache provenance of each recorded time (queries with no
     // cache activity are absent): "cold" = the observation paid ≥ 1
     // cache build, "warm" = it read entries a sibling query built
-    val cacheProv = results
-      .collect { case (k, _, true, _, Some(p)) => s"\"" + k + "\":\"" + p + "\"" }
-      .mkString("{", ",", "}")
-    // transparency: which recorded times are best-of-2, and what both
-    // observations were (see PERF.md bench methodology)
-    val rem = remeasured.result()
-      .map { case (n, obs) =>
-        val entries = obs.map { case (t, o) => s"""{"t":$t,"ok":$o}""" }
-        s"\"$n\":[${entries.mkString(",")}]"
-      }
-      .mkString("{", ",", "}")
-    val priorName =
-      if (prior.nonEmpty) "\"" + priorFile.getName + "\"" else "null"
-    val total = results.collect { case (_, v, true, _, _) => v }.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"skipped_dead_context":$skipped,"remeasured":$rem,"cache":$cacheProv,"prior_record":$priorName,"sf":"$sfDir"}"""
+    val cacheProv = record.putObject("cache")
+    results.collect { case (k, _, true, _, Some(p)) => k -> p }
+      .foreach { case (k, p) => cacheProv.put(k, p) }
+    record.put("prior_record", if (prior.nonEmpty) priorFile.getName else null)
+    record.put("sf", sfDir)
+    val line = json.writeValueAsString(record)
     println(line)
     // stable machine-readable copy at a fixed path: the driver's
     // stdout-scrape has produced "parsed": null wrappers two rounds
@@ -316,7 +293,7 @@ object Bench {
     // poison the prior with a partial map, and a shuffle-partition
     // stress run with legitimately slower times
     // a run whose context died mid-pass is not a representative baseline
-    if (only.isEmpty && skip.isEmpty && shuffle == cpus && results.forall(_._4)) {
+    if (only.isEmpty && skip.isEmpty && defaultShuffle && results.forall(_._4)) {
       java.nio.file.Files.writeString(priorFile.toPath, line + "\n")
       // refresh the monotone anchor: elementwise min of the record so
       // far and this run's successful timings (failed queries excluded
@@ -328,7 +305,7 @@ object Bench {
       val priorProv: Map[String, String] =
         readRecordKey(minFile, "cache").map { case (k, v) => k -> v.asText }.toMap
       val thisRun = results.collect { case (k, v, true, _, p) => k -> (v, p) }.toMap
-      val merged = (minRec.keySet ++ thisRun.keySet).toSeq.map { k =>
+      val merged = (minRec.keySet ++ thisRun.keySet).toSeq.sorted.map { k =>
         val old = minRec.get(k)
         val cur = thisRun.get(k).map(_._1)
         val v = (old.toList ++ cur).min
@@ -338,13 +315,16 @@ object Bench {
           else priorProv.get(k)
         (k, v, prov)
       }
-      val body = merged.sortBy(_._1)
-        .map { case (k, v, _) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val provBody = merged.sortBy(_._1)
-        .collect { case (k, _, Some(p)) => s"\"" + k + "\":\"" + p + "\"" }
-        .mkString("{", ",", "}")
+      val minNode = json.createObjectNode()
+      val floors = minNode.putObject("queries")
+      val floorProv = minNode.putObject("cache")
+      merged.foreach { case (k, v, prov) =>
+        floors.put(k, v)
+        prov.foreach(floorProv.put(k, _))
+      }
+      minNode.put("sf", sfDir)
       java.nio.file.Files.writeString(minFile.toPath,
-        s"""{"queries":$body,"cache":$provBody,"sf":"$sfDir"}""" + "\n")
+        json.writeValueAsString(minNode) + "\n")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.io.File
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -9,17 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match Bench: AQE may re-coalesce cached-plan output partitions
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // dev-loop subset filter (unset for the driver's full run):
     // SPARK_GRAFT_ONLY=q1_agg,topk_window verifies just those queries

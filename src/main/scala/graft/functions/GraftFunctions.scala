@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, Sqrt}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Sqrt}
 import org.apache.spark.sql.types.IntegerType
 
 import graft.plans.{AvgHash, CharGrams, DotProduct, HashedShingles, SimHash60, SquaredDistance, WordHashN}
@@ -15,9 +13,6 @@ import graft.plans.{AvgHash, CharGrams, DotProduct, HashedShingles, SimHash60, S
   *   GraftFunctions.register(spark)
   *   spark.sql("SELECT vec_dist(a.embedding, b.embedding) FROM ...")
   * }}}
-  *
-  * or session-wide via `SparkSessionExtensions`:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -29,7 +24,7 @@ object GraftFunctions {
       s"$fn: $arg must be an INT literal, got $other")
   }
 
-  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "vec_dot" -> (es => DotProduct(es(0), es(1))),
     "vec_sqdist" -> (es => SquaredDistance(es(0), es(1))),
     "vec_dist" -> (es => Sqrt(SquaredDistance(es(0), es(1)))),
@@ -50,22 +45,5 @@ object GraftFunctions {
     // typed-Aggregator extension point (partial-aggregating UDAF)
     spark.udf.register("vec_mean",
       org.apache.spark.sql.functions.udaf(VectorMeanAgg))
-  }
-}
-
-/** `spark.sql.extensions` entry point injecting the vector functions,
-  * the HOF→kernel rewrite rule, and the [[graft.plans.TopKPerGroup]]
-  * planner strategy (Relational.topkPerGroup also self-registers the
-  * strategy via `spark.experimental` for extension-less sessions). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder) =>
-      e.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.plans.VectorExpressions", name),
-        builder))
-    }
-    e.injectOptimizerRule(_ => graft.plans.NativeKernelRule)
-    e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

@@ -186,8 +186,9 @@ object Relational {
     * ordering logic (window, orderBy) the caller runs next.
     *
     * `orderCols` should be a total order (include a unique tiebreaker)
-    * when downstream semantics are rank-sensitive. The strategy is
-    * self-registering via `spark.experimental.extraStrategies`. */
+    * when downstream semantics are rank-sensitive. This call is the one
+    * place [[graft.plans.TopKStrategy]] is installed: it adds itself to
+    * the session's `spark.experimental.extraStrategies` once. */
   def topkPerGroup(df: DataFrame, groupCols: Seq[Column],
       orderCols: Seq[Column], k: Int): DataFrame = {
     import org.apache.spark.sql.graft.PlanBridge

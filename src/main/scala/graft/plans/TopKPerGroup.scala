@@ -25,9 +25,9 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * partition's per-group top-k (ranks only shrink when restricted to a
   * subset), so the superset always survives phase 1.
   *
-  * Exposed as [[graft.operators.Relational.topkPerGroup]]; planned via
-  * [[TopKStrategy]] (`spark.experimental.extraStrategies` or
-  * `GraftExtensions`).
+  * Exposed as [[graft.operators.Relational.topkPerGroup]], which installs
+  * the planner strategy [[TopKStrategy]] in its session's
+  * `spark.experimental.extraStrategies` on first use.
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],

@@ -24,9 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 abstract class VectorFoldExpression extends BinaryExpression {
   override def dataType: DataType = DoubleType
 
-  // NULL semantics match the HOF fold exactly (so [[NativeKernelRule]]'s
-  // rewrite is provably semantics-preserving on ANY input, not just the
-  // engine's non-null fixed-dimension vectors): ragged lengths → NULL
+  // NULL semantics match the HOF fold exactly (so a kernel call and the
+  // `aggregate(zip_with …)` form, and the DuckDB oracle replaying it,
+  // agree on ANY input, not just the engine's non-null fixed-dimension
+  // vectors): ragged lengths → NULL
   // (zip_with pads the short side with null) and any NULL element → NULL
   // (null poisons the arithmetic and the running sum). Hence nullable
   // even over non-null inputs — raggedness is a runtime property.

@@ -69,17 +69,10 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(inDir, outDir, factorS) = args
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      // machine-independence: Tables.events casts NTZ ts in the session
-      // time zone — an unpinned zone would shift every derived event
-      // instant by the local offset (ADVICE r8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 cores unless SPARK_GRAFT_CPUS says otherwise: scale_probe.sh
+    // derives sf1/sf10 without setting it, and the output layout must
+    // not move with the host
+    val spark = graft.Session(defaultCpus = 32)
     scaleUp(spark, inDir, outDir, factor)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gate for the FIXTURES.md negative-// rule: no oracle may feed a
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on floor-vs-truncate for negatives — the round-10 driver-oracle
   * breach). Every justified syntactic subtraction is declared in
   * [[OracleAudit.allow]] with a proof; anything new fails here. */
-class OracleAuditSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class OracleAuditSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-hygiene GATE: every query's executed (AQE-final) plan must be
   * free of CartesianProduct and BroadcastNestedLoopJoin — the two
   * operators that turn into O(N·M) scans at cluster scale — unless the
   * query DECLARES the shape below with a justification. Promoted from
-  * the manual `runMain graft.PlanAudit` sweep so a refactor that
-  * degrades a join to NLJ fails `sbt test`, not a human's memory. */
-class PlanGateSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  * the manual `runMain graft.PlanDump <outDir> <tag>` summary sweep so a
+  * refactor that degrades a join to NLJ fails `sbt test`, not a human's
+  * memory. */
+class PlanGateSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 
@@ -63,8 +56,8 @@ class PlanGateSpec extends AnyFunSuite {
     "rag_dense" -> "passage retrieval scoring: broadcast-query-batch scan (5 passage vectors) against the passage corpus")
 
   private def nljCount(p: String): Int =
-    PlanAudit.opCount(p, "BroadcastNestedLoopJoin") +
-      PlanAudit.opCount(p, "CartesianProduct")
+    PlanDump.opCount(p, "BroadcastNestedLoopJoin") +
+      PlanDump.opCount(p, "CartesianProduct")
 
   test("no undeclared query or scratch build plans a cartesian/NLJ; every declaration is live") {
     // rebuild every scratch relation inside THIS sweep so the build
@@ -74,13 +67,13 @@ class PlanGateSpec extends AnyFunSuite {
     val liveQueries = Set.newBuilder[String]
     val liveBuilds = Set.newBuilder[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = nljCount(PlanAudit.finalPlanString(fn(spark, sf).df))
+      val n = nljCount(PlanDump.finalPlanString(fn(spark, sf).df))
       if (n > 0) {
         if (declared.contains(name)) liveQueries += name
         else offenders += s"$name (nlj+cart=$n)"
       }
       graft.sources.Scratch.drainBuilds().foreach { case (key, df) =>
-        val bn = nljCount(PlanAudit.finalPlanString(df))
+        val bn = nljCount(PlanDump.finalPlanString(df))
         val prefix = key.takeWhile(_ != ':')
         if (bn > 0) {
           if (declaredBuilds.contains(prefix)) liveBuilds += prefix

@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Smoke: every registered query runs and returns rows on sf0.001, and
   * every oracle has exactly one source, a registered query (driver
   * contract). */
-class SparkEntrySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class SparkEntrySpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,16 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL-registered native vector kernels. */
-class GraftFunctionsSpec extends AnyFunSuite {
+import graft.LocalSpark
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** SQL-registered native vector kernels. */
+class GraftFunctionsSpec extends AnyFunSuite with LocalSpark {
 
   test("vec_dot / vec_sqdist / vec_dist usable from spark.sql") {
     GraftFunctions.register(spark)
@@ -139,5 +134,32 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val hof = e.select(sum(aggregate(zip_with(col("v"), col("v"),
       (x, y) => (x - y) * (x - y)), lit(0.0), (a, x) => a + x))).head().getDouble(0)
     assert(native === hof)
+  }
+
+  test("vec_sqdist keeps HOF NULLs on null/ragged rows") {
+    // a kernel call must equal the aggregate(zip_with …) fold it stands
+    // for, which the DuckDB oracles replay, on ANY input: a NULL element
+    // and a ragged pair both give NULL. The rows stay parquet-backed so
+    // nothing constant-folds before the kernel runs.
+    GraftFunctions.register(spark)
+    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS v")
+      .selectExpr("vec_id",
+        """CASE WHEN vec_id % 3 = 0
+          |       THEN transform(v, (x, i) -> IF(i = 0, CAST(NULL AS DOUBLE), x))
+          |     WHEN vec_id % 3 = 1 THEN slice(v, 1, size(v) - 1)
+          |     ELSE v END AS a""".stripMargin,
+        "v AS b")
+      .createOrReplaceTempView("ragged_vecs")
+    def bits(expr: String): Map[Long, Option[Long]] =
+      spark.sql(s"SELECT vec_id, $expr FROM ragged_vecs").collect().map(r =>
+        r.getLong(0) -> Option.when(!r.isNullAt(1))(
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)))).toMap
+    val native = bits("vec_sqdist(a, b)")
+    assert(native ==
+      bits("aggregate(zip_with(a, b, (x, y) -> (x - y) * (x - y)), 0.0D, (s, x) -> s + x)"))
+    // every third row has a null element, the next third is ragged
+    assert(native.collect { case (id, None) => id % 3 }.toSet == Set(0L, 1L))
+    assert(native.exists { case (id, v) => id % 3 == 2 && v.isDefined })
   }
 }

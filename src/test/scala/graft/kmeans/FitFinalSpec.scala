@@ -1,11 +1,11 @@
 package graft.kmeans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.VectorOps._
 import graft.sources.Tables
+import graft.LocalSpark
 
 /** The converged fit really is converged: replaying one Lloyd round from
   * the reported centroids must move them by less than the threshold.
@@ -13,14 +13,7 @@ import graft.sources.Tables
   * Dataset reused across iterations had its shuffle-map stage skipped by
   * the scheduler, so every "fit" was one real round reporting delta 0 —
   * and the invariant a reused-stage regression would break again. */
-class FitFinalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class FitFinalSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

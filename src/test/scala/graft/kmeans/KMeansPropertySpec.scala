@@ -1,9 +1,11 @@
 package graft.kmeans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Property-based invariants (SURVEY.md §5.3) checked against a plain
   * Scala brute-force model of the reference's kernels
@@ -11,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `main/worker/worker.go:271-304`). Deterministic seeded ScalaCheck
   * sampling (the scalatest-scalacheck bridge isn't on the offline
   * classpath). */
-class KMeansPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KMeansPropertySpec extends AnyFunSuite with LocalSpark {
 
   /** n deterministic samples from a generator. */
   def forAll[A](g: Gen[A], n: Int = 5)(f: A => Unit): Unit =

@@ -2,25 +2,19 @@ package graft.kmeans
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkJobs.jobsOf
 import graft.functions.VectorOps.nearestCidK
 import graft.sources.Tables
+import graft.LocalSpark
 
 /** Invariant tests for the evaluation-step queries over sf0.001 (the
   * exact values are pinned by the DuckDB oracle at sf0.01; these pin the
   * mathematical shape). */
-class KMeansStepsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class KMeansStepsSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

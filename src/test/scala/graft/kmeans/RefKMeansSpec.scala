@@ -9,20 +9,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkJobs.jobsOf
 import graft.functions.VectorOps
 import graft.sources.Tables
+import graft.LocalSpark
 
 /** Golden micro-fixture tests (FIXTURES.md §A) pinning reference semantics:
   * maximin seeding (`/root/reference/main/master/master.go:157-190`),
   * first-index tie-breaks (`main/worker/worker.go:271-285,297-301`),
   * Lloyd stop rule incl. both exit paths (`master.go:212-231`),
   * empty-cluster carry-over (`master.go:579-600`). */
-class RefKMeansSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class RefKMeansSpec extends AnyFunSuite with LocalSpark {
 
   def pts(rows: (Long, Seq[Double])*): DataFrame = {
     import spark.implicits._

@@ -2,19 +2,14 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** BPE trainer + greedy longest-match encode on a hand-computable
   * corpus (merge sequence and token ids derived by hand in the
   * comments). */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BpeSpec extends AnyFunSuite with LocalSpark {
 
   // Corpus: abab×3, abc×2, cd×1.
   //   pair counts: (a,b)=3·2+2=8, (b,a)=3, (b,c)=2, (c,d)=1 → merge (a,b)

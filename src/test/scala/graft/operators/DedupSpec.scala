@@ -2,19 +2,15 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.LocalSpark
+
 /** Unit tests for dedup operators on a synthetic mini documents table
   * (written as parquet so operators exercise the same source path). */
-class DedupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSpec extends AnyFunSuite with LocalSpark {
 
   /** Mini corpus: 0/1 identical, 2 near-dup of 0 (one word changed),
     * 3 unrelated, 4 too short for 3-grams. */

@@ -3,19 +3,13 @@ package graft.operators
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Unit tests for batch event analytics on a synthetic mini events
   * table (parquet-backed, same source path as production). */
-class EventsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class EventsSpec extends AnyFunSuite with LocalSpark {
 
   lazy val dir: String = {
     import spark.implicits._

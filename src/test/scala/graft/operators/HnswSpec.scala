@@ -2,19 +2,14 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Deterministic NSW graph ANN: exactness when the beam covers the
   * whole graph, determinism across runs, and end-to-end shape of the
   * sharded topK. */
-class HnswSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class HnswSpec extends AnyFunSuite with LocalSpark {
 
   private def vec(i: Int, d: Int = 8): Array[Double] = {
     val r = new scala.util.Random(1000 + i)

@@ -1,21 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
+import graft.LocalSpark
+
 /** Generic time-join operators vs brute-force references on randomized
   * (seeded) data — the scalable formulations must equal the obvious
   * O(n·m) definitions exactly. */
-class JoinsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class JoinsSpec extends AnyFunSuite with LocalSpark {
 
   private val rnd = new Random(42)
   private def mkLeft(n: Int) =

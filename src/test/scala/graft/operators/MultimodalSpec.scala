@@ -1,15 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class MultimodalSpec extends AnyFunSuite {
+import graft.LocalSpark
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultimodalSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

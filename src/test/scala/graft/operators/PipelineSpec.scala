@@ -2,20 +2,15 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Unit tests for the training-data pipeline operators on a synthetic
   * mini documents table (written as parquet so operators exercise the
   * same source path). */
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with LocalSpark {
 
   lazy val dir: String = {
     import spark.implicits._

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.LocalSpark
 import graft.kmeans.RefKMeans
 
 /** Retry-determinism chaos gate: at 100 TB, task retries and speculative
@@ -21,9 +22,10 @@ import graft.kmeans.RefKMeans
   * (attempt 1) recomputes the partition's whole narrow chain, including
   * whatever pipeline stage the wrapper is fused into. Needs a context
   * that allows task retries: local mode defaults to maxFailures = 1
-  * (fail-fast), so this suite owns a dedicated `local[4,4]` session and
-  * stops it afterwards (suites run sequentially in the forked test JVM;
-  * the next suite's getOrCreate builds a fresh default session).
+  * (fail-fast), so this suite starts LocalSpark's session at master
+  * `local[4,4]` and stops it afterwards (suites run sequentially in the
+  * forked test JVM; the next suite's getOrCreate builds a fresh
+  * `local[4]` one).
   *
   * Covered stages: a full iterative fit under both of its schedules (the
   * one-task fit of a one-partition input; block decoding + persistence +
@@ -47,13 +49,7 @@ class RetryChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
     // suite needs task retries, which are fixed at context creation
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .foreach(_.stop())
-    SparkSession.builder()
-      .master("local[4,4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    LocalSpark.builder.master("local[4,4]").getOrCreate()
   }
 
   override def afterAll(): Unit = {

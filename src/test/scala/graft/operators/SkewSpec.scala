@@ -1,17 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Salted join: identical results to the plain equi-join, spread shuffle. */
-class SkewSpec extends AnyFunSuite {
+import graft.LocalSpark
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+/** Salted join: identical results to the plain equi-join, spread shuffle. */
+class SkewSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Tie-determinism gate for every top-k finisher (VERDICT r12 task 7):
   * the ANN finishers ([[Similarity]].rankTopK / rankRag), the samplers
@@ -16,13 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * properties drive the shared finisher composition over randomized
   * heavy-duplicate scores, in both sort directions, across partition
   * layouts, against a driver-side reference sort. */
-class TieDeterminismSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TieDeterminismSpec extends AnyFunSuite with LocalSpark {
 
   /** The consumer composition every per-group finisher uses: phase-1
     * bounded-heap prune, then the exact rank window, then the k cut. */

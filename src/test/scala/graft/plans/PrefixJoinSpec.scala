@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -9,17 +8,12 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup.{JacDen, JacNum}
+import graft.LocalSpark
 
 /** The prefix-join kernels against their definitions: the merge overlap
   * against Spark's `array_intersect`, the ppm against integer division,
   * and the pair expansion at the exact edges of its bounds. */
-class PrefixJoinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PrefixJoinSpec extends AnyFunSuite with LocalSpark {
 
   private def arr(xs: Seq[Long]) = new GenericArrayData(xs.map(x => x: Any).toArray)
 

@@ -1,19 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
+import graft.LocalSpark
 
-class TopKPerGroupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TopKPerGroupSpec extends AnyFunSuite with LocalSpark {
 
   /** Deterministic pseudo-random rows over a handful of groups, spread
     * over several input partitions. */

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** The bench's cold/warm provenance device (VERDICT r15 task 1): the
   * probe must tag builds vs hits correctly through the real
@@ -11,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * artifact). Suites can run concurrently in the forked test JVM, so
   * every drain below filters to this spec's own key — other suites'
   * cache traffic during the enabled window is not under test. */
-class CacheProbeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CacheProbeSpec extends AnyFunSuite with LocalSpark {
 
   private val K = "cacheprobe-spec-key"
   private def mine(acc: Seq[CacheProbe.Access]) = acc.filter(_.key.contains(K))

@@ -1,8 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Fixture-drift gate: the driver regenerates `/root/testdata` between
   * rounds and has already changed column encodings once (events.ts went
@@ -15,15 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Timestamp columns are compared modulo LTZ/NTZ: with the session time
   * zone pinned to UTC (all entry points do), the two read identically to
   * DuckDB's naive timestamps, so either encoding honors the contract. */
-class FixtureSchemaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class FixtureSchemaSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
 

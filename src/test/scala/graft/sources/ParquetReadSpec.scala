@@ -9,27 +9,20 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkJobs.jobsOf
+import graft.LocalSpark
 
 /** [[Tables.parquet]]: the schema resolved from one footer on the driver
   * is the one Spark's inference job would return, opening a table or
   * reading a scratch dir back starts no Spark job, and every case the
   * driver-side read does not cover reaches Spark's own inference and
   * errors unchanged. */
-class ParquetReadSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+class ParquetReadSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"

@@ -2,23 +2,15 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kmeans.RefKMeans
+import graft.LocalSpark
 
 /** Reference ingest/export surface: headerless-CSV points (O1/O2), the
   * per-cluster sink (O19), catalog listing (O3). */
-class SourcesSinksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      Files.createTempDirectory("graft_wh").toString)
-    .getOrCreate()
+class SourcesSinksSpec extends AnyFunSuite with LocalSpark {
 
   test("csvPoints parses headerless numeric CSV with global row ids (O1/O2)") {
     val dir = Files.createTempDirectory("graft_csv").toString
@@ -121,8 +113,9 @@ class SourcesSinksSpec extends AnyFunSuite {
       .select("o_orderkey", "o_custkey", "o_totalprice")
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_quantity")
-    // the shared test session may use any warehouse dir — clear both the
-    // catalog entries and any orphaned managed-table locations
+    // the warehouse is LocalSpark's JVM-wide temp dir, shared by every
+    // context this test JVM creates: clear both the catalog entries and
+    // any managed-table locations an earlier context left without them
     val wh = java.net.URI.create(
       spark.conf.get("spark.sql.warehouse.dir")).getPath
     Seq("orders_bkt", "lineitem_bkt").foreach { t =>

@@ -2,25 +2,17 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Events
+import graft.LocalSpark
 
 /** Streaming operators vs their batch twins, driven through a real file
   * source: the sf0.001 events file is batch 1; two far-future sentinel
   * files advance the watermark so append-mode windows finalize and
   * event-time timeouts flush open sessions. */
-class EventStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class EventStreamSpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
   val SENTINEL_USER = 999999L

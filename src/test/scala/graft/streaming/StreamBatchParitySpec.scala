@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.LocalSpark
 
 /** Streaming = batch PARITY GATE: every streaming twin, driven through a
   * real micro-batched file source, must reproduce the output of its
@@ -23,15 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * queries' own `round(_, 6)` — the same convention that makes the batch
   * results hash-stable against DuckDB.
   */
-class StreamBatchParitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+class StreamBatchParitySpec extends AnyFunSuite with LocalSpark {
 
   val sf = "/root/testdata/sf0.001"
   val SENTINEL_USER = 999999L
