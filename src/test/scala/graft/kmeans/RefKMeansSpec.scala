@@ -345,9 +345,135 @@ class RefKMeansSpec extends AnyFunSuite with LocalSpark {
     val p4 = spark.createDataFrame(p1.collect().toSeq.asJava, p1.schema)
     assert(p4.queryExecution.toRdd.getNumPartitions == 4)
     val (r4, jobs4) = jobsOf(spark)(RefKMeans.fit(p4, cfg))
-    assert(jobs4 <= 1 + (cfg.k - 1) + r4.iterations,
+    // the first pick, one candidates round that certifies the other
+    // k − 1 = 3 picks, then one job per Lloyd round
+    assert(jobs4 == 2 + r4.iterations,
       s"4-partition fit ran $jobs4 jobs for ${r4.iterations} Lloyd rounds")
     assert(pin(r4) == pin(r1))
+  }
+
+  /** `rows` as a `parts`-partition table, split in order. */
+  private def sliced(rows: Seq[(Long, Array[Double])], parts: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, x) => Row(id, x.toSeq) }, parts), schema)
+  }
+
+  /** Brute-force seeding over `p`'s collected partitions: the first pick
+    * is the first row (partition, then scan order) of least
+    * (`firstKey`, id); each later pick is the row of greatest
+    * `key(id, squared min distance to the picks, picks so far)`, ties to
+    * the lowest id, then the earliest partition, then scan order. */
+  private def bruteSeeds(p: DataFrame, k: Int, firstKey: Long => Long)(
+      key: (Long, Double, Int) => Double): Seq[Seq[Double]] = {
+    val rows = p.rdd.glom().collect().toSeq.flatMap(_.map(r =>
+      (r.getLong(0), r.getSeq[Double](1).toArray)))
+    def sqDist(x: Array[Double], c: Array[Double]): Double =
+      x.indices.foldLeft(0.0) { (s, i) => s + (x(i) - c(i)) * (x(i) - c(i)) }
+    val cents = scala.collection.mutable.ArrayBuffer(rows.minBy { case (id, _) =>
+      (firstKey(id), id) }._2)
+    while (cents.length < k) {
+      var best: (Long, Array[Double]) = null
+      var bestKey = 0.0
+      rows.foreach { case (id, x) =>
+        val kk = key(id, cents.map(sqDist(x, _)).reduce((a, b) => math.min(a, b)), cents.length)
+        if (best == null || kk > bestKey || kk == bestKey && id < best._1) {
+          best = (id, x); bestKey = kk
+        }
+      }
+      cents += best._2
+    }
+    cents.map(_.toSeq).toSeq
+  }
+
+  test("certified maximin picks equal a brute-force maximin at 1, 4 and 7 partitions") {
+    val rnd = new scala.util.Random(11)
+    val gauss = (0 until 300).map(i => (i.toLong, Array.fill(3)(rnd.nextGaussian())))
+    // a 6×6 lattice, many rows per point: equal keys everywhere
+    val lattice = (0 until 200).map(i => Array((i % 6).toDouble, (i / 6 % 6).toDouble))
+    val ties = lattice.zipWithIndex.map { case (x, i) => ((i * 37 % 200).toLong, x) }
+    val dupIds = lattice.zipWithIndex.map { case (x, i) => ((i % 7).toLong, x) }
+    val small = Seq(3L -> Array(0.0, 0.0), 1L -> Array(0.0, 1.0), 2L -> Array(5.0, 0.0),
+      1L -> Array(4.0, 4.0), 9L -> Array(-2.0, 1.0))
+    val same = (0 until 10).map(i => ((9 - i).toLong, Array(1.0, 1.0)))
+    // three points, each +∞ from every other point
+    val far = gauss.take(100).map { case (id, x) => (id, x.take(2)) } ++
+      Seq(500L -> Array(1e300, 0.0), 501L -> Array(0.0, 1e300), 502L -> Array(-1e300, 0.0))
+    val cases: Seq[(String, Seq[(Long, Array[Double])], RefKMeans.Config)] = Seq(
+      ("gaussian k=16", gauss, RefKMeans.Config(k = 16, firstId = Some(5L))),
+      ("gaussian k=80", gauss, RefKMeans.Config(k = 80, firstId = Some(5L))),
+      ("gaussian hashed first pick", gauss, RefKMeans.Config(k = 12, seed = 7L)),
+      ("equal keys", ties, RefKMeans.Config(k = 12, firstId = Some(74L))),
+      ("duplicate ids", dupIds, RefKMeans.Config(k = 40, firstId = Some(3L))),
+      ("k > n", small, RefKMeans.Config(k = 8, firstId = Some(1L))),
+      ("all duplicates", same, RefKMeans.Config(k = 4, seed = 3L)),
+      ("+inf distances", far, RefKMeans.Config(k = 6, firstId = Some(0L))))
+    for ((name, rows, cfg) <- cases; parts <- Seq(1, 4, 7)) {
+      val p = sliced(rows, parts)
+      val firstKey: Long => Long = id => cfg.firstId match {
+        case Some(f) => if (id == f) 0L else 1L
+        case None => RefKMeans.idHash(id, cfg.seed)
+      }
+      val maximin = bruteSeeds(p, cfg.k, firstKey)((_, d2, _) => math.sqrt(d2))
+      assert(RefKMeans.seed(p, cfg).map(_.toSeq).toSeq == maximin, s"$name x$parts: seed")
+      val race = bruteSeeds(p, cfg.k, firstKey)((id, d2, round) =>
+        RefKMeans.raceKey(d2, id, cfg.seed, round))
+      assert(RefKMeans.seedPP(p, cfg).map(_.toSeq).toSeq == race, s"$name x$parts: seedPP")
+    }
+  }
+
+  test("a candidate that only ties the best other row is not certified, and a +inf rest " +
+      "certifies nothing") {
+    val r = RefKMeans.Farthest(Array(Array(0.0, 0.0)))
+    def block(rows: (Long, Array[Double])*) =
+      new RefKMeans.Block(rows.map(_._1).toArray, rows.map(_._2).toArray)
+    // one candidate per block: id 7 (key 4) ties rest = 4, the key of id 1,
+    // which is no candidate and goes first on the lower id
+    val a = RefKMeans.cands(block(9L -> Array(10.0, 0.0), 1L -> Array(0.0, 4.0)), r, 1)
+    val b = RefKMeans.cands(block(7L -> Array(0.0, -4.0)), r, 1)
+    assert(a.ids.toSeq == Seq(9L) && a.rest == 4.0 && b.rest == Double.NegativeInfinity)
+    assert(RefKMeans.picks(Seq(a, b), r, 3).map(_.toSeq) == Seq(Seq(10.0, 0.0)))
+    val far = block(0L -> Array(0.0, 0.0), 1L -> Array(1e300, 0.0), 2L -> Array(-1e300, 0.0),
+      3L -> Array(0.0, 1.0))
+    val one = RefKMeans.cands(far, r, 1)
+    assert(one.ids.toSeq == Seq(1L) && one.rest == Double.PositiveInfinity)
+    assert(RefKMeans.picks(Seq(one), r, 3).map(_.toSeq) == Seq(Seq(1e300, 0.0)))
+    // with both far rows as candidates the second is +∞ from the first
+    // pick too, so it certifies against rest = 1; the near row never does
+    val two = RefKMeans.cands(far, r, 2)
+    assert(two.ids.toSeq == Seq(1L, 2L) && two.rest == 1.0)
+    assert(RefKMeans.picks(Seq(two), r, 3).map(_.toSeq) ==
+      Seq(Seq(1e300, 0.0), Seq(-1e300, 0.0)))
+  }
+
+  test("maximin seeding of one far outlier per blob over 4 partitions runs at most 3 jobs") {
+    // the benchmark's large-fit shape at small n: 8 blobs at 10·e_i in
+    // d = 8 (σ = 2.2), and each blob's outlier at 3× its centre
+    val rnd = new scala.util.Random(3)
+    val (k, d) = (8, 8)
+    def centre(b: Int, scale: Double) = Array.tabulate(d)(j => if (j == b) scale else 0.0)
+    val rows = (0 until 400).map { i =>
+      (i.toLong, centre(i % k, 10.0).map(_ + 2.2 * rnd.nextGaussian()))
+    } ++ (0 until k).map(b => ((400 + b).toLong, centre(b, 30.0)))
+    val p = sliced(rows, 4)
+    val cfg = RefKMeans.Config(k = k, firstId = Some(0L))
+    val (seeds, jobs) = jobsOf(spark)(RefKMeans.seed(p, cfg))
+    assert(jobs <= 3, s"seeding ran $jobs jobs")
+    assert(seeds.map(_.toSeq).toSeq ==
+      bruteSeeds(p, k, id => if (id == 0L) 0L else 1L)((_, d2, _) => math.sqrt(d2)))
+  }
+
+  test("kmeans_fit_lineitem and ts_cluster at sf0.001 run one job once their inputs are built") {
+    // both read one-partition inputs, so the whole fit runs in one task
+    for ((name, want) <- Seq("kmeans_fit_lineitem" -> 1, "ts_cluster" -> 1)) {
+      val q = graft.SparkEntry.queries(name)
+      q(spark, sf001).df.collect() // builds any scratch table the query reads
+      val (_, jobs) = jobsOf(spark)(q(spark, sf001).df.collect())
+      assert(jobs == want, s"$name ran $jobs jobs")
+    }
   }
 
   test("fitSizes equals the assign + groupBy table: converged, cap exit, k > n, 1 and 4 partitions") {

@@ -300,7 +300,7 @@ class TextSimilaritySpec extends AnyFunSuite with LocalSpark {
     }
     val mmrSel = got.groupBy(_._1).map { case (q, rs) =>
       q -> rs.sortBy(_._2).map(r => (r._3, r._4)) }
-    assert(pure.exists { case (q, p) => mmrSel(q) != p })
+    assert(pure.exists { case (q, p) => mmrSel(q) != p.toSeq })
   }
 
   test("bm25 + rrf hybrid: integer scores match the hand-computed formula") {
