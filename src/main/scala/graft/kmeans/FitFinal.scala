@@ -116,12 +116,14 @@ object FitFinal {
   private def cents(res: RefKMeans.Result): Array[Array[Double]] =
     res.centroids.sortBy(_._1).map(_._2)
 
+  /** The variant's points in their read layout
+    * ([[RefKMeans.followLayout]]). */
   private def pointsDF(spark: SparkSession, sfDir: String, f: Frozen): DataFrame =
-    f.space match {
+    RefKMeans.followLayout(f.space match {
       case "lineitem" => Tables.lineitemPointsStd(spark, sfDir)
       case "ts" => graft.operators.TimeSeries.roundedPoints(spark, sfDir)
       case _ => Tables.points(spark, sfDir)
-    }
+    })
 
   /** Final per-cluster summary from the frozen centroids: (cluster_id,
     * n, wcss[, converged]). One narrow argmin map + one k-row

@@ -18,7 +18,9 @@ import graft.sources.Tables
   *
   * Scale posture: every single step is a narrow projection or one
   * partial-aggregated shuffle of k×d rows — nothing materializes O(N)
-  * driver-side. Centroids travel as plan literals (the broadcast of
+  * driver-side. Over points read as one partition there is no shuffle
+  * at all: the points keep their layout ([[pts]]), so a step is one
+  * job. Centroids travel as plan literals (the broadcast of
   * `master.go:313-333`). The multi-round queries ([[fitSteps]],
   * [[fitTrajectory]], the trainers) run [[RefKMeans.lloyd]] on the
   * decoded point blocks instead: the points are decoded once, and only
@@ -33,13 +35,21 @@ object KMeansSteps {
     * k×d doubles driver-side — the same tiny payload the reference ships
     * per RPC round (`utils/structs.go:34-37`). */
   def centroids(spark: SparkSession, sfDir: String, k: Int = K): Seq[(Int, Array[Double])] =
-    Tables.points(spark, sfDir).filter(col("id") < k).orderBy("id")
+    centroidsOf(pts(spark, sfDir), k)
+
+  /** [[centroids]] of points already opened: a step query takes its
+    * centroids and its rows from one relation, so it opens the table and
+    * checks its layout once. */
+  private def centroidsOf(p: DataFrame, k: Int = K): Seq[(Int, Array[Double])] =
+    p.filter(col("id") < k).orderBy("id")
       .collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
       .toSeq
 
+  /** The points in their read layout ([[RefKMeans.followLayout]]): read
+    * as one partition, every k-row query over them is one stage. */
   private def pts(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.points(spark, sfDir)
+    RefKMeans.followLayout(Tables.points(spark, sfDir))
 
   /** Centroid coordinate arrays in cid order (cid == array position). */
   private def centArr(cs: Seq[(Int, Array[Double])]): Array[Array[Double]] =
@@ -48,8 +58,9 @@ object KMeansSteps {
   /** O7 — min distance of every point to the centroid set
     * (`main/worker/worker.go:232-245`). */
   def minDistances(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centArr(centroids(spark, sfDir))
-    pts(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centArr(centroidsOf(p))
+    p
       .select(col("id").as("vec_id"),
         round(minDistK(col("features"), cs), 6).as("min_dist"))
       .orderBy("vec_id")
@@ -61,8 +72,9 @@ object KMeansSteps {
     * per-partition top-1 then global top-1 — Spark's TakeOrderedAndProject
     * does the map-side combine the reference hand-rolls in `initCombine`. */
   def farthestPoint(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centArr(centroids(spark, sfDir))
-    pts(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centArr(centroidsOf(p))
+    p
       .select(col("id").as("vec_id"), minDistK(col("features"), cs).as("md"))
       .orderBy(desc("md"), asc("vec_id")).limit(1)
       .select(col("vec_id"), round(col("md"), 6).as("min_dist"))
@@ -71,8 +83,9 @@ object KMeansSteps {
   /** O11 — E-step assignment: nearest centroid per point
     * (`main/worker/worker.go:248-268,288-304`). Narrow map, no shuffle. */
   def assignment(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centArr(centroids(spark, sfDir))
-    pts(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centArr(centroidsOf(p))
+    p
       .select(col("id").as("vec_id"),
         nearestCidK(col("features"), cs).as("cluster_id"))
       .orderBy("vec_id")
@@ -94,8 +107,9 @@ object KMeansSteps {
     * result explodes to long format (cluster_id, dim, n, mean) for the
     * oracle compare. The shuffle carries k×(d+1) values, not N×d. */
   def recenterLong(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centroids(spark, sfDir)
-    recenterAggLong(pts(spark, sfDir).select(
+    val p = pts(spark, sfDir)
+    val cs = centroidsOf(p)
+    recenterAggLong(p.select(
       nearestCidK(col("features"), centArr(cs)).as("cluster_id"), col("features")),
       cs.head._2.length)
   }
@@ -118,9 +132,10 @@ object KMeansSteps {
     * literal centroids and the recentered ones
     * (`main/master/master.go:569-576`). k×d rows end-to-end. */
   def delta(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centroids(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centroidsOf(p)
     val d = cs.head._2.length
-    val assigned = pts(spark, sfDir).select(
+    val assigned = p.select(
       nearestCidK(col("features"), centArr(cs)).as("cluster_id"), col("features"))
     val aggs = count(lit(1)).as("n") +: (0 until d).map(i => sum(col("features").getItem(i)).as(s"s$i"))
     val newLong = assigned.groupBy("cluster_id")
@@ -155,8 +170,10 @@ object KMeansSteps {
     * per-block sums merge in partition order, bit-identical to
     * [[recenterLong]]'s hash aggregate. This query pins the round
     * semantics of [[RefKMeans.fit]]'s loop to the oracle. */
-  def fitSteps(spark: SparkSession, sfDir: String, iters: Int = 2): DataFrame =
-    fitStepsOf(spark, pts(spark, sfDir), centroids(spark, sfDir), iters)
+  def fitSteps(spark: SparkSession, sfDir: String, iters: Int = 2): DataFrame = {
+    val p = pts(spark, sfDir)
+    fitStepsOf(spark, p, centroidsOf(p), iters)
+  }
 
   /** [[fitSteps]] over an arbitrary (id, features) point set with
     * explicit seed centroids — the same rounded-fixpoint contract reused
@@ -189,8 +206,10 @@ object KMeansSteps {
     * .ivfTrainedTopK]]: the centroids after `iters` rounded Lloyd rounds,
     * frozen to (cid, coords) literals — SQL-replayable training, so the
     * whole train→bucket→probe→rerank pipeline is oracle-checkable. */
-  def trainedCentroids(spark: SparkSession, sfDir: String, iters: Int = 2): Seq[(Int, Array[Double])] =
-    trainedCentroidsOf(spark, pts(spark, sfDir), centroids(spark, sfDir), iters)
+  def trainedCentroids(spark: SparkSession, sfDir: String, iters: Int = 2): Seq[(Int, Array[Double])] = {
+    val p = pts(spark, sfDir)
+    trainedCentroidsOf(spark, p, centroidsOf(p), iters)
+  }
 
   /** [[trainedCentroids]] over an explicit (id, features) relation with
     * explicit seeds — the sampled-corpus ANN twin's trainer
@@ -250,12 +269,13 @@ object KMeansSteps {
     * BOTH engines, so no float divergence propagates across rounds. */
   def fitTrajectory(spark: SparkSession, sfDir: String,
       threshold: Double = 0.01, cap: Int = 60): Checked = {
-    val cs0 = centroids(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs0 = centroidsOf(p)
     val head =
       s"""WITH pts AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |cents0 AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS c
          |           FROM embeddings WHERE vec_id < ${cs0.length})""".stripMargin
-    trajectoryOf(spark, pts(spark, sfDir), literal(cs0), threshold, cap, scale = 6,
+    trajectoryOf(spark, p, literal(cs0), threshold, cap, scale = 6,
       requireConverge = true, "kmeans_fit_trajectory")(_ => head)
   }
 
@@ -385,9 +405,10 @@ object KMeansSteps {
     * per cluster. Distances square the sqrt'd kernel value so both
     * engines perform identical rounding steps. */
   def wcss(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centArr(centroids(spark, sfDir))
+    val p = pts(spark, sfDir)
+    val cs = centArr(centroidsOf(p))
     val md = minDistK(col("features"), cs)
-    pts(spark, sfDir)
+    p
       .select(nearestCidK(col("features"), cs).as("cluster_id"),
         (md * md).as("sq"))
       .groupBy(col("cluster_id").cast("long").as("cluster_id"))
@@ -402,11 +423,12 @@ object KMeansSteps {
     * metric the reference never computes but any fit evaluation needs.
     * Exact: distances fold sequentially, ties pick the lowest cid. */
   def silhouette(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centroids(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centroidsOf(p)
     val dists = array_sort(transform(centroidsLit(cs), c =>
       struct(dist(col("features"), c.getField("c")).as("d"),
         c.getField("cid").as("cid"))))
-    pts(spark, sfDir)
+    p
       .select(
         element_at(dists, 1).getField("cid").as("cluster_id"),
         element_at(dists, 1).getField("d").as("a"),
@@ -425,12 +447,13 @@ object KMeansSteps {
     * touches only the aggregate result). The model-selection curve the
     * reference's fixed-k pipeline never offers. */
   def elbow(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centArr(centroids(spark, sfDir))
+    val p = pts(spark, sfDir)
+    val cs = centArr(centroidsOf(p))
     val sums = (1 to K).map { k =>
       val md = minDistK(col("features"), cs.take(k))
       sum(md * md).as(s"w$k")
     }
-    val row = pts(spark, sfDir).agg(sums.head, sums.tail: _*)
+    val row = p.agg(sums.head, sums.tail: _*)
     val items = array((1 to K).map(k =>
       struct(lit(k.toLong).as("k"), round(col(s"w$k"), 6).as("wcss"))): _*)
     row.select(explode(items).as("p")).select("p.*").orderBy("k")
@@ -443,9 +466,10 @@ object KMeansSteps {
     * everything after the aggregate is k² tiny. Complements
     * [[silhouette]]/[[wcss]] as the third standard fit-quality metric. */
   def daviesBouldin(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centroids(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centroidsOf(p)
     val arr = centArr(cs)
-    val s = pts(spark, sfDir)
+    val s = p
       .select(nearestCidK(col("features"), arr).cast("long").as("cid"),
         minDistK(col("features"), arr).as("d"))
       .groupBy("cid").agg(avg("d").as("s"))
@@ -480,9 +504,10 @@ object KMeansSteps {
     * same way under vec_id = −1 — the exact data series the reference
     * renders; rendering itself stays client-side. */
   def scatterData(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = centroids(spark, sfDir)
+    val p = pts(spark, sfDir)
+    val cs = centroidsOf(p)
     val d = 64
-    val ptsXY = pts(spark, sfDir)
+    val ptsXY = p
       .select(nearestCidK(col("features"), centArr(cs)).cast("long").as("cluster_id"),
         col("id").as("vec_id"), reshape(col("features"), d, 2).as("r"))
       .select(col("cluster_id"), col("vec_id"),

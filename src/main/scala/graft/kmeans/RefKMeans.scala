@@ -9,6 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.execution.{ExecSubqueryExpression, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
@@ -60,6 +64,13 @@ import graft.plans.CentroidKernel
   *    k-row (or up to [[Batch]]-row) result collected — MLlib KMeans's
   *    pattern. The centroids ride in the task closure (the broadcast of
   *    `master.go:313-333`).
+  * One function decides which ([[onePartition]]), and it decides the
+  * membership too: over one-partition points, [[assign]] and the step,
+  * metric and end-state queries of [[KMeansSteps]] and [[FitFinal]]
+  * declare that partition to the planner ([[followLayout]]), so the size
+  * summary's `groupBy` and `orderBy` plan no exchange and run as one job.
+  * Several partitions keep Spark's plan: the summary's hash and range
+  * shuffles, four jobs.
   * Both schedules call the same round kernels, merge code and stop rule,
   * so they return identical [[Result]]s on the same blocks. Nothing O(N)
   * reaches the driver, and membership is materialized once, after the
@@ -352,17 +363,20 @@ object RefKMeans {
       mergePartials(blocks.map(RefKMeans.partial(_, cents)).collect().toSeq, cents)
   }
 
-  /** The points decoded into one [[Block]] per partition (lazy: decoding
-    * runs in the first job that reads them). */
-  private[kmeans] def blocksOf(points: DataFrame): RDD[Block] = {
+  /** The (id, features) columns of `points`, checked. */
+  private def columnsOf(points: DataFrame): DataFrame = {
     val schema = points.schema
     require(schema("id").dataType == LongType && (schema("features").dataType match {
       case ArrayType(DoubleType, _) => true
       case _ => false
     }), s"RefKMeans: points must be (id LONG, features ARRAY<DOUBLE>), got ${schema.simpleString}")
-    points.select("id", "features").queryExecution.toRdd
-      .mapPartitions(rows => Iterator(decode(rows)))
+    points.select("id", "features")
   }
+
+  /** (id, features) rows decoded into one [[Block]] per partition (lazy:
+    * decoding runs in the first job that reads them). */
+  private[kmeans] def blocksOf(cols: DataFrame): RDD[Block] =
+    cols.queryExecution.toRdd.mapPartitions(rows => Iterator(decode(rows)))
 
   private def decode(rows: Iterator[InternalRow]): Block = {
     val ids = Array.newBuilder[Long]
@@ -406,10 +420,36 @@ object RefKMeans {
         throw e.getCause
     }
 
-  /** [[schedule]] with the scheduler the input layout decides. */
+  /** Whether `df` is read as one partition, decided without running a
+    * Spark job. A plan runs jobs to build its RDD when it holds an
+    * exchange (its AQE stages), a subquery, or a cache not yet built from
+    * such a plan, so such a plan answers false unexecuted. Any other plan
+    * builds its RDD on the driver, and that RDD's partition count
+    * answers. */
+  private[graft] def onePartition(df: DataFrame): Boolean = {
+    def runsJobs(p: SparkPlan): Boolean = p.exists {
+      case _: Exchange => true
+      case a: AdaptiveSparkPlanExec => runsJobs(a.initialPlan)
+      case c: InMemoryTableScanExec =>
+        !c.relation.cacheBuilder.isCachedColumnBuffersLoaded && runsJobs(c.relation.cachedPlan)
+      case q => q.expressions.exists(ExecSubqueryExpression.hasSubquery)
+    }
+    val qe = df.queryExecution
+    !runsJobs(qe.executedPlan) && qe.toRdd.getNumPartitions == 1
+  }
+
+  /** `df`, declared to the planner as one partition (`SinglePartition`)
+    * when it is read as one ([[onePartition]]): a `coalesce(1)` over that
+    * partition moves no row and keeps its order, and the `groupBy`,
+    * `orderBy` and window operators above it plan no exchange. */
+  private[graft] def followLayout(df: DataFrame): DataFrame =
+    if (onePartition(df)) df.coalesce(1) else df
+
+  /** [[schedule]] with the scheduler the input layout decides. The
+    * decision reads the RDD the blocks decode, so it builds none. */
   private[graft] def run[T: ClassTag](points: DataFrame)(body: Rounds => T): T = {
-    val blocks = blocksOf(points)
-    schedule(blocks, oneTask = blocks.getNumPartitions == 1)(body)
+    val cols = columnsOf(points)
+    schedule(blocksOf(cols), oneTask = onePartition(cols))(body)
   }
 
   /** Maximin (`pp` false) or D² (`pp` true) seeding over `rounds`: the
@@ -531,9 +571,12 @@ object RefKMeans {
     run(points)(fitOn(_, cfg))
 
   /** Final membership — computed ONCE with the frozen centroids (drops the
-    * reference's every-iteration member materialization, SURVEY.md §4). */
+    * reference's every-iteration member materialization, SURVEY.md §4).
+    * It follows the input layout ([[followLayout]]): over one-partition
+    * points, a size summary (`groupBy`, `orderBy`, `collect`) is one
+    * Spark job. */
   def assign(points: DataFrame, centroids: Array[(Int, Array[Double])]): DataFrame =
-    points.select(col("id"),
+    followLayout(points).select(col("id"),
       nearestCidK(col("features"), centroids.sortBy(_._1).map(_._2)).as("cluster_id"))
 
   /** Fit + summarize: (cluster_id, n) for every non-empty cluster, in

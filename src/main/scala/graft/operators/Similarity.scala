@@ -54,6 +54,18 @@ object Similarity {
     }
   }
 
+  /** [[points]], persisted (MEMORY_AND_DISK) unless it already is: the
+    * SQ, PQ and IVF-PQ builds each scan it several times, and in one
+    * recall pass they read the same relation, which a second `persist`
+    * would only ask the cache manager to cache again. The caller
+    * releases it ([[sqTopK]]'s cache contract). */
+  private def persistedPoints(spark: SparkSession, sfDir: String,
+      keepMod: Option[Long]): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val p = points(spark, sfDir, keepMod)
+    if (p.storageLevel != StorageLevel.NONE) p else p.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
   /** Exact brute-force cosine top-k: the tiny query set is broadcast
     * against the full corpus (one narrow pass over N), then per-query
     * top-k. At 1000 executors this is the right plan for small query
@@ -394,8 +406,7 @@ object Similarity {
 
   private[graft] def sqTopKBuild(spark: SparkSession, sfDir: String,
       nQueries: Int, k: Int, rerank: Int, keepMod: Option[Long]): DataFrame = {
-    val p = points(spark, sfDir, keepMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = persistedPoints(spark, sfDir, keepMod)
     val st = p.select(posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy("dim").agg(min("x").as("mn"), max("x").as("mx"))
       .collect().map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2)))
@@ -472,8 +483,7 @@ object Similarity {
 
   private[graft] def pqTopKBuild(spark: SparkSession, sfDir: String,
       nQueries: Int, k: Int, rerank: Int, keepMod: Option[Long]): DataFrame = {
-    val p = points(spark, sfDir, keepMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = persistedPoints(spark, sfDir, keepMod)
     val cbs = pqCodebooks(spark, sfDir, keepMod)
     def sub(c: Column, s: Int) = slice(c, s * PQ_DS + 1, PQ_DS)
     val enc = p.select(col("vec_id") +: (0 until PQ_M).map(s =>
@@ -535,8 +545,7 @@ object Similarity {
   private[graft] def ivfPqTopKBuild(spark: SparkSession, sfDir: String,
       nQueries: Int, k: Int, nprobe: Int, rerank: Int,
       keepMod: Option[Long]): DataFrame = {
-    val p = points(spark, sfDir, keepMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = persistedPoints(spark, sfDir, keepMod)
     val cs = trainedCentroidsFor(spark, sfDir, keepMod)
     val cbs = pqCodebooks(spark, sfDir, keepMod)
     def sub(c: Column, s: Int) = slice(c, s * PQ_DS + 1, PQ_DS)

@@ -121,4 +121,25 @@ class KMeansStepsSpec extends AnyFunSuite with LocalSpark {
     assert(rows.map(_._1).toSeq == (0L until KMeansSteps.K).toSeq)
     assert(rows.forall(_._2 > 0))
   }
+
+  /** Spark jobs per collect of the step, metric and end-state queries
+    * over the one-partition sf0.001 points, each measured after a first
+    * call built its inputs and memoized fits. */
+  private val jobLedger = Seq(
+    "kmeans_min_dist" -> 2, "kmeans_farthest" -> 2, "kmeans_assign" -> 2,
+    "kmeans_sizes" -> 2, "kmeans_recenter" -> 2, "kmeans_delta" -> 3,
+    "kmeans_reshape" -> 1, "kmeans_silhouette" -> 2, "kmeans_wcss" -> 2,
+    "kmeans_dbi" -> 5, "kmeans_elbow" -> 2, "kmeans_scatter_data" -> 5,
+    "kmeans_fit_final" -> 1, "kmeans_fit_assign" -> 1)
+
+  test("job ledger: the k-means step, metric and end-state queries over one partition") {
+    assert(Tables.points(spark, sf).queryExecution.toRdd.getNumPartitions == 1)
+    val runs = jobLedger.map { case (name, _) =>
+      val q = graft.SparkEntry.queries(name)
+      q(spark, sf).df.collect()
+      name -> (1 to 3).map(_ => jobsOf(spark)(q(spark, sf).df.collect())._2)
+    }
+    for (((name, want), (_, got)) <- jobLedger.zip(runs))
+      assert(got.forall(_ == want), s"$name ran $got jobs, pinned $want")
+  }
 }

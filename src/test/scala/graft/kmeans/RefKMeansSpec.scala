@@ -3,7 +3,12 @@ package graft.kmeans
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkJobs.jobsOf
@@ -520,5 +525,84 @@ class RefKMeansSpec extends AnyFunSuite with LocalSpark {
     val cfg = RefKMeans.Config(k = 4, firstId = Some(0L))
     val (_, jobs) = jobsOf(spark)(RefKMeans.fitSizes(spark, p, cfg).collect())
     assert(jobs == 1, s"fitSizes ran $jobs jobs")
+  }
+
+  /** The first `k` rows of `p` as centroids 0..k−1. */
+  private def firstCents(p: DataFrame, k: Int): Array[(Int, Array[Double])] =
+    p.filter(col("id") < k).orderBy("id").collect()
+      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1).toArray) }
+
+  /** The client's size summary over [[RefKMeans.assign]]. */
+  private def summary(m: DataFrame): Seq[(Int, Long)] =
+    m.groupBy("cluster_id").agg(count(lit(1)).as("n")).orderBy("cluster_id")
+      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+
+  test("the size summary over a one-partition membership is 1 job, over 4 partitions 4, " +
+      "with the rows of the plain membership") {
+    val p1 = Tables.points(spark, sf001)
+    val p4 = spark.createDataFrame(p1.collect().toSeq.asJava, p1.schema)
+    val cents = firstCents(p1, 8)
+    for ((p, want) <- Seq(p1 -> 1, p4 -> 4)) {
+      val plain = p.select(col("id"),
+        VectorOps.nearestCidK(col("features"), cents.map(_._2)).as("cluster_id"))
+      val (got, jobs) = jobsOf(spark)(summary(RefKMeans.assign(p, cents)))
+      assert(jobs == want, s"the summary ran $jobs jobs, want $want")
+      assert(got == summary(plain))
+      assert(RefKMeans.assign(p, cents).collect().toSeq == plain.collect().toSeq)
+    }
+  }
+
+  test("the layout check runs no Spark job: a table, a scratch read, a cache, an exchange") {
+    val li = Tables.lineitemPointsStd(spark, sf001) // built here, read back below
+    val p = Tables.points(spark, sf001)
+    val built = p.filter(col("id") >= 0L).persist(StorageLevel.MEMORY_AND_DISK)
+    val unbuilt = p.repartition(2).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      built.count()
+      val cases = Seq(
+        ("Tables.points", () => Tables.points(spark, sf001), true),
+        ("scratch read", () => Tables.lineitemPointsStd(spark, sf001), true),
+        ("coalesced", () => p.coalesce(1), true),
+        ("built cache", () => built, true),
+        ("local relation, 4 slices", () => spark.createDataFrame(
+          li.limit(8).collect().toSeq.asJava, li.schema), false),
+        ("hash exchange", () => p.repartition(4), false),
+        ("aggregate", () => p.groupBy("id").agg(first("features").as("features")), false),
+        ("cache of an exchange, unbuilt", () => unbuilt, false))
+      for ((name, df, want) <- cases) {
+        val d = df()
+        val (one, jobs) = jobsOf(spark)(RefKMeans.onePartition(d))
+        assert(jobs == 0, s"$name: the check ran $jobs jobs")
+        assert(one == want, name)
+      }
+    } finally {
+      built.unpersist(blocking = true)
+      unbuilt.unpersist(blocking = true)
+    }
+  }
+
+  test("a sort-merge join of a one-partition membership with a 4-partition relation " +
+      "hash-shuffles both sides into the shuffle partitions") {
+    val p1 = Tables.points(spark, sf001)
+    val m = RefKMeans.assign(p1, firstCents(p1, 4))
+    val other = spark.createDataFrame(p1.collect().toSeq.asJava, p1.schema)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val j = m.join(other, "id")
+      val plan = j.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case q => q
+      }
+      assert(plan.collect { case s: SortMergeJoinExec => s }.length == 1, plan.treeString)
+      val parts = plan.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      assert(parts.length == 2 && parts.forall {
+        case h: HashPartitioning => h.numPartitions == n
+        case _ => false
+      }, plan.treeString)
+      assert(j.count() == p1.count())
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
